@@ -115,52 +115,6 @@ _ADJUDICATE_FIRST = [
     "q175_cusum_changepoint",
 ]
 
-# Superseded round-2 rotation, kept for the audit trail.
-_ADJUDICATED_R2 = [
-    "q90_int8_quantization",
-    "q86_repetition_signals",
-    "q87_contamination_screen",
-    "q88_mixture_weights",
-    "q89_passage_overlap",
-    "q85_incremental_dedup",
-    "q47_winnowing_fingerprints",
-    "q49_bpe_token_segmentation",
-    "q72_frame_sample",
-    "q57_interval_join",
-    "q58_kmv_distinct",
-    "q59_grouped_agg_udaf",
-    "q73_dataset_split",
-    "q74_sequence_packing",
-    "q75_bm25_scoring",
-    "q78_zorder_curve",
-    "q79_rolling_median",
-    "q80_ohlc_resample",
-    "q81_series_gaps",
-    "q82_quality_fence_filter",
-    "q83_doc_chunking",
-    "q84_label_centroids",
-    "q76_stratified_cap",
-    "q77_pii_content_filter",
-    "q48_dedup_clusters",
-    "q56_ivf_ann",
-    "q51_embedding_near_dup",
-    "q52_bucketed_ann",
-    "q40_token_stats",
-    "q41_lang_id",
-    "q42_quality_score",
-    "q43_fingerprint_dedup",
-    "q53_knn_label_vote",
-    "q54_array_functions",
-    "q55_kmeans_clusters",
-    "q60_json_extract",
-    "q61_tumbling_window",
-    "q62_sliding_window",
-    "q63_sessionization",
-    "q63b_native_session_window",
-    "q64_ladder_explode",
-    "q65_order_book_wire",
-]
-
 
 def _ordered(names: list[str]) -> list[str]:
     first = [n for n in _ADJUDICATE_FIRST if n in names]

@@ -11,10 +11,14 @@ Spark-first re-expression:
 - Everything frame-bounded (SMA, Bollinger, stochastic, Ichimoku, Aroon,
   OBV, ROC) is a plain window expression — JVM-side, whole-stage
   codegen, one shuffle on (id) shared by every window.
-- The genuinely recursive smoothers (EMA, MACD signal, Wilder RSI) run
-  as a grouped-map pandas kernel (`groupBy("id").applyInPandas`) — the
-  idiomatic replacement for the reference's driver loop: same math, but
-  executed in parallel per symbol on executors via Arrow batches.
+- The genuinely recursive smoothers (EMA, MACD signal, Wilder RSI, and
+  the Holt, Heikin-Ashi, ADX, TRIX, Kalman, EWMA, Holt-Winters and
+  GARCH family) run through one runner, `_per_id` — the kernel law:
+  one grouped-map pandas kernel over id, one id-shuffle, each id's rows
+  sorted by dt, O(rows) per key. It is the idiomatic replacement for
+  the reference's driver loop: same math, executed in parallel per
+  symbol on executors via Arrow batches. Each indicator supplies only
+  its recursion as a ``step`` function.
 
 Seeding conventions (pinned, matching stock_indicators):
 - SMA_n / Bollinger / stochastic / Aroon / Ichimoku midpoints: defined
@@ -34,6 +38,9 @@ Arrow batches, never the whole table.
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window as W
@@ -198,14 +205,34 @@ def with_window_indicators(candles: DataFrame, round_to: int = 2) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Recursive smoothers — grouped-map pandas kernel
+# Recursive smoothers — grouped-map pandas kernels
 # ---------------------------------------------------------------------------
+
+
+def _per_id(df: DataFrame, cols: list[str], step) -> DataFrame:
+    """Run ``step`` once per id as a grouped-map pandas kernel.
+
+    Each id's rows arrive as one pandas frame sorted by dt; ``step(pdf)``
+    returns one array per entry of ``cols``. The output is the input
+    columns plus ``cols`` as doubles. The inner function keeps the name
+    ``kernel``: it is the UDF name in the analyzed plan."""
+    names = df.columns
+    out_schema = ", ".join(
+        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema]
+        + [f"{c} double" for c in cols]
+    )
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("dt").reset_index(drop=True)
+        for c, vals in zip(cols, step(pdf)):
+            pdf[c] = np.asarray(vals, dtype="float64")
+        return pdf[names + cols]
+
+    return df.groupBy("id").applyInPandas(kernel, schema=out_schema)
 
 
 def _ema_sma_seed(x: pd.Series, n: int) -> pd.Series:
     """EMA with SMA seed at row n (stock_indicators convention)."""
-    import numpy as np
-
     vals = x.to_numpy(dtype="float64")
     out = np.full(len(vals), np.nan)
     if len(vals) >= n:
@@ -219,8 +246,6 @@ def _ema_sma_seed(x: pd.Series, n: int) -> pd.Series:
 
 
 def _wilder_rsi(close: pd.Series, n: int = 14) -> pd.Series:
-    import numpy as np
-
     vals = close.to_numpy(dtype="float64")
     out = np.full(len(vals), np.nan)
     if len(vals) > n:
@@ -255,38 +280,30 @@ RECURSIVE_COLS = [
 
 
 def with_recursive_indicators(candles_or_ind: DataFrame) -> DataFrame:
-    """Add EMA/MACD/RSI columns via one grouped-map pandas kernel.
+    """Add EMA/MACD/RSI columns in one per-id kernel.
 
-    Replaces the reference's per-symbol driver collect loop (L1) with a
-    parallel Arrow-batched kernel: each id's frame arrives as a pandas
-    DataFrame sorted here by dt, the smoothers run O(rows), and Spark
-    reassembles — no data touches the driver.
-    """
-    in_schema = candles_or_ind.schema
-    out_fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema)
-    out_schema = out_fields + ", " + ", ".join(f"{c} double" for c in RECURSIVE_COLS)
+    Replaces the reference's per-symbol driver collect loop (L1): the
+    smoothers run on executors and no data touches the driver."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("dt").reset_index(drop=True)
+    def step(pdf: pd.DataFrame):
         close = pdf["close"].astype("float64")
-        ema12 = _ema_sma_seed(close, 12)
-        ema26 = _ema_sma_seed(close, 26)
-        macd = ema12 - ema26
+        macd = _ema_sma_seed(close, 12) - _ema_sma_seed(close, 26)
         macd_valid = macd.dropna()
         signal = pd.Series(float("nan"), index=macd.index, dtype="float64")
         if len(macd_valid) >= 9:
             sig_vals = _ema_sma_seed(macd_valid.reset_index(drop=True), 9)
             signal.loc[macd_valid.index] = sig_vals.to_numpy()
-        pdf["ema_5"] = _ema_sma_seed(close, 5)
-        pdf["ema_10"] = _ema_sma_seed(close, 10)
-        pdf["ema_30"] = _ema_sma_seed(close, 30)
-        pdf["macd"] = macd
-        pdf["macd_signal"] = signal
-        pdf["macd_histogram"] = macd - signal
-        pdf["rsi_14"] = _wilder_rsi(close, 14)
-        return pdf
+        return (
+            _ema_sma_seed(close, 5),
+            _ema_sma_seed(close, 10),
+            _ema_sma_seed(close, 30),
+            macd,
+            signal,
+            macd - signal,
+            _wilder_rsi(close, 14),
+        )
 
-    out = candles_or_ind.groupBy("id").applyInPandas(kernel, schema=out_schema)
+    out = _per_id(candles_or_ind, RECURSIVE_COLS, step)
     # pandas NaN arrives as a double NaN, not SQL NULL — normalize so the
     # warm-up rows compare equal to SQL oracles (NULL) downstream
     for c in RECURSIVE_COLS:
@@ -329,41 +346,26 @@ def holt_linear(candles: DataFrame) -> DataFrame:
     smoothed level, the trend, and the one-step-ahead forecast
     (level + trend).
 
-    Same execution shape as the EMA/MACD/RSI family: one grouped-map
-    pandas kernel (Arrow batch per id, O(rows) Python loop), one
-    id-shuffle, no driver collect. The recursion is sequential by
-    nature — per-key kernels ARE the scale-out (symbols partition the
-    work); the DuckDB oracle replays it as a recursive CTE with the
+    The recursion is sequential by nature — symbols partition the
+    work; the DuckDB oracle replays it as a recursive CTE with the
     exact same float op sequence, so the gate hash-checks a recursive
     stateful operator."""
-    in_schema = candles.schema
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema
-    )
-    out_schema = (
-        out_fields + ", holt_level double, holt_trend double, holt_forecast double"
-    )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("dt").reset_index(drop=True)
+    def step(pdf: pd.DataFrame):
         x = pdf["close"].astype("float64").to_numpy()
         n = len(x)
-        level = [0.0] * n
-        trend = [0.0] * n
-        if n:
-            lvl, tr = float(x[0]), 0.0
-            level[0], trend[0] = lvl, tr
-            for t in range(1, n):
-                new_l = HOLT_ALPHA * float(x[t]) + HOLT_OMA * (lvl + tr)
-                tr = HOLT_BETA * (new_l - lvl) + HOLT_OMB * tr
-                lvl = new_l
-                level[t], trend[t] = lvl, tr
-        pdf["holt_level"] = pd.Series(level, dtype="float64")
-        pdf["holt_trend"] = pd.Series(trend, dtype="float64")
-        pdf["holt_forecast"] = pdf["holt_level"] + pdf["holt_trend"]
-        return pdf
+        level = np.zeros(n)
+        trend = np.zeros(n)
+        lvl, tr = float(x[0]), 0.0
+        level[0] = lvl
+        for t in range(1, n):
+            new_l = HOLT_ALPHA * float(x[t]) + HOLT_OMA * (lvl + tr)
+            tr = HOLT_BETA * (new_l - lvl) + HOLT_OMB * tr
+            lvl = new_l
+            level[t], trend[t] = lvl, tr
+        return level, trend, level + trend
 
-    return candles.groupBy("id").applyInPandas(kernel, schema=out_schema)
+    return _per_id(candles, ["holt_level", "holt_trend", "holt_forecast"], step)
 
 
 def heikin_ashi(candles: DataFrame) -> DataFrame:
@@ -371,52 +373,33 @@ def heikin_ashi(candles: DataFrame) -> DataFrame:
     (rowwise), ha_open_t = (ha_open_{t-1} + ha_close_{t-1})/2 seeded
     with (open_1+close_1)/2, ha_high/ha_low = extremes over the raw
     high/low and the synthetic open/close.  The open recursion makes
-    this a genuinely stateful per-key scan (like Holt/EMA), so it runs
-    as the same grouped-map pandas kernel shape: one id-shuffle, an
-    O(rows) Python loop per key, no driver collect.  Expects an
-    ``open`` column (for the daily series it derives as the prior
+    this a genuinely stateful per-key scan (like Holt/EMA).  Expects
+    an ``open`` column (for the daily series it derives as the prior
     close); the DuckDB oracle replays the recursion as a recursive CTE
     with the identical float op sequence."""
-    in_schema = candles.schema
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema
-    )
-    out_schema = (
-        out_fields
-        + ", ha_open double, ha_high double, ha_low double, ha_close double"
-    )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("dt").reset_index(drop=True)
+    def step(pdf: pd.DataFrame):
         o = pdf["open"].astype("float64").to_numpy()
-        h = pdf["high"].astype("float64").to_numpy()
-        lo = pdf["low"].astype("float64").to_numpy()
         c = pdf["close"].astype("float64").to_numpy()
-        n = len(c)
-        ha_o = [0.0] * n
-        ha_c = [0.0] * n
-        for t in range(n):
-            ha_c[t] = (
-                float(o[t]) + float(h[t]) + float(lo[t]) + float(c[t])
-            ) / 4.0
-            if t == 0:
-                ha_o[t] = (float(o[0]) + float(c[0])) / 2.0
-            else:
-                ha_o[t] = (ha_o[t - 1] + ha_c[t - 1]) / 2.0
-        pdf["ha_open"] = pd.Series(ha_o, dtype="float64")
-        pdf["ha_close"] = pd.Series(ha_c, dtype="float64")
-        pdf["ha_high"] = pd.concat(
-            [pdf["high"], pdf["ha_open"], pdf["ha_close"]], axis=1
-        ).max(axis=1)
-        pdf["ha_low"] = pd.concat(
-            [pdf["low"], pdf["ha_open"], pdf["ha_close"]], axis=1
-        ).min(axis=1)
-        return pdf[
-            [f.name for f in in_schema]
-            + ["ha_open", "ha_high", "ha_low", "ha_close"]
-        ]
+        ha_c = (
+            o
+            + pdf["high"].astype("float64").to_numpy()
+            + pdf["low"].astype("float64").to_numpy()
+            + c
+        ) / 4.0
+        ha_o = np.empty(len(c))
+        ha_o[0] = (o[0] + c[0]) / 2.0
+        for t in range(1, len(c)):
+            ha_o[t] = (ha_o[t - 1] + ha_c[t - 1]) / 2.0
+        env = [pd.Series(ha_o), pd.Series(ha_c)]
+        return (
+            ha_o,
+            pd.concat([pdf["high"], *env], axis=1).max(axis=1),
+            pd.concat([pdf["low"], *env], axis=1).min(axis=1),
+            ha_c,
+        )
 
-    return candles.groupBy("id").applyInPandas(kernel, schema=out_schema)
+    return _per_id(candles, ["ha_open", "ha_high", "ha_low", "ha_close"], step)
 
 
 ADX_N = 14
@@ -429,34 +412,21 @@ def adx(candles: DataFrame, n: int = ADX_N) -> DataFrame:
     Wilder smoothing of DX (seeded with the mean of the first 14 DX
     values). Two chained recursions — the deepest stateful operator in
     the family (reference family: calculate_market_indicators.py).
-
-    Same execution shape as EMA/Holt/Heikin-Ashi: one grouped-map
-    pandas kernel per id (one id-shuffle, O(rows) sequential state
-    machine per key — symbols are the parallelism); every float op is
-    written in the exact sequence the DuckDB recursive-CTE oracle
-    replays, so state stays bit-identical across engines."""
-    in_schema = candles.schema
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema
-    )
-    out_schema = (
-        out_fields
-        + ", atr double, plus_di double, minus_di double, adx double"
-    )
+    Every float op is written in the exact sequence the DuckDB
+    recursive-CTE oracle replays, so state stays bit-identical across
+    engines."""
     nf = float(n)
     nm1 = float(n - 1)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("dt").reset_index(drop=True)
+    def step(pdf: pd.DataFrame):
         h = pdf["high"].astype("float64").to_numpy()
         lo = pdf["low"].astype("float64").to_numpy()
         c = pdf["close"].astype("float64").to_numpy()
         m = len(c)
-        nan = float("nan")
-        atr_o = [nan] * m
-        dip_o = [nan] * m
-        dim_o = [nan] * m
-        adx_o = [nan] * m
+        atr_o = np.full(m, np.nan)
+        dip_o = np.full(m, np.nan)
+        dim_o = np.full(m, np.nan)
+        adx_o = np.full(m, np.nan)
         trsum = pdmsum = mdmsum = 0.0
         atr_s = pdm14 = mdm14 = adx_s = None
         dxcum = 0.0
@@ -503,13 +473,9 @@ def adx(candles: DataFrame, n: int = ADX_N) -> DataFrame:
             dim_o[t] = dim
             if adx_s is not None:
                 adx_o[t] = adx_s
-        pdf["atr"] = pd.Series(atr_o, dtype="float64")
-        pdf["plus_di"] = pd.Series(dip_o, dtype="float64")
-        pdf["minus_di"] = pd.Series(dim_o, dtype="float64")
-        pdf["adx"] = pd.Series(adx_o, dtype="float64")
-        return pdf
+        return atr_o, dip_o, dim_o, adx_o
 
-    return candles.groupBy("id").applyInPandas(kernel, schema=out_schema)
+    return _per_id(candles, ["atr", "plus_di", "minus_di", "adx"], step)
 
 
 TRIX_N = 15
@@ -524,24 +490,16 @@ def trix(candles: DataFrame, n: int = TRIX_N) -> DataFrame:
     level k-1, then e = alpha*x + (1-alpha)*e. Three chained
     recursions; trix_t = 100*(e3_t/e3_{t-1} - 1).
 
-    Grouped-map pandas kernel (one id-shuffle, O(rows) per key); seeds
-    accumulate SEQUENTIALLY (plain running sum, not np.mean) so the
-    DuckDB recursive-CTE oracle replays bit-identical IEEE ops."""
-    in_schema = candles.schema
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema
-    )
-    out_schema = out_fields + ", ema3 double, trix double"
+    Seeds accumulate SEQUENTIALLY (plain running sum, not np.mean) so
+    the DuckDB recursive-CTE oracle replays bit-identical IEEE ops."""
     nf = float(n)
     a, oma = TRIX_ALPHA, TRIX_OMA
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("dt").reset_index(drop=True)
+    def step(pdf: pd.DataFrame):
         x = pdf["close"].astype("float64").to_numpy()
         m = len(x)
-        nan = float("nan")
-        e3_o = [nan] * m
-        trix_o = [nan] * m
+        e3_o = np.full(m, np.nan)
+        trix_o = np.full(m, np.nan)
         s1 = s2 = s3 = 0.0
         e1 = e2 = e3 = None
         for t in range(m):
@@ -577,11 +535,9 @@ def trix(candles: DataFrame, n: int = TRIX_N) -> DataFrame:
             e3_o[t] = e3
             if prev_e3 is not None:
                 trix_o[t] = 100.0 * (e3 / prev_e3 - 1.0)
-        pdf["ema3"] = pd.Series(e3_o, dtype="float64")
-        pdf["trix"] = pd.Series(trix_o, dtype="float64")
-        return pdf
+        return e3_o, trix_o
 
-    return candles.groupBy("id").applyInPandas(kernel, schema=out_schema)
+    return _per_id(candles, ["ema3", "trix"], step)
 
 
 KALMAN_Q = 10.0
@@ -594,39 +550,38 @@ def kalman_level(candles: DataFrame) -> DataFrame:
     predict p += Q, gain K = p/(p+R), update level += K*(x - level),
     p *= (1-K). Level seeds at the first observation with a diffuse
     p0, so the gain starts ~1 (trust data) and anneals to the steady
-    state. Grouped-map pandas kernel; every float op in the exact
-    order the recursive-CTE oracle replays."""
-    in_schema = candles.schema
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema
-    )
-    out_schema = out_fields + ", kalman_level double, kalman_gain double"
+    state. Every float op runs in the exact order the recursive-CTE
+    oracle replays."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("dt").reset_index(drop=True)
+    def step(pdf: pd.DataFrame):
         x = pdf["close"].astype("float64").to_numpy()
         m = len(x)
-        nan = float("nan")
-        lvl_o = [nan] * m
-        gain_o = [nan] * m
-        if m:
-            level = float(x[0])
-            p = KALMAN_P0
-            for t in range(1, m):
-                pp = p + KALMAN_Q
-                k = pp / (pp + KALMAN_R)
-                level = level + k * (float(x[t]) - level)
-                p = (1.0 - k) * pp
-                lvl_o[t] = level
-                gain_o[t] = k
-        pdf["kalman_level"] = pd.Series(lvl_o, dtype="float64")
-        pdf["kalman_gain"] = pd.Series(gain_o, dtype="float64")
-        return pdf
+        lvl_o = np.full(m, np.nan)
+        gain_o = np.full(m, np.nan)
+        level = float(x[0])
+        p = KALMAN_P0
+        for t in range(1, m):
+            pp = p + KALMAN_Q
+            k = pp / (pp + KALMAN_R)
+            level = level + k * (float(x[t]) - level)
+            p = (1.0 - k) * pp
+            lvl_o[t] = level
+            gain_o[t] = k
+        return lvl_o, gain_o
 
-    return candles.groupBy("id").applyInPandas(kernel, schema=out_schema)
+    return _per_id(candles, ["kalman_level", "kalman_gain"], step)
 
 
 EWMA_LAMBDA = 0.94  # RiskMetrics decay for daily returns
+
+
+def _log_returns(x: np.ndarray) -> np.ndarray:
+    """Per-row log return (NaN on the first row), one math.log per step
+    so both return kernels see the identical doubles."""
+    ret = np.full(len(x), np.nan)
+    for t in range(1, len(x)):
+        ret[t] = math.log(float(x[t]) / float(x[t - 1]))
+    return ret
 
 
 def ewma_volatility(candles: DataFrame, lam: float = EWMA_LAMBDA) -> DataFrame:
@@ -635,39 +590,20 @@ def ewma_volatility(candles: DataFrame, lam: float = EWMA_LAMBDA) -> DataFrame:
     seeded v_1 = r_1^2; emitted as the annualized sigma
     sqrt(v_t * 365). The industry-standard (J.P. Morgan RiskMetrics
     1996) conditional-volatility estimator: variance itself is the
-    recursive EMA state, which no window aggregate expresses.
+    recursive EMA state, which no window aggregate expresses. Rows
+    before the second observation carry no return and are dropped by
+    the caller."""
 
-    Same grouped-map pandas kernel law as EMA/Holt/Kalman (one
-    id-shuffle, O(rows) sequential state per key; symbols are the
-    parallelism). Rows before the second observation carry no return
-    and are dropped by the caller."""
-    in_schema = candles.schema
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema
-    )
-    out_schema = out_fields + ", ret double, ewma_var double"
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        import math
-
-        import numpy as np
-
-        pdf = pdf.sort_values("dt").reset_index(drop=True)
-        x = pdf["close"].astype("float64").to_numpy()
-        n = len(x)
-        ret = np.full(n, np.nan)
-        var = np.full(n, np.nan)
-        v = np.nan
-        for t in range(1, n):
-            r = math.log(float(x[t]) / float(x[t - 1]))
-            ret[t] = r
+    def step(pdf: pd.DataFrame):
+        ret = _log_returns(pdf["close"].astype("float64").to_numpy())
+        var = np.full(len(ret), np.nan)
+        for t in range(1, len(ret)):
+            r = ret[t]
             v = r * r if t == 1 else lam * v + (1.0 - lam) * r * r
             var[t] = v
-        pdf["ret"] = pd.Series(ret, dtype="float64")
-        pdf["ewma_var"] = pd.Series(var, dtype="float64")
-        return pdf
+        return ret, var
 
-    return candles.groupBy("id").applyInPandas(kernel, schema=out_schema)
+    return _per_id(candles, ["ret", "ewma_var"], step)
 
 
 HW_ALPHA, HW_BETA, HW_GAMMA, HW_PERIOD = 0.3, 0.1, 0.2, 7
@@ -679,25 +615,11 @@ def holt_winters_additive(candles: DataFrame) -> DataFrame:
     state vector updated one slot per step — the classical seasonal
     forecaster (Winters 1960). Init: level = mean of the first m
     closes, trend = 0, seasonals = first-m deviations from that mean;
-    the recursion starts at t = m+1 and earlier rows emit NULLs.
+    the recursion starts at t = m+1 and earlier rows emit NULLs. The
+    kernel carries m extra floats of state per key."""
 
-    Same grouped-map kernel law as EMA/Holt/Kalman: one id-shuffle,
-    O(rows) sequential state per key, m extra floats of state."""
-    in_schema = candles.schema
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema
-    )
-    out_schema = (
-        out_fields
-        + ", hw_level double, hw_trend double, hw_season double,"
-        + " hw_forecast double"
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
+    def step(pdf: pd.DataFrame):
         m = HW_PERIOD
-        pdf = pdf.sort_values("dt").reset_index(drop=True)
         x = pdf["close"].astype("float64").to_numpy()
         n = len(x)
         lvl_o = np.full(n, np.nan)
@@ -723,13 +645,11 @@ def holt_winters_additive(candles: DataFrame) -> DataFrame:
                 lvl_o[t] = lvl
                 tr_o[t] = tr
                 se_o[t] = s_new
-        pdf["hw_level"] = pd.Series(lvl_o, dtype="float64")
-        pdf["hw_trend"] = pd.Series(tr_o, dtype="float64")
-        pdf["hw_season"] = pd.Series(se_o, dtype="float64")
-        pdf["hw_forecast"] = pd.Series(fc_o, dtype="float64")
-        return pdf
+        return lvl_o, tr_o, se_o, fc_o
 
-    return candles.groupBy("id").applyInPandas(kernel, schema=out_schema)
+    return _per_id(
+        candles, ["hw_level", "hw_trend", "hw_season", "hw_forecast"], step
+    )
 
 
 GARCH_ALPHA, GARCH_BETA = 0.08, 0.90
@@ -752,41 +672,24 @@ def garch_filter(
     state trajectory stays bit-identical. Parameter estimation (MLE)
     is out of scope by design: filtering with pinned params is the
     deterministic, hash-checkable core; the estimation loop would ride
-    the same kernel. Same grouped-map law as EMA/Holt/Kalman: one
-    id-shuffle, O(rows) sequential state per key."""
-    import math
-
-    import numpy as np
-
-    in_schema = candles.schema
-    out_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema
-    )
-    out_schema = out_fields + ", ret double, garch_var double"
+    the same kernel."""
     a, b = alpha, beta
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("dt").reset_index(drop=True)
-        x = pdf["close"].astype("float64").to_numpy()
-        n = len(x)
-        ret = np.full(n, np.nan)
+    def step(pdf: pd.DataFrame):
+        ret = _log_returns(pdf["close"].astype("float64").to_numpy())
+        n = len(ret)
         var = np.full(n, np.nan)
         if n > 1:
-            for t in range(1, n):
-                ret[t] = math.log(float(x[t]) / float(x[t - 1]))
-            r = ret[1:]
             vbar = 0.0
-            for v in r:  # sequential sum, then grid-snap the mean
+            for v in ret[1:]:  # sequential sum, then grid-snap the mean
                 vbar += v * v
-            vbar = math.floor(vbar / len(r) * 1e10 + 0.5001) / 1e10
+            vbar = math.floor(vbar / (n - 1) * 1e10 + 0.5001) / 1e10
             omega = (1.0 - a - b) * vbar
             v = vbar
             var[1] = v
             for t in range(2, n):
                 v = omega + a * ret[t - 1] * ret[t - 1] + b * v
                 var[t] = v
-        pdf["ret"] = pd.Series(ret, dtype="float64")
-        pdf["garch_var"] = pd.Series(var, dtype="float64")
-        return pdf
+        return ret, var
 
-    return candles.groupBy("id").applyInPandas(kernel, schema=out_schema)
+    return _per_id(candles, ["ret", "garch_var"], step)

@@ -145,7 +145,13 @@ def _parse_offset(off) -> dict[str, int] | None:
 def offset_lags(progress: dict) -> dict[str, int] | None:
     """Per-partition offset deltas (endOffset - startOffset) from one
     query-progress dict, mirroring the reference's per-partition
-    offset_diff map (check_offset_diff.py:39-45). None = unparseable."""
+    offset_diff map (check_offset_diff.py:39-45). None = unparseable.
+
+    A live PySpark 4 ``StreamingQueryProgress`` stores each source offset
+    as ``str()`` of the JVM value (a Python repr, not JSON), so its
+    compact ``.json`` form is read instead when it has one."""
+    if isinstance(getattr(progress, "json", None), str):
+        progress = json.loads(progress.json)
     lags: dict[str, int] = {}
     sources = progress.get("sources")
     if not sources:

@@ -11,6 +11,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from crypto_prediction_etl_spark.operators import indicators as ind
 from crypto_prediction_etl_spark.operators.indicators import (
     indicator_frame,
     with_window_indicators,
@@ -281,3 +282,59 @@ def test_kalman_gain_anneals_monotonically(spark, sf_dir):
         (q + np.sqrt(q * q + 4 * q * r)) / 2 + r
     )
     assert abs(g[-1] - k_ss) < 0.01
+
+
+_KERNEL_COLS = [
+    ("with_recursive_indicators", ind.RECURSIVE_COLS),
+    ("holt_linear", ["holt_level", "holt_trend", "holt_forecast"]),
+    ("heikin_ashi", ["ha_open", "ha_high", "ha_low", "ha_close"]),
+    ("adx", ["atr", "plus_di", "minus_di", "adx"]),
+    ("trix", ["ema3", "trix"]),
+    ("kalman_level", ["kalman_level", "kalman_gain"]),
+    ("ewma_volatility", ["ret", "ewma_var"]),
+    ("holt_winters_additive", ["hw_level", "hw_trend", "hw_season", "hw_forecast"]),
+    ("garch_filter", ["ret", "garch_var"]),
+]
+
+
+def _ohlc_rows():
+    """Two ids: 'A' with 60 bars (past every kernel's warm-up) and 'B'
+    with a single bar."""
+    import datetime as dt
+    import math
+
+    rows = []
+    prev = 100.0
+    for i in range(60):
+        close = 100.0 + 10.0 * math.sin(i / 5.0) + 0.3 * i
+        rows.append(
+            ("A", dt.date(2024, 1, 1) + dt.timedelta(days=i), prev,
+             close + 1.5 + 0.2 * (i % 3), close - 1.2 - 0.1 * (i % 4), close)
+        )
+        prev = close
+    rows.append(("B", dt.date(2024, 1, 1), 5.0, 5.5, 4.5, 5.2))
+    return rows
+
+
+@pytest.mark.parametrize("name, cols", _KERNEL_COLS, ids=[k for k, _ in _KERNEL_COLS])
+def test_per_id_kernel_schema_and_sort(spark, name, cols):
+    """Every recursive kernel: output = input columns + its own columns
+    as doubles, in order; rows fed in reverse dt order give the same
+    values as sorted rows; a single-row id runs without error."""
+    schema = "id string, dt date, open double, high double, low double, close double"
+    rows = _ohlc_rows()
+    fn = getattr(ind, name)
+    fwd = fn(spark.createDataFrame(rows, schema))
+    rev = fn(spark.createDataFrame(rows[::-1], schema))
+
+    in_cols = ["id", "dt", "open", "high", "low", "close"]
+    assert fwd.columns == in_cols + cols
+    types = dict(fwd.dtypes)
+    assert all(types[c] == "double" for c in cols)
+
+    def ordered(df):
+        return df.toPandas().sort_values(["id", "dt"]).reset_index(drop=True)
+
+    got_fwd, got_rev = ordered(fwd), ordered(rev)
+    assert (got_fwd["id"] == "B").sum() == 1
+    pd.testing.assert_frame_equal(got_fwd, got_rev)

@@ -172,9 +172,10 @@ def test_gate_detects_perturbations(spark, sf_dir):
     gate uses) must flag a value nudge below the rounding grid's
     neighbor, a dropped row, a renamed column, and an unsortable
     list column.  If this test fails, green replays mean nothing."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
     from _canon import compare_frames
 
     import duckdb

@@ -5,12 +5,15 @@ results stay correct."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from crypto_prediction_etl_spark.plans import registry
 from tests.conftest import SF_DIR_CORRECTNESS
 
 registry.load_all()
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 
 def _plan(spark, sf_dir, name: str) -> str:
@@ -1124,8 +1127,8 @@ def test_catalog_wide_no_cartesian_no_row_python(spark, sf_dir):
     catalog's single most valuable structural invariant.)"""
     import sys as _sys
 
-    if "/root/repo/tools" not in _sys.path:
-        _sys.path.insert(0, "/root/repo/tools")
+    if TOOLS not in _sys.path:
+        _sys.path.insert(0, TOOLS)
     from window_audit import (
         capture_checkpoint_plans,
         unbounded_partitionless_specs,
@@ -1646,8 +1649,8 @@ def test_record_grain_windows_route_through_globalrank(
     tiny frame from the allowlist."""
     import sys as _sys
 
-    if "/root/repo/tools" not in _sys.path:
-        _sys.path.insert(0, "/root/repo/tools")
+    if TOOLS not in _sys.path:
+        _sys.path.insert(0, TOOLS)
     from window_audit import partitionless_specs, subject
 
     plan = _plan(spark, sf_dir, name)

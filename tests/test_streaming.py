@@ -338,6 +338,39 @@ def test_rate_limited_micro_batches(spark, workdir):
     assert spark.read.parquet(os.path.join(workdir, "rate_out")).count() == 3
 
 
+def test_offset_lag_check_reads_live_progress(spark, workdir):
+    """check_offset_lag on a live StreamingQueryProgress: the file
+    source's {"logOffset": N} offsets parse, so the batch that reads the
+    second file reports lag 1 and passes at max_lag=1."""
+    from crypto_prediction_etl_spark.quality.checks import (
+        check_offset_lag,
+        offset_lags,
+    )
+
+    src = os.path.join(workdir, "lag_src")
+    os.makedirs(src)
+    q = start_file_stream_pipeline(
+        spark,
+        src,
+        candles_pipeline,
+        os.path.join(workdir, "lag_out"),
+        os.path.join(workdir, "lag_ckpt"),
+        max_files_per_trigger=1,
+    )
+    try:
+        for i in range(2):
+            with open(os.path.join(src, f"f{i}.jsonl"), "w") as f:
+                f.write(_candle_msg("BTC_USDT", BASE_TS + 60 * i, BASE_TS + 60 * i + 59) + "\n")
+            q.processAllAvailable()
+        progress = q.lastProgress
+    finally:
+        q.stop()
+    assert progress["batchId"] == 1
+    assert offset_lags(progress) == {"src0:logOffset": 1}
+    result = check_offset_lag(progress, max_lag=1)
+    assert result.passed, result.detail
+
+
 def test_stream_static_dimension_join(spark, workdir):
     """Stream-static join: enrich the candles stream with a broadcast
     dimension table (symbol -> base/quote) — the streaming analog of the

@@ -6,17 +6,21 @@ exactly like the round driver — `toPandas()` on the Spark side,
 and value normalization at the pandas level (HUGEINT->float64 drift
 -> FAIL).  The old `str(value)`-on-raw-fetch comparison was blind to
 both classes (q154/q157, r4).  Shared logic lives in tools/_canon.py.
+
+Usage: python tools/driver_replay.py [--sf DIR] [name-prefix ...]
 """
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(TOOLS))
+sys.path.insert(0, TOOLS)
 
 import duckdb
 
 import __spark_entry__ as entrymod
-from _canon import compare_frames
+from _canon import compare_frames, frame_lines
 from crypto_prediction_etl_spark.session import get_spark
 
 SF = "/root/testdata/sf0.01"
@@ -70,6 +74,12 @@ for name, fn in sorted(qs.items()):
     extra = f"  [{detail}]" if detail else ""
     nrows = len(spdf) if verdict != "ERR" else -1
     print(f"{verdict} {name}: {nrows} rows ({time.time()-t0:.1f}s){extra}")
+    if verdict == "FAIL" and detail == "hash mismatch":
+        smap, dmap = set(frame_lines(spdf)), set(frame_lines(dpdf))
+        for line in sorted(smap - dmap)[:3]:
+            print(f"  spark-only: {line}")
+        for line in sorted(dmap - smap)[:3]:
+            print(f"  duck-only:  {line}")
 print(f"\n{n_pass} pass, {n_fail} fail, {len(qs)} queries")
 # Machine-parsable close-claim line (VERDICT r7 item 8): future rounds
 # diff this mechanically instead of grepping prose logs.

@@ -11,13 +11,14 @@ plan-shape claims in OPTIMIZATION_r12.md reference.
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from crypto_prediction_etl_spark.plans import registry  # noqa: E402
 from crypto_prediction_etl_spark.session import get_spark  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
+OUT = os.path.join(REPO, "plans", "r13")
 
 
 def main() -> int:

@@ -32,9 +32,11 @@ shuffle.partitions=200 is exactly the knob that family's range
 partitioning must be invariant to.
 """
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 ALWAYS = [
     "q153_curriculum_shards",

@@ -46,10 +46,12 @@ Usage:
 
 import hashlib
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from crypto_prediction_etl_spark.plans import registry  # noqa: E402
 from crypto_prediction_etl_spark.session import get_spark  # noqa: E402
