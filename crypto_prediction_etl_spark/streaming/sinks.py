@@ -15,6 +15,8 @@ end state as Cassandra upsert.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -134,10 +136,18 @@ def start_file_stream_pipeline(
 
 def progress_summary(query) -> dict:
     """Offset/rate introspection from lastProgress (reference lag
-    monitoring: check_offset_diff.py:39-69, session.py:130-132)."""
+    monitoring: check_offset_diff.py:39-69, session.py:130-132).
+
+    A live PySpark 4 ``StreamingQueryProgress`` stores each source offset
+    as ``str()`` of the JVM value (a Python repr, not JSON), so its
+    ``.json`` form is read instead when it has one; offsets then come
+    back parsed (a file source's ``{"logOffset": 0}``, None before the
+    first batch)."""
     p = query.lastProgress
     if not p:
         return {}
+    if isinstance(getattr(p, "json", None), str):
+        p = json.loads(p.json)
     return {
         "batchId": p.get("batchId"),
         "numInputRows": p.get("numInputRows"),

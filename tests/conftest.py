@@ -9,6 +9,11 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
+# The engine's 48g default driver heap lets one long-lived test JVM grow
+# until a 16 GB host OOM-kills it mid-suite; the sf0.001 inputs need far
+# less (perfbench caps its own sessions at 4 GiB too).
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 SF_DIR_SMOKE = "/root/testdata/sf0.001"
 SF_DIR_CORRECTNESS = "/root/testdata/sf0.01"
 
@@ -24,3 +29,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF_DIR_SMOKE)
+
+
+@pytest.fixture(scope="session")
+def duck(sf_dir):
+    """One DuckDB connection with the testdata views, shared by the suite."""
+    from .oracle import duckdb_conn
+
+    con = duckdb_conn(sf_dir)
+    yield con
+    con.close()

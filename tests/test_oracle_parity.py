@@ -17,8 +17,9 @@ NAMES = sorted(registry.ORACLES)
 
 
 @pytest.mark.parametrize("name", NAMES)
-def test_oracle_parity(spark, sf_dir, name):
-    compare_query(spark, sf_dir, name)
+def test_oracle_parity(spark, duck, sf_dir, name):
+    verdict, detail, _ = compare_query(spark, duck, sf_dir, name)
+    assert verdict == "PASS", f"{name}: {verdict} {detail}"
 
 
 def test_all_queries_return_rows(spark, sf_dir):
@@ -79,7 +80,7 @@ def test_adjudication_window_drains_never_adjudicated_first():
     assert entry._ADJUDICATE_FIRST[: len(expect_head)] == expect_head
 
 
-def test_output_schemas_survive_driver_canonicalization(spark, sf_dir):
+def test_output_schemas_survive_driver_canonicalization(spark, duck, sf_dir):
     """No query output may carry a type the driver's pandas
     canonicalization mangles (r4 lesson: q154/q157/q200/q265).
 
@@ -93,8 +94,6 @@ def test_output_schemas_survive_driver_canonicalization(spark, sf_dir):
     float32->float64 widening is identical on both sides.)
     DuckDB types come from DESCRIBE, which plans without executing.
     """
-    import duckdb
-
     from pyspark.sql import types as T
 
     import __spark_entry__ as entry
@@ -110,15 +109,11 @@ def test_output_schemas_survive_driver_canonicalization(spark, sf_dir):
                 offenders.append((name, f.name, f.dataType.simpleString()))
     assert not offenders, offenders
 
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"]:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     banned_duck = ("HUGEINT", "[]", "STRUCT", "MAP", "DECIMAL")
     bad = []
     name_drift = []
     for name, sql in entry.oracle_sql().items():
-        desc = con.execute(f"DESCRIBE ({sql})").fetchall()
+        desc = duck.execute(f"DESCRIBE ({sql})").fetchall()
         for col, typ, *_ in desc:
             if any(k in typ for k in banned_duck):
                 bad.append((name, col, typ))
@@ -166,32 +161,23 @@ def test_registry_hygiene():
         assert not unknown, (name, unknown)
 
 
-def test_gate_detects_perturbations(spark, sf_dir):
+def test_gate_detects_perturbations(spark, duck, sf_dir):
     """Mutation test OF THE GATE: the pandas-canonicalization compare
-    (tools/_canon.compare_frames — the driver mirror every replay
-    gate uses) must flag a value nudge below the rounding grid's
-    neighbor, a dropped row, a renamed column, and an unsortable
-    list column.  If this test fails, green replays mean nothing."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
-    from _canon import compare_frames
-
-    import duckdb
-
+    (tests.oracle.compare_frames — the driver mirror tier-1 and every
+    replay gate use) must flag a value nudge below the rounding grid's
+    neighbor, a dropped row, a renamed column, an unsortable list
+    column, an integer column re-typed as float64 (the HUGEINT drift)
+    and a 5e-7 relative nudge.  The last two passed the old raw-row
+    ``math.isclose(rel=1e-6)`` comparator.  If this test fails, green
+    replays mean nothing."""
     from crypto_prediction_etl_spark.plans.registry import ORACLES, QUERIES
+
+    from .oracle import compare_frames
 
     name = "q01_pricing_summary"
     sdf = QUERIES[name](spark, sf_dir).toPandas()
-    con = duckdb.connect()
-    for t in ["lineitem"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    ddf = con.execute(ORACLES[name]).df()
-    verdict, _ = compare_frames(sdf, ddf)
-    assert verdict == "PASS"
+    ddf = duck.execute(ORACLES[name]).df()
+    assert compare_frames(sdf, ddf)[0] == "PASS"
 
     nudged = sdf.copy()
     num_cols = [c for c in nudged.columns if nudged[c].dtype == "float64"]
@@ -206,6 +192,18 @@ def test_gate_detects_perturbations(spark, sf_dir):
     listy = sdf.copy()
     listy[listy.columns[0]] = [[1, 2]] * len(listy)
     assert compare_frames(listy, ddf)[0] in ("ERR", "FAIL")
+
+    int_col = next(c for c in sdf.columns if sdf[c].dtype.kind == "i")
+    floated = sdf.astype({int_col: "float64"})
+    assert (floated[int_col] == sdf[int_col]).all()
+    assert compare_frames(floated, ddf)[0] == "FAIL"
+
+    col = next(c for c in num_cols if sdf.loc[0, c] != 0)
+    drifted = sdf.copy()
+    drifted.loc[0, col] *= 1 + 5e-7
+    old, new = sdf.loc[0, col], drifted.loc[0, col]
+    assert 0 < abs(new - old) <= 1e-6 * abs(old)
+    assert compare_frames(drifted, ddf)[0] == "FAIL"
 
 
 def _code_referenced_query_names(src: str) -> set[str]:

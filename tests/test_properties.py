@@ -305,12 +305,9 @@ def test_auc_matches_pair_counting(spark):
 
     sf = "/root/testdata/sf0.001"
     row = QUERIES["q247_auc_roc"](spark, sf).collect()[0]
-    import duckdb
+    from .oracle import duckdb_conn
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'"
-    )
+    con = duckdb_conn(sf)
     wins, ties, n_pos, n_neg = con.sql(
         """
         WITH s AS (
@@ -547,13 +544,11 @@ def test_continuation_batch_invariants(spark, sf_dir):
         assert r.vr_2 > 0 and r.vr_4 > 0 and r.vr_8 > 0
 
 
-def test_theil_decomposition_identity(spark, sf_dir):
+def test_theil_decomposition_identity(spark, duck, sf_dir):
     """T_between + T_within must equal the DIRECT per-customer Theil
     index computed independently (the decomposition identity) — an
     invariant the oracle comparison cannot check because both engines
     share the decomposition formula."""
-    import duckdb
-
     from crypto_prediction_etl_spark.plans import registry
 
     registry.load_all()
@@ -562,12 +557,7 @@ def test_theil_decomposition_identity(spark, sf_dir):
     ).collect()
     assert rows
     t_total = rows[0].t_total
-    con = duckdb.connect()
-    for t in ("customer", "nation", "orders"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    direct = con.execute(
+    direct = duck.execute(
         """
         WITH cust AS (
           SELECT c.c_custkey, sum(o.o_totalprice) AS rev

@@ -133,6 +133,8 @@ def test_candles_stream_end_to_end(spark, workdir):
     hot = read_hot_table(spark, out, CANDLES_PK, ["ts_insert_utc", "_epoch"])
     assert hot.count() == 2  # upsert semantics: one row per PK
     assert prog["numInputRows"] == 5
+    assert prog["sources"][0]["startOffset"] is None
+    assert prog["sources"][0]["endOffset"] == {"logOffset": 0}
 
 
 def test_candles_checkpoint_replay_no_duplicates(spark, workdir):

@@ -10,11 +10,16 @@ Usage:
   python tools/hostile_replay.py [name-prefix ...]     (no args = full catalog)
   python tools/hostile_replay.py --sample N SALT       (sampled cadence)
   python tools/hostile_replay.py --codegen-off [...]   (interpreted eval)
+  python tools/hostile_replay.py --tiny-parallelism [...] (local[2], 1 partition)
   python tools/hostile_replay.py --arrow-tiny-batch [...] (7-row Arrow batches)
   python tools/hostile_replay.py --ansi-off [...]      (legacy non-ANSI eval)
   python tools/hostile_replay.py --low-memory [...]    (2 GiB driver heap)
   python tools/hostile_replay.py --tiny-scan-splits [...] (1 MiB scan tasks)
   python tools/hostile_replay.py --persist-pins [...]  (recomputable persist pins)
+
+Every query is compared through tests.oracle.compare_query, the same
+driver-faithful rule as tier-1 and tools/driver_replay.py; the run ends
+with a JSON verdict line that names the axes (and the sample).
 
 --codegen-off additionally disables whole-stage codegen (and forces
 NO_CODEGEN expression evaluation), exercising Spark's interpreted
@@ -68,7 +73,7 @@ ALWAYS = [
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as entrymod  # noqa: E402  (registers the catalog)
-from tests.oracle import compare_query  # noqa: E402
+from tests.oracle import replay  # noqa: E402
 
 # Axis notes:
 # --tiny-parallelism (round 8): the OTHER extreme from the 200-partition
@@ -129,15 +134,25 @@ from tests.oracle import compare_query  # noqa: E402
 # silently treated a re-ordered flag as a query-name prefix, running
 # the replay WITHOUT the requested axis); any unrecognized ``--``
 # argument is an error, never a prefix.
-_FLAGS = {
-    "--codegen-off": False,
-    "--tiny-parallelism": False,
-    "--arrow-tiny-batch": False,
-    "--ansi-off": False,
-    "--low-memory": False,
-    "--tiny-scan-splits": False,
-    "--persist-pins": False,
+#
+# Session confs each axis adds; --tiny-parallelism also swaps the
+# master and partition count below, --persist-pins the pin mode.
+_AXIS_CONFS: dict[str, dict[str, str]] = {
+    "--codegen-off": {
+        "spark.sql.codegen.wholeStage": "false",
+        "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+    },
+    "--tiny-parallelism": {},
+    "--arrow-tiny-batch": {"spark.sql.execution.arrow.maxRecordsPerBatch": "7"},
+    "--ansi-off": {"spark.sql.ansi.enabled": "false"},
+    "--low-memory": {"spark.driver.memory": "2g"},
+    "--tiny-scan-splits": {
+        "spark.sql.files.maxPartitionBytes": "1m",
+        "spark.sql.files.openCostInBytes": "0",
+    },
+    "--persist-pins": {},
 }
+_FLAGS = dict.fromkeys(_AXIS_CONFS, False)
 _sample_k: int | None = None
 _sample_salt = "r0"
 _positional: list[str] = []
@@ -160,17 +175,11 @@ while _i < len(_argv):
     else:
         _positional.append(_a)
     _i += 1
-codegen_off = _FLAGS["--codegen-off"]
+axes = [f for f, on in _FLAGS.items() if on]
 tiny = _FLAGS["--tiny-parallelism"]
-arrow_tiny = _FLAGS["--arrow-tiny-batch"]
-ansi_off = _FLAGS["--ansi-off"]
-low_mem = _FLAGS["--low-memory"]
-tiny_splits = _FLAGS["--tiny-scan-splits"]
 if _FLAGS["--persist-pins"]:
     # pin_mode() reads the env per pin, so setting it before the
     # catalog builds is sufficient — no session conf involved
-    import os
-
     os.environ["SPARK_GRAFT_PIN_MODE"] = "persist"
 
 builder = (
@@ -185,43 +194,22 @@ builder = (
     )  # hard requirement of the testdata, documented in readers.table
     .config("spark.sql.execution.arrow.pyspark.enabled", "true")
 )
-if codegen_off:
-    builder = builder.config(
-        "spark.sql.codegen.wholeStage", "false"
-    ).config("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-if arrow_tiny:
-    builder = builder.config(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", "7"
-    )
-if ansi_off:
-    builder = builder.config("spark.sql.ansi.enabled", "false")
-if low_mem:
-    builder = builder.config("spark.driver.memory", "2g")
-if tiny_splits:
-    builder = builder.config(
-        "spark.sql.files.maxPartitionBytes", "1m"
-    ).config("spark.sql.files.openCostInBytes", "0")
+for axis in axes:
+    for key, value in _AXIS_CONFS[axis].items():
+        builder = builder.config(key, value)
 spark = builder.getOrCreate()
 
 SF = "/root/testdata/sf0.01"
 all_names = list(entrymod.oracle_sql())
+tags = {"metric": "hostile_replay", "axes": axes}
 if _sample_k is not None:
     ranked = sorted(
         all_names,
         key=lambda n: hashlib.md5(f"{_sample_salt}:{n}".encode()).hexdigest(),
     )
     names = sorted(set(ranked[:_sample_k]) | set(ALWAYS))
+    tags["sample"] = [_sample_k, _sample_salt]
 else:
     prefixes = tuple(_positional)
     names = [n for n in all_names if not prefixes or n.startswith(prefixes)]
-n_pass = n_fail = 0
-for name in names:
-    try:
-        compare_query(spark, SF, name)
-        n_pass += 1
-        print(f"PASS {name}")
-    except Exception as e:  # noqa: BLE001
-        n_fail += 1
-        print(f"FAIL {name}: {type(e).__name__} {str(e)[:200]}")
-print(f"{n_pass} pass, {n_fail} fail (hostile session, {len(names)} queries)")
-sys.exit(1 if n_fail else 0)
+sys.exit(replay(spark, SF, names, **tags))
