@@ -3,11 +3,12 @@
 
 Prints ONE JSON line:
   {"metric": "headline_total", "value": <sec>, "unit": "sec",
-   "queries": {"q01_...": sec, ...}, "sf": 0.1}
+   "queries": {"q01_...": sec, ...}, "sf": 0.1, "cpus": <parallelism>, ...}
 
-Each query executes to completion through the noop sink (full plan runs,
-nothing is collected to the driver), matching how a cluster job would
-materialize results.
+Each query is set up, warmed and timed by ``tools/_harness.py``: it
+executes to completion through the noop sink (full plan runs, nothing is
+collected to the driver), matching how a cluster job would materialize
+results.
 """
 
 from __future__ import annotations
@@ -17,11 +18,9 @@ import os
 import sys
 import time
 
-REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, REPO_ROOT)
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
 
-from crypto_prediction_etl_spark.plans import registry  # noqa: E402
-from crypto_prediction_etl_spark.session import get_spark  # noqa: E402
+import _harness  # noqa: E402
 
 # Second panel (VERDICT r3 item 8): the heaviest round-2/3 additions,
 # benchmarked with their own anchors so regressions in the newer operator
@@ -119,7 +118,7 @@ HEADLINE = [
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = _harness.SF_DIR
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     # Pre-flight load-gate (VERDICT r11 item 3): BENCH_r11 landed in a
     # load1=5.12 window and recorded 3x-inflated panel4 numbers that
@@ -149,29 +148,8 @@ def main() -> None:
         start_load5 = round(os.getloadavg()[1], 2)
     except OSError:
         start_load1 = start_load5 = None
-    registry.load_all()
-    spark = get_spark("bench")
-
-    # warm the JVM/codegen path so per-query numbers measure the plan,
-    # not first-call classloading
-    registry.QUERIES["q01_pricing_summary"](spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    # warm the Python worker pool (fork + numpy/pandas import + Arrow
-    # serde setup, ~100ms per worker) so the first pandas-kernel query
-    # measures its plan, not interpreter startup; workers are reused
-    # for the rest of the session (spark.python.worker.reuse)
-    def _identity(batches):
-        for b in batches:
-            yield b
-
-    spark.range(0, 256, 1, 256).mapInPandas(_identity, schema="id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    # warm the localCheckpoint machinery (block-manager write path +
-    # codegen classloading, ~3.5s one-time) used by the materialized
-    # dedup intermediates
-    spark.range(32).localCheckpoint(eager=True)
+    spark = _harness.session("bench")
+    _harness.warm(spark, sf_dir)
 
     all_passes: dict[str, list[float]] = {}
 
@@ -188,10 +166,7 @@ def main() -> None:
         out: dict[str, float] = {}
         for _ in range(2):
             for name in names:
-                fn = registry.QUERIES[name]
-                t0 = time.monotonic()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                dt = round(time.monotonic() - t0, 3)
+                dt = _harness.run(spark, name, sf_dir).wall
                 all_passes.setdefault(name, []).append(dt)
                 if name not in out or dt < out[name]:
                     out[name] = dt
@@ -219,7 +194,7 @@ def main() -> None:
         "passes": 2,
         "pass_times": all_passes,
     }
-    detail_path = os.path.join(REPO_ROOT, "BENCH_DETAIL.json")
+    detail_path = os.path.join(_harness.REPO, "BENCH_DETAIL.json")
     try:
         with open(detail_path, "w") as f:
             json.dump(detail, f, indent=1)
@@ -247,6 +222,7 @@ def main() -> None:
             "panel4_total": round(sum(panel4.values()), 3),
             "panel5_total": round(sum(panel5.values()), 3),
             "sf": sf,
+            "cpus": spark.sparkContext.defaultParallelism,
             "load1_at_start": start_load1,
             "load5_at_start": start_load5,
             "loadgate_waited_s": waited_s,

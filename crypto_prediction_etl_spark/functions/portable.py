@@ -26,8 +26,17 @@ Same trick for hashes: both engines have md5 over UTF-8 bytes, so a
 
 from __future__ import annotations
 
+import hashlib
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# The mapInPandas kernels call py_hash64 on the Python workers, which
+# need not be able to import this package: ship this module's functions
+# to them by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def prnd(col: Column | str, digits: int) -> Column:
@@ -54,3 +63,8 @@ def hash64(col: Column | str) -> Column:
 def o_hash64(expr: str) -> str:
     """DuckDB SQL text equivalent of :func:`hash64`."""
     return f"CAST(('0x' || substr(md5(CAST(({expr}) AS VARCHAR)), 1, 15)) AS BIGINT)"
+
+
+def py_hash64(s: str) -> int:
+    """Python equivalent of :func:`hash64`, for the mapInPandas kernels."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..functions.portable import hash64, prnd
+from ..functions.portable import hash64, prnd, py_hash64
 from ..sources.readers import spread_small_scan
 from .text import fingerprint_md5, tokens, word_shingles
 from ..pinning import pin_frame
@@ -510,12 +510,9 @@ def _minhash_sigs_from_arrays(arrays: DataFrame, id_col: str) -> DataFrame:
     prime = MINHASH_PRIME
 
     def fn(batches):
-        import hashlib
-
         import numpy as np
         import pandas as pd
 
-        md5 = hashlib.md5
         A = np.array(a_np, dtype=np.int64)[None, :]
         B = np.array(b_np, dtype=np.int64)[None, :]
         for batch in batches:
@@ -525,10 +522,7 @@ def _minhash_sigs_from_arrays(arrays: DataFrame, id_col: str) -> DataFrame:
                 if shs is None or len(shs) == 0:
                     continue
                 h = np.fromiter(
-                    (
-                        int(md5(s.encode("utf-8")).hexdigest()[:15], 16) % prime
-                        for s in shs
-                    ),
+                    (py_hash64(s) % prime for s in shs),
                     dtype=np.int64,
                     count=len(shs),
                 )
@@ -724,12 +718,9 @@ def simhash_signatures(
     exotic Unicode case mappings (e.g. U+0130)."""
 
     def fn(batches):
-        import hashlib
-
         import numpy as np
         import pandas as pd
 
-        md5 = hashlib.md5
         shifts = np.arange(bits, dtype=np.uint64)
         for b in batches:
             ids = []
@@ -739,12 +730,7 @@ def simhash_signatures(
                     continue
                 toks = txt.lower().split(" ")
                 h = np.fromiter(
-                    (
-                        int(md5(t.encode("utf-8")).hexdigest()[:15], 16)
-                        for t in toks
-                    ),
-                    dtype=np.uint64,
-                    count=len(toks),
+                    (py_hash64(t) for t in toks), dtype=np.uint64, count=len(toks)
                 )
                 ones = ((h[:, None] >> shifts) & 1).sum(axis=0, dtype=np.int64)
                 s = 2 * ones - len(toks)

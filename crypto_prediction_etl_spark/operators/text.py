@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..functions.portable import py_hash64
+
 # ---------------------------------------------------------------------------
 # Tokenization / shingling
 # ---------------------------------------------------------------------------
@@ -150,11 +152,8 @@ def span_hash_rows(
     ASCII text — same scope as the simhash kernel."""
 
     def fn(batches):
-        import hashlib
-
         import pandas as pd
 
-        md5 = hashlib.md5
         for b in batches:
             ids = []
             hs = []
@@ -164,8 +163,7 @@ def span_hash_rows(
                 toks = txt.lower().split(" ")
                 n = len(toks)
                 for i in range(n - k + 1):
-                    s = " ".join(toks[i : i + k])
-                    hs.append(int(md5(s.encode("utf-8")).hexdigest()[:15], 16))
+                    hs.append(py_hash64(" ".join(toks[i : i + k])))
                     ids.append(did)
             yield pd.DataFrame({id_col: ids, "h": hs})
 

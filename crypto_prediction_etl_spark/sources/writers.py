@@ -150,12 +150,19 @@ def upsert_by_key(
 ) -> DataFrame:
     """MERGE-emulation (S11 Cassandra upsert): union + keep newest row
     per PK by ``order_cols`` desc. Shuffles once on the PK hash."""
+    unioned = existing.unionByName(updates, allowMissingColumns=True)
+    return latest_per_key(unioned, pk_cols, order_cols)
+
+
+def latest_per_key(
+    df: DataFrame, pk_cols: list[str], order_cols: list[str]
+) -> DataFrame:
+    """The newest row per PK: first by ``order_cols`` descending."""
     from pyspark.sql import Window as W
 
-    unioned = existing.unionByName(updates, allowMissingColumns=True)
     w = W.partitionBy(*pk_cols).orderBy(*[F.desc(c) for c in order_cols])
     return (
-        unioned.withColumn("_rn", F.row_number().over(w))
+        df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )

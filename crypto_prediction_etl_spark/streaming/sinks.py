@@ -17,8 +17,10 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.writers import latest_per_key
 
 
 def upsert_append_writer(out_dir: str):
@@ -45,13 +47,7 @@ def read_hot_table(
     ``order_cols`` break ties among duplicate PKs (newest wins) —
     e.g. ["ts_insert_utc", "_epoch"].
     """
-    df = spark.read.parquet(path)
-    w = W.partitionBy(*pk_cols).orderBy(*[F.desc(c) for c in order_cols])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return latest_per_key(spark.read.parquet(path), pk_cols, order_cols)
 
 
 def kafka_source_options(

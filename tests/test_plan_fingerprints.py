@@ -57,6 +57,18 @@ def test_normalize_plan_is_session_independent():
     assert normalize_plan("lambda x_1#14L * 8") == normalize_plan(
         "lambda x_7#2L * 8"
     )
+    # a partition count equal to the session's parallelism is the host's
+    # core count, folded; any other count is the builder's and must stay
+    for plan in ("Repartition {}, true", "Range (0, 16, step=1, splits=Some({}))"):
+        assert normalize_plan(plan.format(4), 4) == normalize_plan(
+            plan.format(32), 32
+        )
+        assert normalize_plan(plan.format(8), 4) != normalize_plan(
+            plan.format(16), 4
+        )
+        assert normalize_plan(plan.format(8), 4) != normalize_plan(
+            plan.format(4), 4
+        )
 
 
 def test_ledger_covers_every_registered_query():

@@ -13,7 +13,7 @@ empty text.
 
 from pyspark.sql import functions as F
 
-from crypto_prediction_etl_spark.functions.portable import hash64
+from crypto_prediction_etl_spark.functions.portable import hash64, py_hash64
 from crypto_prediction_etl_spark.operators.text import (
     span_hash_rows,
     tokens,
@@ -30,6 +30,16 @@ def _expr_form(docs, k):
         .select("doc_id", F.explode("shs").alias("s"))
         .select("doc_id", hash64("s").alias("h"))
     )
+
+
+def test_py_hash64_matches_spark_hash64(spark):
+    """The kernels' Python-side hash equals Spark's hash64 on the same
+    UTF-8 bytes, including the empty string and non-ASCII text."""
+    words = ["", "a", "bitcoin price", "Ünïcödé ß", "日本語テキスト", "emoji 🚀"]
+    got = spark.createDataFrame([(w,) for w in words], "s string").select(
+        "s", hash64("s").alias("h")
+    )
+    assert {r.s: r.h for r in got.collect()} == {w: py_hash64(w) for w in words}
 
 
 def test_span_kernel_bit_identical_on_corpus(spark, sf_dir):

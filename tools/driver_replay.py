@@ -7,13 +7,11 @@ Prints one verdict line per query and ends with a JSON verdict line.
 
 Usage: python tools/driver_replay.py [--sf DIR] [name-prefix ...]
 """
-import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from _harness import select, session
 
 import __spark_entry__ as entrymod
-from crypto_prediction_etl_spark.session import get_spark
 from tests.oracle import replay
 
 SF = "/root/testdata/sf0.01"
@@ -25,7 +23,7 @@ SF = "/root/testdata/sf0.01"
 if sys.argv[1:2] == ["--sf"]:
     SF = sys.argv[2]
     del sys.argv[1:3]
-spark = get_spark("driver-replay")
+spark = session("driver-replay")
 
 # 1. smoke: entry()
 df = entrymod.entry(spark)
@@ -37,8 +35,5 @@ assert len(rows) > 0
 # checks after touching a few plans: `python tools/driver_replay.py
 # q267 q280`); no args = full gate, the only form that counts as the
 # round-close verification.
-prefixes = tuple(sys.argv[1:])
-names = sorted(
-    n for n in entrymod.queries() if not prefixes or n.startswith(prefixes)
-)
+names = select(sys.argv[1:], sorted(entrymod.queries()))
 sys.exit(replay(spark, SF, names, metric="driver_replay"))

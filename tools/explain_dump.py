@@ -1,7 +1,7 @@
-"""Dump .explain("formatted") for named queries to plans/r13/<q>_<tag>.txt.
+"""Dump .explain("formatted") for named queries to plans/<tag>/<q>.txt.
 
 Usage: python tools/explain_dump.py <tag> <query> [query ...]
-  tag is e.g. "before" or "after"; files land in plans/r13/.
+  tag is e.g. "before" or "after"; files land in plans/<tag>/.
 
 The dump captures the INITIAL adaptive plan (AdaptiveSparkPlan
 isFinalPlan=false) — join strategies, exchange placement, pushed
@@ -11,29 +11,21 @@ plan-shape claims in OPTIMIZATION_r12.md reference.
 import os
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-from crypto_prediction_etl_spark.plans import registry  # noqa: E402
-from crypto_prediction_etl_spark.session import get_spark  # noqa: E402
-
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(REPO, "plans", "r13")
+from _harness import REPO, SF_DIR, registry, session
 
 
 def main() -> int:
     tag = sys.argv[1]
     names = sys.argv[2:]
-    registry.load_all()
-    spark = get_spark("explain-dump")
-    spark.sparkContext.setLogLevel("ERROR")
-    os.makedirs(OUT, exist_ok=True)
+    spark = session("explain-dump")
+    out = os.path.join(REPO, "plans", tag)
+    os.makedirs(out, exist_ok=True)
     for name in names:
-        df = registry.QUERIES[name](spark, SF)
+        df = registry.QUERIES[name](spark, SF_DIR)
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = os.path.join(OUT, f"{name}_{tag}.txt")
+        path = os.path.join(out, f"{name}.txt")
         with open(path, "w") as f:
             f.write(txt)
         print(f"wrote {path} ({len(txt)} chars)")

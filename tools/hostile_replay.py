@@ -40,8 +40,7 @@ import hashlib
 import os
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from _harness import select
 
 ALWAYS = [
     "q153_curriculum_shards",
@@ -210,6 +209,5 @@ if _sample_k is not None:
     names = sorted(set(ranked[:_sample_k]) | set(ALWAYS))
     tags["sample"] = [_sample_k, _sample_salt]
 else:
-    prefixes = tuple(_positional)
-    names = [n for n in all_names if not prefixes or n.startswith(prefixes)]
+    names = select(_positional, all_names)
 sys.exit(replay(spark, SF, names, **tags))

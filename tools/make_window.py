@@ -31,9 +31,7 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from crypto_prediction_etl_spark.plans import registry  # noqa: E402
+from _harness import REPO, registry
 
 WINDOW = 50
 
@@ -64,7 +62,6 @@ def green_adjudicated(repo: str) -> set[str]:
 
 
 def main() -> None:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     registry.load_all()
     names = set(registry.QUERIES)
     args = sys.argv[1:]
@@ -73,7 +70,7 @@ def main() -> None:
     bad = [p for p in picks if p not in names]
     if bad:
         sys.exit(f"unknown pick(s), not in registry: {bad}")
-    rounds = green_verdict_rounds(repo)
+    rounds = green_verdict_rounds(REPO)
     done = set(rounds)
 
     def qnum(n: str) -> int:

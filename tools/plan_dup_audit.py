@@ -46,15 +46,10 @@ Usage:
 
 import hashlib
 import json
-import os
 import re
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-from crypto_prediction_etl_spark.plans import registry  # noqa: E402
-from crypto_prediction_etl_spark.session import get_spark  # noqa: E402
+from _harness import registry, select, session
 
 SF_DIR = "/root/testdata/sf0.01"
 MIN_NODES = 4
@@ -231,12 +226,8 @@ def main() -> int:
         else:
             SF_DIR = args[1]
         args = args[2:]
-    prefixes = tuple(args)
-    registry.load_all()
-    spark = get_spark()
-    names = [
-        n for n in registry.QUERIES if not prefixes or n.startswith(prefixes)
-    ]
+    spark = session("plan-dup-audit")
+    names = select(args)
     rows = []
     errs = 0
     for name in names:

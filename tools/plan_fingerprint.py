@@ -12,10 +12,11 @@ from ``__spark_entry__._ADJUDICATE_FIRST``.
 Fingerprint = md5 over
   * the normalized ANALYZED plan of the query at the ledger sf_dir
     (expression ids and lambda variables renumbered in
-    first-appearance order, data paths folded to <SF> — so the hash is
-    stable across sessions, build order, and memo warmth: a
-    memo-reused LogicalRDD and a freshly checkpointed one normalize to
-    the same string), plus
+    first-appearance order, data paths folded to <SF>, partition counts
+    equal to the session's defaultParallelism folded to <PAR> — so the
+    hash is stable across sessions, hosts, build order, and memo
+    warmth: a memo-reused LogicalRDD and a freshly checkpointed one
+    normalize to the same string), plus
   * the query's DuckDB oracle SQL text (an oracle re-derivation — as
     in q141 r8 — also invalidates a verdict).
 
@@ -52,10 +53,8 @@ import os
 import re
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-from crypto_prediction_etl_spark.plans import registry  # noqa: E402
+from _harness import REPO, registry, session
+from make_window import green_verdict_rounds
 
 LEDGER = os.path.join(REPO, "PLAN_FINGERPRINTS.json")
 SF_DIR = "/root/testdata/sf0.01"
@@ -66,10 +65,16 @@ _PLAN_ID = re.compile(r"plan_id=\d+")
 # higher-order-function variables carry a session-global counter
 # ("lambda x_1#14L" vs "lambda x_2#14L" for the same code)
 _LAMBDA_VAR = re.compile(r"\blambda ([A-Za-z]\w*?)_\d+")
+# partition counts a builder takes from defaultParallelism, i.e. the
+# host's core count: ``df.repartition(par)`` and ``spark.range(n)``
+_PAR_COUNT = r"(Repartition |splits=Some\(){}\b"
 
 
-def normalize_plan(plan: str) -> str:
-    """Session-independent canonical form of a plan string."""
+def normalize_plan(plan: str, par: int | None = None) -> str:
+    """Session-independent canonical form of a plan string; ``par`` is
+    the session's defaultParallelism."""
+    if par is not None:
+        plan = re.sub(_PAR_COUNT.format(par), r"\1<PAR>", plan)
     plan = _PATH.sub("<SF>", plan)
     plan = _PLAN_ID.sub("plan_id=N", plan)
     plan = _LAMBDA_VAR.sub(r"lambda \1_N", plan)
@@ -88,7 +93,7 @@ def fingerprint(spark, name: str, sf_dir: str = SF_DIR) -> str:
     df = registry.QUERIES[name](spark, sf_dir)
     plan = df._jdf.queryExecution().analyzed().toString()
     blob = (
-        normalize_plan(plan)
+        normalize_plan(plan, spark.sparkContext.defaultParallelism)
         + "\n==oracle==\n"
         + registry.ORACLES.get(name, "")
     )
@@ -100,29 +105,6 @@ def load_ledger() -> dict:
         return {"sf_dir": SF_DIR, "entries": {}}
     with open(LEDGER) as f:
         return json.load(f)
-
-
-def latest_green_round(repo: str) -> dict[str, int]:
-    """name -> highest round number with a green driver verdict."""
-    import glob
-
-    out: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        with open(path) as f:
-            payload = json.load(f)
-        entries = payload.get("queries", payload)
-        if not isinstance(entries, dict):
-            continue
-        for k, v in entries.items():
-            if (
-                isinstance(v, dict)
-                and v.get("rows_match") is True
-                and v.get("hash_match") is True
-                and v.get("err") is None
-            ):
-                out[k] = max(out.get(k, 0), rnd)
-    return out
 
 
 def compute_all(spark, names=None) -> dict[str, str]:
@@ -142,15 +124,11 @@ def main() -> int:
         mode = argv[0][2:]
         argv = argv[1:]
 
-    registry.load_all()
-    from crypto_prediction_etl_spark.session import get_spark
-
-    spark = get_spark("plan-fingerprint")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("plan-fingerprint")
 
     names = argv or list(registry.QUERIES)
     fps = compute_all(spark, names)
-    verdict_rounds = latest_green_round(REPO)
+    verdict_rounds = green_verdict_rounds(REPO)
     ledger = load_ledger()
     entries = ledger["entries"]
 

@@ -1,11 +1,12 @@
 """Scaling-curve probe: time representative queries at sf0.01 and
 sf0.1 in one warmed session and report the 10x-data cost ratio.
 
-timing_sweep.py finds ABSOLUTE hotspots at one scale; this probe finds
-CURVE SHAPE — an operator whose cost multiplies by much more than the
-10x data factor is super-linear and will not survive the next 100x,
-even if its absolute sf0.1 number still looks small.  (This is how the
-r5 LOF/MMD theta joins would have been caught one round earlier.)
+The ab_measure.py sweep finds ABSOLUTE hotspots at one scale; this
+probe finds CURVE SHAPE — an operator whose cost multiplies by much
+more than the 10x data factor is super-linear and will not survive the
+next 100x, even if its absolute sf0.1 number still looks small.  (This
+is how the r5 LOF/MMD theta joins would have been caught one round
+earlier.)
 
 Interpretation at local[32]: with fixed per-query overheads
 (planning, job scheduling, tiny-stage latency) a perfectly linear
@@ -19,15 +20,9 @@ exceeds FLAG_RATIO.
 """
 
 import json
-import os
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-from crypto_prediction_etl_spark.plans import registry  # noqa: E402
-from crypto_prediction_etl_spark.session import get_spark  # noqa: E402
+from _harness import run, select, session, warm
 
 SF_SMALL = "/root/testdata/sf0.01"
 SF_BIG = "/root/testdata/sf0.1"
@@ -71,27 +66,10 @@ DEFAULT = [
 
 
 def main() -> int:
-    registry.load_all()
-    spark = get_spark("scaling-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    prefixes = tuple(sys.argv[1:])
-    names = [
-        n
-        for n in (DEFAULT if not prefixes else sorted(registry.QUERIES))
-        if not prefixes or n.startswith(prefixes)
-    ]
-
-    # warm codegen + python workers once (bench.py's warmup rationale)
-    registry.QUERIES["q01_pricing_summary"](spark, SF_SMALL).write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    def run(name: str, sf_dir: str) -> float:
-        t0 = time.monotonic()
-        registry.QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.monotonic() - t0
+    spark = session("scaling-probe")
+    prefixes = sys.argv[1:]
+    names = select(prefixes, None if prefixes else DEFAULT)
+    warm(spark, SF_SMALL)
 
     rows = []
     flagged = []
@@ -100,8 +78,8 @@ def main() -> int:
         # corpus queries memoize shared derivations, and a cold/warm
         # mix fabricates huge ratios (q45's pair set: 1.0s cold,
         # 0.03s memoized) that say nothing about curve shape
-        t_small = min(run(name, SF_SMALL), run(name, SF_SMALL))
-        t_big = min(run(name, SF_BIG), run(name, SF_BIG))
+        t_small = min(run(spark, name, SF_SMALL).wall for _ in range(2))
+        t_big = min(run(spark, name, SF_BIG).wall for _ in range(2))
         ratio = t_big / t_small if t_small > 0 else float("inf")
         mark = ""
         if ratio > FLAG_RATIO:

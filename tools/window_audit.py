@@ -23,11 +23,7 @@ import os
 import re
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-from crypto_prediction_etl_spark.plans import registry  # noqa: E402
-from crypto_prediction_etl_spark.session import get_spark  # noqa: E402
+from _harness import registry, select, session
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -193,15 +189,8 @@ def capture_checkpoint_plans(store: list):
 
 
 def main() -> int:
-    registry.load_all()
-    spark = get_spark("window-audit")
-    spark.sparkContext.setLogLevel("ERROR")
-    prefixes = tuple(sys.argv[1:])
-    names = [
-        n
-        for n in sorted(registry.QUERIES)
-        if not prefixes or n.startswith(prefixes)
-    ]
+    spark = session("window-audit")
+    names = select(sys.argv[1:])
     hits = 0
     for name in names:
         pinned: list[str] = []
