@@ -42,22 +42,20 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver adjudicates exactly the first 50 ``queries()`` entries per
-# round.  Round-13 rotation (optimization round 2): mandatory picks =
-# every query whose declared plan this round's optimization batches
-# touch (the r12-verdict protocol: changed queries are exactly the
-# ones re-verified).  Inherited-WIP picks: q249 (regex-greedy BPE
-# rewrite), q367 (min/max/count + complement-algebra restructure),
-# q44 (collect_set posting lists), q45/q48/q51/q52/q85/q112/q113/q141
-# (minhash signature derivation moved to the md5 mapInPandas kernel —
-# pin-hidden from the fingerprint ledger, so staged explicitly),
-# q46 (kernel null guard).  Round-13 batch picks: q215/q278 (kernel
-# signatures + posting-list exact baseline).  All oracle-replayed
-# green at sf0.01 AND sf0.001 before staging (tools/driver_replay.py).
-# Remaining 36 seats are the mechanical age fill
-# (python tools/make_window.py --fill-oldest: r3-r12 oldest verdicts).
+# round.  Mandatory picks = every query whose analyzed plan changed
+# since its last green verdict (tools/plan_fingerprint.py drift):
+# q249/q367/q85 (inherited round-13 rewrites, still unadjudicated) and
+# the 15 indicator queries moved by the lean window stages — one
+# projection per window stage in with_window_indicators, one
+# withColumns in n_multiple_rescale, no NaN guards after the
+# grouped-map kernels (q30, q32-q39, q145, q146, q176, q222, q299,
+# q312).  All oracle-replayed green at sf0.01 AND sf0.001 before
+# staging (tools/driver_replay.py).  Remaining 32 seats are the
+# mechanical age fill (python tools/make_window.py --fill-oldest
+# <picks>: oldest green verdicts first).
 #
-# r10-r12 audit trail (superseded windows) lives in git history and
-# CORRECTNESS_r{10,11,12}.json; every previously adjudicated query
+# r10-r13 audit trail (superseded windows) lives in git history and
+# CORRECTNESS_r{10,11,12,13}.json; every previously adjudicated query
 # keeps its green row and stays covered by the local mirror
 # (tools/driver_replay.py, pandas-canonical) plus the independent
 # numpy/pandas cross-checks in tests/test_r6_tail_pandas.py,
@@ -65,54 +63,54 @@ def entry(spark: SparkSession) -> DataFrame:
 _ADJUDICATE_FIRST = [
     "q249_bpe_train",
     "q367_span_dedup",
-    "q44_ngram_jaccard_pairs",
-    "q45_minhash_lsh_pairs",
-    "q46_simhash",
-    "q48_dedup_clusters",
-    "q51_embedding_near_dup",
-    "q52_bucketed_ann",
     "q85_incremental_dedup",
-    "q112_prefix_filter_join",
-    "q113_containment_dedup",
-    "q141_edit_distance_pairs",
-    "q215_lsh_recall_report",
-    "q278_minhash_error_audit",
-    "q142_event_transitions",
-    "q144_jl_projection",
-    "q23_approx_aggregates",
-    "q55_kmeans_clusters",
-    "q71_multimodal_features",
-    "q124_mfi",
-    "q125_donchian",
-    "q126_chaikin_adl",
-    "q127_pivot_points",
-    "q128_char_entropy",
+    "q30_sma_bollinger",
+    "q32_indicator_mart",
+    "q33_stochastic",
+    "q34_ichimoku",
+    "q35_aroon",
+    "q36_rescale_roc",
+    "q37_ema",
+    "q38_macd",
+    "q39_rsi_wilder",
     "q145_adx",
     "q146_trix",
-    "q147_cci",
-    "q148_top_supplier",
-    "q149_supplier_diversity",
-    "q150_small_quantity_revenue",
-    "q151_large_orders",
-    "q152_weighted_jaccard",
-    "q155_rolling_beta",
-    "q156_percentile_cont",
-    "q158_bigram_nll",
-    "q159_key_skew_profile",
-    "q160_snapshot_diff",
-    "q161_scd2_intervals",
-    "q162_out_of_order",
-    "q163_cogrouped_adjust",
-    "q166_feature_hashing",
-    "q167_knn_eval",
-    "q168_ab_test_stats",
-    "q169_histogram",
-    "q170_embedding_dim_stats",
-    "q171_quantile_transform",
-    "q172_feature_matrix",
-    "q173_rolling_pair_corr",
-    "q174_seasonal_decompose",
-    "q175_cusum_changepoint",
+    "q176_kalman_level",
+    "q222_ewma_vol",
+    "q299_holt_winters",
+    "q312_garch_filter",
+    "q177_benford_digits",
+    "q178_revenue_concentration",
+    "q179_target_encoding",
+    "q180_session_paths",
+    "q181_sequence_anomaly",
+    "q182_temporal_dim_join",
+    "q183_cohort_ltv",
+    "q184_group_hash_sample",
+    "q185_tick_rule_flow",
+    "q186_amihud_illiquidity",
+    "q157_token_ids",
+    "q187_underwater_streaks",
+    "q188_centroid_outliers",
+    "q189_hurst_exponent",
+    "q190_subsample_stability",
+    "q191_user_entropy",
+    "q192_gini_coefficient",
+    "q193_ks_test",
+    "q194_psi_drift",
+    "q195_lorenz_deciles",
+    "q196_robust_zscore",
+    "q197_seasonality_strength",
+    "q198_integrity_audit",
+    "q199_column_profile",
+    "q200_curation_funnel",
+    "q201_tfidf_keywords",
+    "q202_langid_confusion",
+    "q203_autocorrelation",
+    "q204_basket_lift",
+    "q205_ar1_fit",
+    "q206_volume_profile",
+    "q207_rapid_duplicates",
 ]
 
 

@@ -168,40 +168,37 @@ def with_window_indicators(candles: DataFrame, round_to: int = 2) -> DataFrame:
         aroon_down.alias("aroon_down"),
     )
 
-    # stage 2: compositions over stage-1 columns
+    # stage 2: compositions over stage-1 columns; senkou spans plotted 26
+    # ahead, chikou 26 behind (SURVEY hard part 2); obv_sma is SMA(10) of
+    # OBV (reference W9 optional output)
     k_frame = w.rowsBetween(-2, 0)
-    df = df.withColumn(
-        "stoch_k",
-        F.when(
-            F.count("_raw_k").over(k_frame) >= 3, F.avg("_raw_k").over(k_frame)
-        ),
+    obv_frame = w.rowsBetween(-9, 0)
+    df = df.select(
+        "*",
+        F.when(F.count("_raw_k").over(k_frame) >= 3, F.avg("_raw_k").over(k_frame))
+        .alias("stoch_k"),
+        F.lag((F.col("tenkan_sen") + F.col("kijun_sen")) / 2.0, 26)
+        .over(w)
+        .alias("senkou_span_a"),
+        F.lag("_senkou_b_raw", 26).over(w).alias("senkou_span_b"),
+        F.lead("close", 26).over(w).alias("chikou_span"),
+        (F.col("aroon_up") - F.col("aroon_down")).alias("aroon_oscillator"),
+        F.when(F.count("obv").over(obv_frame) >= 10, F.avg("obv").over(obv_frame))
+        .alias("obv_sma"),
     )
-    df = df.withColumn(
-        "stoch_d",
-        F.when(
-            F.count("stoch_k").over(k_frame) >= 3, F.avg("stoch_k").over(k_frame)
-        ),
+
+    # stage 3: %D = SMA(3) of %K and %J = 3K - 2D, placed right after %K
+    stoch_d = F.when(
+        F.count("stoch_k").over(k_frame) >= 3, F.avg("stoch_k").over(k_frame)
     )
-    df = df.withColumn("stoch_j", 3.0 * F.col("stoch_k") - 2.0 * F.col("stoch_d"))
-    # senkou spans plotted 26 ahead; chikou 26 behind (SURVEY hard part 2)
-    df = df.withColumn(
-        "senkou_span_a",
-        F.lag((F.col("tenkan_sen") + F.col("kijun_sen")) / 2.0, 26).over(w),
+    keep = [c for c in df.columns if c not in ("_raw_k", "_senkou_b_raw", "_aroon_rn")]
+    k = keep.index("stoch_k") + 1
+    return df.select(
+        *keep[:k],
+        stoch_d.alias("stoch_d"),
+        (3.0 * F.col("stoch_k") - 2.0 * stoch_d).alias("stoch_j"),
+        *keep[k:],
     )
-    df = df.withColumn("senkou_span_b", F.lag("_senkou_b_raw", 26).over(w))
-    df = df.withColumn("chikou_span", F.lead("close", 26).over(w))
-    df = df.withColumn(
-        "aroon_oscillator", F.col("aroon_up") - F.col("aroon_down")
-    )
-    # obv_sma: SMA(10) of OBV (reference W9 optional output)
-    df = df.withColumn(
-        "obv_sma",
-        F.when(
-            F.count("obv").over(w.rowsBetween(-9, 0)) >= 10,
-            F.avg("obv").over(w.rowsBetween(-9, 0)),
-        ),
-    )
-    return df.drop("_raw_k", "_senkou_b_raw", "_aroon_rn")
 
 
 # ---------------------------------------------------------------------------
@@ -215,7 +212,11 @@ def _per_id(df: DataFrame, cols: list[str], step) -> DataFrame:
     Each id's rows arrive as one pandas frame sorted by dt; ``step(pdf)``
     returns one array per entry of ``cols``. The output is the input
     columns plus ``cols`` as doubles. The inner function keeps the name
-    ``kernel``: it is the UDF name in the analyzed plan."""
+    ``kernel``: it is the UDF name in the analyzed plan.
+
+    A NaN in a kernel's output is SQL NULL in Spark: PySpark's Arrow
+    conversion masks pandas ``isnull()``, so warm-up rows compare equal
+    to the oracles' NULL and no caller needs a NaN guard."""
     names = df.columns
     out_schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema]
@@ -303,12 +304,7 @@ def with_recursive_indicators(candles_or_ind: DataFrame) -> DataFrame:
             _wilder_rsi(close, 14),
         )
 
-    out = _per_id(candles_or_ind, RECURSIVE_COLS, step)
-    # pandas NaN arrives as a double NaN, not SQL NULL — normalize so the
-    # warm-up rows compare equal to SQL oracles (NULL) downstream
-    for c in RECURSIVE_COLS:
-        out = out.withColumn(c, F.when(~F.isnan(c), F.col(c)))
-    return out
+    return _per_id(candles_or_ind, RECURSIVE_COLS, step)
 
 
 def n_multiple_rescale(candles: DataFrame, small_ids: list[str], factor: float = 1000.0) -> DataFrame:
@@ -316,11 +312,8 @@ def n_multiple_rescale(candles: DataFrame, small_ids: list[str], factor: float =
     multiplier as an output column for parity (reference:
     D_Create_crypto_ind_day_001.py:48,60-62,112 — SHIB_USDT x1000)."""
     mult = F.when(F.col("id").isin(small_ids), F.lit(factor)).otherwise(F.lit(1.0))
-    out = candles.withColumn("n_multiple", mult)
-    for c in ("open", "high", "low", "close"):
-        if c in candles.columns:
-            out = out.withColumn(c, F.col(c) * F.col("n_multiple"))
-    return out
+    prices = [c for c in ("open", "high", "low", "close") if c in candles.columns]
+    return candles.withColumns({"n_multiple": mult, **{c: F.col(c) * mult for c in prices}})
 
 
 def indicator_frame(candles: DataFrame) -> DataFrame:

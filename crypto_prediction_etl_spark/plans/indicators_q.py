@@ -1973,7 +1973,7 @@ def q145_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.indicators import adx
 
     out = adx(candles(spark, sf_dir))
-    return out.filter(F.col("adx").isNotNull() & ~F.isnan("adx")).select(
+    return out.filter(F.col("adx").isNotNull()).select(
         "id",
         "dt",
         prnd("atr", 2).alias("atr_14"),
@@ -2045,7 +2045,7 @@ def q146_trix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.indicators import trix
 
     out = trix(candles(spark, sf_dir))
-    return out.filter(F.col("trix").isNotNull() & ~F.isnan("trix")).select(
+    return out.filter(F.col("trix").isNotNull()).select(
         "id",
         "dt",
         prnd("ema3", 2).alias("ema3_15"),
@@ -2656,9 +2656,7 @@ def q176_kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.indicators import kalman_level
 
     out = kalman_level(candles(spark, sf_dir))
-    return out.filter(
-        F.col("kalman_gain").isNotNull() & ~F.isnan("kalman_gain")
-    ).select(
+    return out.filter(F.col("kalman_gain").isNotNull()).select(
         "id",
         "dt",
         prnd("kalman_level", 2).alias("kalman_level"),
@@ -3600,7 +3598,7 @@ def q222_ewma_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.indicators import ewma_volatility
 
     out = ewma_volatility(candles(spark, sf_dir), _Q222_LAMBDA)
-    return out.filter(F.col("ewma_var").isNotNull() & ~F.isnan("ewma_var")).select(
+    return out.filter(F.col("ewma_var").isNotNull()).select(
         "id",
         "dt",
         prnd("ret", 6).alias("ret"),
@@ -4668,9 +4666,7 @@ def q299_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.indicators import holt_winters_additive
 
     out = holt_winters_additive(candles(spark, sf_dir))
-    return out.filter(
-        F.col("hw_season").isNotNull() & ~F.isnan("hw_season")
-    ).select(
+    return out.filter(F.col("hw_season").isNotNull()).select(
         "id",
         "dt",
         prnd("hw_level", 4).alias("hw_level"),
@@ -5115,9 +5111,7 @@ def q312_garch_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.indicators import garch_filter
 
     out = garch_filter(candles(spark, sf_dir))
-    return out.filter(
-        F.col("garch_var").isNotNull() & ~F.isnan("garch_var")
-    ).select(
+    return out.filter(F.col("garch_var").isNotNull()).select(
         "id",
         "dt",
         prnd("ret", 6).alias("ret"),

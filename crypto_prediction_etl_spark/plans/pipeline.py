@@ -55,25 +55,20 @@ def run_indicator_mart(
     - ``update_days``: trailing window actually (re)written (reference:
       1 month, :90).
     - ``small_ids``: W13 N_multiple rescale targets.
-    """
-    max_dt = candles.agg(F.max("dt").alias("mx"))
-    if lookback_days is not None:
-        candles = candles.join(F.broadcast(max_dt)).filter(
-            F.col("dt") >= F.date_sub(F.col("mx"), lookback_days)
-        ).drop("mx")
-    if small_ids:
-        candles = n_multiple_rescale(candles, small_ids)
-    else:
-        candles = candles.withColumn("n_multiple", F.lit(1.0))
 
-    ind = indicator_frame(candles)
+    Both windows end at the input's ``max(dt)``, aggregated once and
+    carried through the indicator stages as ``_mx``.
+    """
+    if lookback_days is not None or update_days is not None:
+        candles = candles.join(F.broadcast(candles.agg(F.max("dt").alias("_mx"))))
+    if lookback_days is not None:
+        candles = candles.filter(F.col("dt") >= F.date_sub("_mx", lookback_days))
+    ind = indicator_frame(n_multiple_rescale(candles, small_ids or []))
     if update_days is not None:
-        ind = ind.join(F.broadcast(max_dt)).filter(
-            F.col("dt") >= F.date_sub(F.col("mx"), update_days)
-        ).drop("mx")
+        ind = ind.filter(F.col("dt") >= F.date_sub("_mx", update_days))
 
     out = add_partition_cols(
-        ind.withColumn("ts_create_utc", F.col("dt").cast("timestamp"))
+        ind.drop("_mx").withColumn("ts_create_utc", F.col("dt").cast("timestamp"))
     )
     reload_window(out, mart_path)
 

@@ -28,14 +28,10 @@ def add_partition_cols(
     df: DataFrame, ts_col: str = "ts_create_utc", with_hour: bool = False
 ) -> DataFrame:
     """Derive year/month/day[/hour] partition columns from a timestamp."""
-    out = (
-        df.withColumn("year", F.year(ts_col))
-        .withColumn("month", F.month(ts_col))
-        .withColumn("day", F.dayofmonth(ts_col))
-    )
+    parts = {"year": F.year(ts_col), "month": F.month(ts_col), "day": F.dayofmonth(ts_col)}
     if with_hour:
-        out = out.withColumn("hour", F.hour(ts_col))
-    return out
+        parts["hour"] = F.hour(ts_col)
+    return df.withColumns(parts)
 
 
 def write_partitioned(
@@ -135,13 +131,6 @@ def delete_partitions(
     return n
 
 
-def verify_deletion(spark: SparkSession, path: str, predicate: Column | str) -> int:
-    """Post-DELETE check: COUNT(*) of matching rows, expected 0 (A2;
-    reference: trino/D_Load_crypto_candles_day_002.sql:1-6)."""
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    return spark.read.parquet(path).filter(pred).count()
-
-
 def upsert_by_key(
     existing: DataFrame,
     updates: DataFrame,
@@ -194,8 +183,10 @@ def cast_float_storage_edge(df: DataFrame, exclude: tuple[str, ...] = ()) -> Dat
     (ddl/hive/crypto_raw/candles_day.ddl:5-9); casting only at the
     storage edge keeps analytics at double precision while halving
     storage/IO for the wide mart tables."""
-    out = df
-    for name, dtype in df.dtypes:
-        if dtype == "double" and name not in exclude:
-            out = out.withColumn(name, F.col(name).cast("float"))
-    return out
+    return df.withColumns(
+        {
+            name: F.col(name).cast("float")
+            for name, dtype in df.dtypes
+            if dtype == "double" and name not in exclude
+        }
+    )

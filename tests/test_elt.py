@@ -24,7 +24,6 @@ from crypto_prediction_etl_spark.sources.writers import (
     delete_partitions,
     reload_window,
     upsert_by_key,
-    verify_deletion,
     write_partitioned,
 )
 
@@ -78,7 +77,6 @@ def test_delete_partitions_and_verify(spark, workdir):
     write_partitioned(_frame(spark, [1, 2, 3]), path)
     n = delete_partitions(spark, path, "day >= 2")
     assert n == 2
-    assert verify_deletion(spark, path, "day >= 2") == 0
     assert spark.read.parquet(path).count() == 1
     res = check_deletion(spark.read.parquet(path), F.col("day") >= 2)
     assert res.passed

@@ -7,9 +7,13 @@ pandas' own rolling/ewm machinery (not our kernels)."""
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import or_
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from crypto_prediction_etl_spark.operators import indicators as ind
 from crypto_prediction_etl_spark.operators.indicators import (
@@ -320,7 +324,8 @@ def _ohlc_rows():
 def test_per_id_kernel_schema_and_sort(spark, name, cols):
     """Every recursive kernel: output = input columns + its own columns
     as doubles, in order; rows fed in reverse dt order give the same
-    values as sorted rows; a single-row id runs without error."""
+    values as sorted rows; a single-row id runs without error; warm-up
+    rows are NULL, not NaN."""
     schema = "id string, dt date, open double, high double, low double, close double"
     rows = _ohlc_rows()
     fn = getattr(ind, name)
@@ -338,3 +343,10 @@ def test_per_id_kernel_schema_and_sort(spark, name, cols):
     got_fwd, got_rev = ordered(fwd), ordered(rev)
     assert (got_fwd["id"] == "B").sum() == 1
     pd.testing.assert_frame_equal(got_fwd, got_rev)
+
+    # a kernel's NaN reaches Spark as SQL NULL, never as a NaN value
+    assert fwd.filter(reduce(or_, [F.isnan(c) for c in cols])).count() == 0
+    if name == "with_recursive_indicators":
+        ema = fwd.filter("id = 'A'").orderBy("dt").select("ema_30").collect()
+        assert [r.ema_30 for r in ema[:29]] == [None] * 29
+        assert ema[29].ema_30 is not None

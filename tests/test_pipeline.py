@@ -31,11 +31,35 @@ def workdir():
     shutil.rmtree(SCRATCH, ignore_errors=True)
 
 
-def test_indicator_mart_end_to_end(spark, sf_dir, workdir):
+MART_COLUMNS = [
+    "id", "dt", "high", "low", "close", "volume_cents", "volume", "n_multiple",
+    "sma_5", "sma_10", "sma_30", "bb_sma", "bb_upper", "bb_lower", "obv",
+    "tenkan_sen", "kijun_sen", "aroon_up", "aroon_down", "stoch_k", "stoch_d",
+    "stoch_j", "senkou_span_a", "senkou_span_b", "chikou_span",
+    "aroon_oscillator", "obv_sma", "ema_5", "ema_10", "ema_30", "macd",
+    "macd_signal", "macd_histogram", "rsi_14", "ts_create_utc",
+    "year", "month", "day",
+]
+
+
+def _plan_nodes(plan: str, node: str) -> int:
+    return sum(1 for ln in plan.splitlines() if ln.lstrip(" :+-").startswith(node))
+
+
+def test_indicator_mart_end_to_end(spark, sf_dir, workdir, monkeypatch):
+    from crypto_prediction_etl_spark.plans import pipeline
     from crypto_prediction_etl_spark.plans.indicators_q import _with_volume
 
     candles = _with_volume(spark, sf_dir)
     mart = os.path.join(workdir, "indicator_mart")
+    reloaded = []
+    write = pipeline.reload_window
+
+    def spy(df, path, *args, **kwargs):
+        reloaded.append(df)
+        write(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "reload_window", spy)
 
     report = run_indicator_mart(
         spark,
@@ -47,17 +71,13 @@ def test_indicator_mart_end_to_end(spark, sf_dir, workdir):
     )
     assert report.passed, [c for c in report.checks if not c.passed]
     out = spark.read.parquet(mart)
-    cols = set(out.columns)
-    # full indicator contract present
-    for c in (
-        "sma_5", "sma_10", "sma_30", "bb_sma", "bb_upper", "bb_lower",
-        "obv", "stoch_k", "stoch_d", "stoch_j", "tenkan_sen", "kijun_sen",
-        "senkou_span_a", "senkou_span_b", "chikou_span", "aroon_up",
-        "aroon_down", "aroon_oscillator", "ema_5", "ema_10", "ema_30",
-        "macd", "macd_signal", "macd_histogram", "rsi_14", "n_multiple",
-        "year", "month", "day",
-    ):
-        assert c in cols, c
+    # full indicator contract, in the mart's column order
+    assert out.columns == MART_COLUMNS
+    # lean reload plan: max(dt) joined once for both windows, and the
+    # window stages collapse to at most 4 Window operators
+    qe = reloaded[0]._jdf.queryExecution()
+    assert _plan_nodes(qe.analyzed().toString(), "Join") == 1
+    assert _plan_nodes(qe.optimizedPlan().toString(), "Window") <= 4
     # only the trailing update window was written
     span = out.agg(
         F.datediff(F.max("dt"), F.min("dt")).alias("d")
