@@ -142,16 +142,22 @@ def _parse_offset(off) -> dict[str, int] | None:
     return None
 
 
+def progress_dict(progress) -> dict:
+    """A query progress as a plain dict.  A live PySpark 4
+    ``StreamingQueryProgress`` stores each source offset as ``str()`` of
+    the JVM value (a Python repr, not JSON), so its compact ``.json``
+    form is read instead when it has one; offsets then come back parsed."""
+    if isinstance(getattr(progress, "json", None), str):
+        return json.loads(progress.json)
+    return progress
+
+
 def offset_lags(progress: dict) -> dict[str, int] | None:
     """Per-partition offset deltas (endOffset - startOffset) from one
-    query-progress dict, mirroring the reference's per-partition
-    offset_diff map (check_offset_diff.py:39-45). None = unparseable.
-
-    A live PySpark 4 ``StreamingQueryProgress`` stores each source offset
-    as ``str()`` of the JVM value (a Python repr, not JSON), so its
-    compact ``.json`` form is read instead when it has one."""
-    if isinstance(getattr(progress, "json", None), str):
-        progress = json.loads(progress.json)
+    query progress (see ``progress_dict``), mirroring the reference's
+    per-partition offset_diff map (check_offset_diff.py:39-45).
+    None = unparseable."""
+    progress = progress_dict(progress)
     lags: dict[str, int] = {}
     sources = progress.get("sources")
     if not sources:

@@ -15,11 +15,10 @@ end state as Cassandra upsert.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..quality.checks import progress_dict
 from ..sources.writers import latest_per_key
 
 
@@ -133,17 +132,12 @@ def start_file_stream_pipeline(
 def progress_summary(query) -> dict:
     """Offset/rate introspection from lastProgress (reference lag
     monitoring: check_offset_diff.py:39-69, session.py:130-132).
-
-    A live PySpark 4 ``StreamingQueryProgress`` stores each source offset
-    as ``str()`` of the JVM value (a Python repr, not JSON), so its
-    ``.json`` form is read instead when it has one; offsets then come
-    back parsed (a file source's ``{"logOffset": 0}``, None before the
-    first batch)."""
+    Offsets come back parsed by ``progress_dict`` (a file source's
+    ``{"logOffset": 0}``, None before the first batch)."""
     p = query.lastProgress
     if not p:
         return {}
-    if isinstance(getattr(p, "json", None), str):
-        p = json.loads(p.json)
+    p = progress_dict(p)
     return {
         "batchId": p.get("batchId"),
         "numInputRows": p.get("numInputRows"),

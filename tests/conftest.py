@@ -6,8 +6,9 @@ import sys
 import pytest
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if REPO_ROOT not in sys.path:
-    sys.path.insert(0, REPO_ROOT)
+for _p in (REPO_ROOT, os.path.join(REPO_ROOT, "tools")):
+    if _p not in sys.path:
+        sys.path.insert(0, _p)
 
 # The engine's 48g default driver heap lets one long-lived test JVM grow
 # until a 16 GB host OOM-kills it mid-suite; the sf0.001 inputs need far

@@ -117,12 +117,13 @@ def compare_frames(spark_pdf, duck_pdf) -> tuple[str, str]:
     return "PASS", ""
 
 
-def compare_query(spark, con, sf_dir: str, name: str) -> tuple[str, str, int]:
-    """(verdict, detail, Spark row count) for registered query `name`;
-    `con` is a ``duckdb_conn(sf_dir)``."""
-    from crypto_prediction_etl_spark.plans.registry import ORACLES, QUERIES
+def compare_query(df, con, name: str) -> tuple[str, str, int]:
+    """(verdict, detail, Spark row count) for `df`, the built frame of
+    registered query `name`; `con` is a ``duckdb_conn`` on the same
+    sf_dir."""
+    from crypto_prediction_etl_spark.plans.registry import ORACLES
 
-    spdf = QUERIES[name](spark, sf_dir).toPandas()
+    spdf = df.toPandas()
     dpdf = con.execute(ORACLES[name]).df()
     return (*compare_frames(spdf, dpdf), len(spdf))
 
@@ -131,12 +132,15 @@ def replay(spark, sf_dir: str, names, **tags) -> int:
     """Compare every query in `names`, print one verdict line each and a
     closing JSON line that leads with `tags` (``metric``, the hostile
     axes); returns the process exit code."""
+    from crypto_prediction_etl_spark.plans.registry import QUERIES
+
     con = duckdb_conn(sf_dir)
     failed: list[str] = []
     for name in names:
         t0 = time.time()
         try:
-            verdict, detail, rows = compare_query(spark, con, sf_dir, name)
+            df = QUERIES[name](spark, sf_dir)
+            verdict, detail, rows = compare_query(df, con, name)
         except Exception as exc:  # noqa: BLE001 - the driver records ERR
             verdict, detail, rows = "ERR", f"{type(exc).__name__}: {exc}", -1
         if verdict != "PASS":

@@ -1,14 +1,7 @@
 """Name selection in tools/_harness.py, the one query-timing harness
 shared by bench.py and the tools (no Spark session needed)."""
 
-import os
-import sys
-
-TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
-if TOOLS not in sys.path:
-    sys.path.insert(0, TOOLS)
-
-from _harness import registry, select  # noqa: E402
+from _harness import registry, select
 
 
 def test_no_prefix_selects_the_sorted_registry():

@@ -14,20 +14,11 @@ mutations matter:
   pinned/reused plans audit clean.
 """
 
-import os
-import sys
-
 import pytest
+from plan_dup_audit import audit_query, final_section, parse_tree
 from pyspark.sql import functions as F
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-for p in (REPO, os.path.join(REPO, "tools")):
-    if p not in sys.path:
-        sys.path.insert(0, p)
-
-from plan_dup_audit import audit_query, final_section, parse_tree  # noqa: E402
-
-from crypto_prediction_etl_spark.plans import registry  # noqa: E402
+from crypto_prediction_etl_spark.plans import registry
 
 registry.load_all()
 

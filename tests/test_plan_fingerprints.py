@@ -13,25 +13,16 @@ and fails if a drifted query is not staged for re-adjudication in
 ``__spark_entry__._ADJUDICATE_FIRST``.
 
 The full-catalog recompute costs ~2-3 min (it builds every query at
-the ledger's sf_dir; eager checkpoints run their pin jobs), on par
-with the catalog-wide anti-pattern guard — the price of making
+the ledger's sf_dir; eager checkpoints run their pin jobs), the one
+catalog rebuild in tier-1 besides ``test_oracle_parity`` — the price of making
 "verdict is stale" machine-detected instead of hand-remembered.
 """
 
 import json
-import os
-import sys
 
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if REPO not in sys.path:
-    sys.path.insert(0, REPO)
-TOOLS = os.path.join(REPO, "tools")
-if TOOLS not in sys.path:
-    sys.path.insert(0, TOOLS)
-
-from crypto_prediction_etl_spark.plans import registry  # noqa: E402
+from crypto_prediction_etl_spark.plans import registry
 
 registry.load_all()
 

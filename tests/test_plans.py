@@ -13,7 +13,6 @@ from crypto_prediction_etl_spark.plans import registry
 from tests.conftest import SF_DIR_CORRECTNESS
 
 registry.load_all()
-TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 
 def _plan(spark, sf_dir, name: str) -> str:
@@ -1044,119 +1043,6 @@ def test_r5_batch_no_cartesian_no_python_rowudf(spark, sf_dir):
         assert "BatchEvalPython" not in plan, name
 
 
-# Partition-less windows over frames that are BOUNDED by semantics,
-# not by a limit operator the mechanical audit can see.  Every entry
-# is a human-audited tiny/sub-linear frame WITH its worst-case row
-# bound stated, pinned by the FULL normalized spec body (order
-# columns + directions + frame, expr-ids stripped — see
-# tools/window_audit.normalize_spec), so a future window in the same
-# query that merely shares an order-column NAME, or a frame change,
-# fails the guard instead of slipping through.  Anything NOT listed
-# that plans an unbounded partition-less window fails the catalog
-# guard — the structural close of the single-task-window class
-# VERDICT r4/r5 flagged.
-_ROWS_CUM = "specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())"
-_ROWS_ALL = (
-    "specifiedwindowframe(RowFrame, unboundedpreceding$(), unboundedfollowing$())"
-)
-_PARTITIONLESS_WINDOW_ALLOWED = {
-    # calendar DAY grain: rows = distinct days <= ~366 * corpus years
-    # (grows with lifetime, not data size)
-    "q107_cumulative_uniques": {f"day ASC NULLS FIRST, {_ROWS_CUM}"},
-    # decile table: exactly 10 rows by construction
-    "q248_gain_deciles": {
-        f"decile ASC NULLS FIRST, {_ROWS_CUM}",
-        f"decile ASC NULLS FIRST, {_ROWS_ALL}",
-    },
-    # stratum table: exactly 3 rows (tertile cut)
-    "q257_stratified_effect": {_ROWS_ALL},
-    # distinct tenure DAYS: <= ~366 * corpus years (lifetime grain)
-    "q259_km_survival": {
-        f"days ASC NULLS FIRST, {_ROWS_CUM}",
-        "days ASC NULLS FIRST, specifiedwindowframe(RowFrame, "
-        "unboundedpreceding$(), -1)",
-    },
-    # planner config grid: bands in divisors(16) x thresholds = O(10)
-    "q270_lsh_planner": {
-        f"_w0 ASC NULLS FIRST, b ASC NULLS FIRST, {_ROWS_CUM}"
-    },
-    # calendar MONTH grain: <= 12 * corpus years
-    "q300_momentum_backtest": {f"mon ASC NULLS FIRST, {_ROWS_CUM}"},
-    # hypothesis table: one row per tested event_type (~5)
-    "q310_holm_correction": {
-        f"_w0 DESC NULLS LAST, id ASC NULLS FIRST, {_ROWS_CUM}",
-        f"rk ASC NULLS FIRST, {_ROWS_CUM}",
-    },
-    # contingency cells: |status| x |priority| <= 15 rows
-    "q341_chi_square": {_ROWS_ALL},
-    # label table: one row per embedding label (~10) — the modularity
-    # fold is post-aggregate (q355 scalar law).  Flagged only since
-    # r12: pinning the shared _edges feeder collapsed the kNN kernel
-    # subtree (whose WindowGroupLimit markers previously tripped the
-    # _BOUNDED exclusion) into a LogicalRDD leaf, exposing the
-    # always-present window to the guard.
-    "q372_label_modularity": {_ROWS_ALL},
-    # hypothesis table: one row per tested event_type (~5)
-    "q355_bh_fdr": {
-        f"_w0 DESC NULLS LAST, id ASC NULLS FIRST, {_ROWS_CUM}"
-    },
-    # calendar HOUR grain: <= 8784 * corpus years (lifetime grain)
-    "q413_slo_burn_rate": {
-        "h ASC NULLS FIRST, specifiedwindowframe(RowFrame, -5, "
-        "currentrow$())"
-    },
-    # token-frequency curve: exactly 8 threshold points
-    "q418_coverage_knee": {
-        f"cnt DESC NULLS LAST, tok ASC NULLS FIRST, {_ROWS_CUM}"
-    },
-}
-
-
-def test_catalog_wide_no_cartesian_no_row_python(spark, sf_dir):
-    """Catalog-wide anti-pattern guard: NO registered query may plan a
-    CartesianProduct, a row-at-a-time Python UDF (BatchEvalPython), or
-    (r6) an unbounded partition-less window outside the audited
-    allowlist.  Scalar-subquery broadcasts plan as
-    BroadcastNestedLoopJoin over 1-row frames and pool-bounded theta
-    joins (q232's 20x20 MMR pool) also avoid CartesianProduct, so the
-    cartesian/python slate is enforceable with no whitelist — any new
-    offender is a scale bug on arrival.  Plan subtrees pinned behind a
-    localCheckpoint (which the final plan shows only as Scan
-    ExistingRDD) are captured via the checkpoint spy so nothing hides
-    from the guard.  (Build cost ~3 min for 420 plans; this is the
-    catalog's single most valuable structural invariant.)"""
-    import sys as _sys
-
-    if TOOLS not in _sys.path:
-        _sys.path.insert(0, TOOLS)
-    from window_audit import (
-        capture_checkpoint_plans,
-        unbounded_partitionless_specs,
-    )
-
-    offenders = []
-    for name, fn in sorted(registry.QUERIES.items()):
-        pinned: list[str] = []
-        with capture_checkpoint_plans(pinned):
-            plan = (
-                fn(spark, sf_dir)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-        for p in [plan, *pinned]:
-            if "CartesianProduct" in p:
-                offenders.append((name, "CartesianProduct"))
-            if "BatchEvalPython" in p:
-                offenders.append((name, "BatchEvalPython"))
-            stray = set(unbounded_partitionless_specs(p)) - (
-                _PARTITIONLESS_WINDOW_ALLOWED.get(name, set())
-            )
-            if stray:
-                offenders.append((name, f"partition-less window {stray}"))
-    assert not offenders, offenders
-
-
 def test_q364_variance_ratio_one_window_pass(spark, sf_dir):
     """All VR horizons are lags over the SAME per-id sort: one hash
     exchange feeds the window stage, one more for the final groupBy."""
@@ -1647,10 +1533,6 @@ def test_record_grain_windows_route_through_globalrank(
     expression survives (it's derived from rank + count), and any
     remaining partition-less window subjects only a post-aggregate
     tiny frame from the allowlist."""
-    import sys as _sys
-
-    if TOOLS not in _sys.path:
-        _sys.path.insert(0, TOOLS)
     from window_audit import partitionless_specs, subject
 
     plan = _plan(spark, sf_dir, name)

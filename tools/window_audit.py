@@ -6,8 +6,9 @@ every input row, the classic scale-killer when the frame is
 proportional to the data.  This tool walks every registered query's
 executed plan, extracts each ``windowspecdefinition`` whose argument
 list carries no partition column, and prints them grouped by query so
-the allowlist in tests/test_plans.py (the enforcement half) is an
-audited inventory, not a guess.
+the allowlist in tests/test_oracle_parity.py (the enforcement half,
+run per query by ``test_oracle_parity[name]``) is an audited
+inventory, not a guess.
 
 Spec-string classification: inside ``windowspecdefinition(...)``,
 partition columns are top-level args WITHOUT a sort marker; order
