@@ -44,15 +44,18 @@ def entry(spark: SparkSession) -> DataFrame:
 # The driver adjudicates exactly the first 50 ``queries()`` entries per
 # round.  Mandatory picks = every query whose analyzed plan changed
 # since its last green verdict (tools/plan_fingerprint.py drift):
-# q249/q367/q85 (inherited round-13 rewrites, still unadjudicated) and
-# the 15 indicator queries moved by the lean window stages — one
+# q249/q367/q85 (inherited round-13 rewrites, still unadjudicated), the
+# 15 indicator queries moved by the lean window stages — one
 # projection per window stage in with_window_indicators, one
-# withColumns in n_multiple_rescale, no NaN guards after the
-# grouped-map kernels (q30, q32-q39, q145, q146, q176, q222, q299,
-# q312).  All oracle-replayed green at sf0.01 AND sf0.001 before
-# staging (tools/driver_replay.py).  Remaining 32 seats are the
-# mechanical age fill (python tools/make_window.py --fill-oldest
-# <picks>: oldest green verdicts first).
+# withColumns in n_multiple_rescale, no NaN guards after the per-id
+# kernels (q30, q32-q39, q145, q146, q176, q222, q299, q312) — and
+# q100/q129, which with the other ten recursive-kernel queries (q32,
+# q37-q39, q145, q146, q176, q222, q299, q312) now run the
+# partition-streaming mapInPandas runner instead of applyInPandas.
+# All oracle-replayed green at sf0.01 AND sf0.001 before staging
+# (tools/driver_replay.py).  Remaining 30 seats are the mechanical age
+# fill (python tools/make_window.py --fill-oldest <picks>: oldest
+# green verdicts first).
 #
 # r10-r13 audit trail (superseded windows) lives in git history and
 # CORRECTNESS_r{10,11,12,13}.json; every previously adjudicated query
@@ -73,6 +76,8 @@ _ADJUDICATE_FIRST = [
     "q37_ema",
     "q38_macd",
     "q39_rsi_wilder",
+    "q100_holt_linear",
+    "q129_heikin_ashi",
     "q145_adx",
     "q146_trix",
     "q176_kalman_level",
@@ -109,8 +114,6 @@ _ADJUDICATE_FIRST = [
     "q203_autocorrelation",
     "q204_basket_lift",
     "q205_ar1_fit",
-    "q206_volume_profile",
-    "q207_rapid_duplicates",
 ]
 
 

@@ -6,7 +6,8 @@ PySpark indicator marts; dbt window-stats mart), re-expressed Spark-first:
 - one engine (Spark SQL / DataFrame / Structured Streaming), one catalog,
   declarative plans optimized by Catalyst + AQE;
 - partitioned parquet tables instead of Hive/Cassandra/Trino federation;
-- `groupBy(id).applyInPandas` instead of the reference's driver-side
+- an id-partitioned, (id, dt)-sorted `mapInPandas` kernel that runs each
+  symbol's recursion in turn instead of the reference's driver-side
   per-symbol collect loop (reference:
   airflow/etl_scripts/pyspark/D_Create_crypto_ind_day_001.py:52-197);
 - plus large-scale training-data-pipeline operators (dedup, similarity

@@ -14,11 +14,13 @@ Spark-first re-expression:
 - The genuinely recursive smoothers (EMA, MACD signal, Wilder RSI, and
   the Holt, Heikin-Ashi, ADX, TRIX, Kalman, EWMA, Holt-Winters and
   GARCH family) run through one runner, `_per_id` — the kernel law:
-  one grouped-map pandas kernel over id, one id-shuffle, each id's rows
-  sorted by dt, O(rows) per key. It is the idiomatic replacement for
-  the reference's driver loop: same math, executed in parallel per
-  symbol on executors via Arrow batches. Each indicator supplies only
-  its recursion as a ``step`` function.
+  one id-shuffle, rows sorted by (id, dt) within each partition, and
+  one partition-streaming ``mapInPandas`` kernel that cuts the Arrow
+  batches at id boundaries and calls ``step`` once per id, O(rows) per
+  key. It is the idiomatic replacement for the reference's driver
+  loop: same math, executed in parallel per symbol on executors via
+  Arrow batches. Each indicator supplies only its recursion as a
+  ``step`` function.
 
 Seeding conventions (pinned, matching stock_indicators):
 - SMA_n / Bollinger / stochastic / Aroon / Ichimoku midpoints: defined
@@ -32,13 +34,14 @@ Seeding conventions (pinned, matching stock_indicators):
   average loss is zero.
 
 At scale: one hash shuffle on id; skewed symbols are bounded because
-every kernel is O(rows-per-symbol); the pandas kernel streams per-group
-Arrow batches, never the whole table.
+every kernel is O(rows-per-symbol); the pandas kernel holds one id's
+series plus one Arrow batch, never the whole partition.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -202,34 +205,63 @@ def with_window_indicators(candles: DataFrame, round_to: int = 2) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Recursive smoothers — grouped-map pandas kernels
+# Recursive smoothers — partition-streaming pandas kernels
 # ---------------------------------------------------------------------------
 
 
 def _per_id(df: DataFrame, cols: list[str], step) -> DataFrame:
-    """Run ``step`` once per id as a grouped-map pandas kernel.
+    """Run ``step`` once per id over a partition-streaming pandas kernel.
 
-    Each id's rows arrive as one pandas frame sorted by dt; ``step(pdf)``
-    returns one array per entry of ``cols``. The output is the input
-    columns plus ``cols`` as doubles. The inner function keeps the name
+    ``repartition("id")`` puts each id in one partition (reusing an
+    upstream window stage's id-partitioning when there is one) and
+    ``sortWithinPartitions("id", "dt")`` lines its rows up by dt (the
+    planner drops the sort when the window stage already provides
+    that order). ``kernel`` walks the partition's Arrow batches, cuts
+    each at id boundaries and calls ``step(pdf)`` once per id segment,
+    indexed 0..n-1; it returns one array per entry of ``cols``. Only
+    the open (last) id's rows carry into the next batch, so memory is
+    one id's series plus one batch. The output is the input columns
+    plus ``cols`` as doubles. The inner function keeps the name
     ``kernel``: it is the UDF name in the analyzed plan.
 
     A NaN in a kernel's output is SQL NULL in Spark: PySpark's Arrow
     conversion masks pandas ``isnull()``, so warm-up rows compare equal
     to the oracles' NULL and no caller needs a NaN guard."""
-    names = df.columns
     out_schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema]
         + [f"{c} double" for c in cols]
     )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("dt").reset_index(drop=True)
-        for c, vals in zip(cols, step(pdf)):
-            pdf[c] = np.asarray(vals, dtype="float64")
-        return pdf[names + cols]
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        """``step`` over each id segment of closed, (id, dt)-sorted rows."""
+        ids = pdf["id"].to_numpy()
+        edges = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1), len(pdf)]
+        out = {c: np.empty(len(pdf)) for c in cols}
+        for a, b in zip(edges, edges[1:]):
+            for c, vals in zip(cols, step(pdf.iloc[a:b].reset_index(drop=True))):
+                out[c][a:b] = np.asarray(vals, dtype="float64")
+        return pdf.assign(**out)
 
-    return df.groupBy("id").applyInPandas(kernel, schema=out_schema)
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        carry: list[pd.DataFrame] = []  # the open id's rows so far
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids = pdf["id"].to_numpy()
+            cuts = np.flatnonzero(ids[1:] != ids[:-1]) + 1
+            last = cuts[-1] if len(cuts) else 0  # where the open id starts
+            if last or (carry and carry[0]["id"].iat[0] != ids[0]):
+                yield run(pd.concat([*carry, pdf.iloc[:last]]))
+                carry = []
+            carry.append(pdf.iloc[last:])
+        if carry:
+            yield run(pd.concat(carry))
+
+    return (
+        df.repartition("id")
+        .sortWithinPartitions("id", "dt")
+        .mapInPandas(kernel, schema=out_schema)
+    )
 
 
 def _ema_sma_seed(x: pd.Series, n: int) -> pd.Series:

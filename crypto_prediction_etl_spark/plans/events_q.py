@@ -3,6 +3,7 @@ deterministic KMV cardinality sketch, DuckDB-checked."""
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -122,16 +123,15 @@ def q59_grouped_agg_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces the reduction kernel, so the 100 TB story is unchanged
     except partial aggregation — which is why built-ins stay the
     default and this surface is reserved for reductions Spark lacks."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # functionType given explicitly: this module postpones annotation
-    # evaluation (PEP 563), which defeats pandas_udf's hint inference
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def wmean(v, w):
+    # Series -> scalar hints make these GROUPED_AGG UDAFs
+    @pandas_udf("double")
+    def wmean(v: pd.Series, w: pd.Series) -> float:
         return float((v * w).sum() / w.sum())
 
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def cnt(v):
+    @pandas_udf("long")
+    def cnt(v: pd.Series) -> int:
         return len(v)
 
     # Spark refuses to mix pandas and JVM aggregates in one agg(), so

@@ -323,9 +323,9 @@ def _ohlc_rows():
 @pytest.mark.parametrize("name, cols", _KERNEL_COLS, ids=[k for k, _ in _KERNEL_COLS])
 def test_per_id_kernel_schema_and_sort(spark, name, cols):
     """Every recursive kernel: output = input columns + its own columns
-    as doubles, in order; rows fed in reverse dt order give the same
-    values as sorted rows; a single-row id runs without error; warm-up
-    rows are NULL, not NaN."""
+    as doubles, in order; rows fed in reverse dt order, or in Arrow
+    batches that split an id, give the same values as sorted rows; a
+    single-row id runs without error; warm-up rows are NULL, not NaN."""
     schema = "id string, dt date, open double, high double, low double, close double"
     rows = _ohlc_rows()
     fn = getattr(ind, name)
@@ -343,6 +343,16 @@ def test_per_id_kernel_schema_and_sort(spark, name, cols):
     got_fwd, got_rev = ordered(fwd), ordered(rev)
     assert (got_fwd["id"] == "B").sum() == 1
     pd.testing.assert_frame_equal(got_fwd, got_rev)
+
+    # 7-row Arrow batches split id 'A' across batches: the same frame
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got_split = ordered(fn(spark.createDataFrame(rows, schema)))
+    finally:
+        spark.conf.set(key, default)
+    pd.testing.assert_frame_equal(got_fwd, got_split)
 
     # a kernel's NaN reaches Spark as SQL NULL, never as a NaN value
     assert fwd.filter(reduce(or_, [F.isnan(c) for c in cols])).count() == 0

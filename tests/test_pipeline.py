@@ -60,6 +60,14 @@ def test_indicator_mart_end_to_end(spark, sf_dir, workdir, monkeypatch):
         write(df, path, *args, **kwargs)
 
     monkeypatch.setattr(pipeline, "reload_window", spy)
+    checked = []
+    unique = pipeline.check_unique
+
+    def check_spy(df, cols):
+        checked.append(df)
+        return unique(df, cols)
+
+    monkeypatch.setattr(pipeline, "check_unique", check_spy)
 
     report = run_indicator_mart(
         spark,
@@ -78,6 +86,10 @@ def test_indicator_mart_end_to_end(spark, sf_dir, workdir, monkeypatch):
     qe = reloaded[0]._jdf.queryExecution()
     assert _plan_nodes(qe.analyzed().toString(), "Join") == 1
     assert _plan_nodes(qe.optimizedPlan().toString(), "Window") <= 4
+    # the checks read only the partitions this run rewrote
+    checked[0].count()
+    scan = checked[0]._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [" in scan and "PartitionFilters: []" not in scan, scan
     # only the trailing update window was written
     span = out.agg(
         F.datediff(F.max("dt"), F.min("dt")).alias("d")
@@ -85,14 +97,52 @@ def test_indicator_mart_end_to_end(spark, sf_dir, workdir, monkeypatch):
     assert span <= 30
     # N_multiple applied
     assert out.filter("id = '5-LOW'").select("n_multiple").first().n_multiple == 1000.0
+    # rows_written counts the rows this run wrote (into an empty mart here)
+    n1 = out.count()
+    assert report.rows_written == n1 > 0
 
-    # idempotent re-run: same row count, no duplicate keys
-    n1 = report.rows_written
+    # idempotent re-run: the mart keeps its row count and no (id, dt) repeats
     report2 = run_indicator_mart(
         spark, candles, mart, lookback_days=120, update_days=30, small_ids=["5-LOW"]
     )
-    assert report2.rows_written == n1
     assert report2.passed
+    assert report2.rows_written == n1
+    again = spark.read.parquet(mart)
+    assert again.count() == n1
+    assert again.groupBy("id", "dt").count().filter("count > 1").count() == 0
+
+
+@pytest.mark.parametrize("fault", ["duplicate_key", "null_close"])
+def test_checks_catch_a_faulty_reload(spark, sf_dir, workdir, monkeypatch, fault):
+    """The partition-pruned checks still see what a broken writer left
+    in the rewritten partitions: one repeated (id, dt) row, or a NULL
+    close."""
+    from crypto_prediction_etl_spark.plans import pipeline
+    from crypto_prediction_etl_spark.plans.indicators_q import _with_volume
+
+    write = pipeline.reload_window
+
+    def faulty(df, path, *args, **kwargs):
+        if fault == "null_close":
+            df = df.withColumn(
+                "close", F.when(F.col("id") != "5-LOW", F.col("close"))
+            )
+        write(df, path, *args, **kwargs)
+        if fault == "duplicate_key":
+            spark.read.parquet(path).limit(1).write.mode("append").partitionBy(
+                "year", "month", "day"
+            ).parquet(path)
+
+    monkeypatch.setattr(pipeline, "reload_window", faulty)
+    report = run_indicator_mart(
+        spark, _with_volume(spark, sf_dir), os.path.join(workdir, "mart"),
+        lookback_days=120, update_days=30,
+    )
+    assert not report.passed
+    failed = [c.name for c in report.checks if not c.passed]
+    assert failed == (
+        ["unique:id,dt"] if fault == "duplicate_key" else ["not_null:id,dt,close"]
+    )
 
 
 def test_lookback_warmup_matches_bounded_scan(spark, sf_dir, workdir):

@@ -82,7 +82,8 @@ def test_q46_simhash_is_shuffle_free_map_kernel(spark, sf_dir):
 
 def test_recursive_kernel_is_arrow_grouped_map(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q37_ema")
-    assert "FlatMapGroupsInPandas" in plan  # Arrow grouped-map, not RDD
+    # Arrow partition-streaming kernel, not RDD, not a per-group frame
+    assert "MapInPandas" in plan and "FlatMapGroupsInPandas" not in plan
 
 
 def test_whole_stage_codegen_active(spark, sf_dir):
@@ -152,14 +153,14 @@ def test_asof_join_semantics(spark):
 
 def test_indicator_mart_kernel_reuses_window_partitioning(spark, sf_dir):
     """q32: candles groupBy(id,dt) + window(id) = 2 exchanges; the
-    grouped-map pandas kernel must reuse the window stage's
+    partition-streaming pandas kernel must reuse the window stage's
     id-partitioning (no third shuffle)."""
     df = registry.QUERIES["q32_indicator_mart"](spark, sf_dir)
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString().split(
         "== Initial Plan =="
     )[0]
-    assert "FlatMapGroupsInPandas" in final
+    assert "MapInPandas" in final and "FlatMapGroupsInPandas" not in final
     assert final.count("Exchange hashpartitioning") <= 2, final[:3000]
 
 
@@ -766,7 +767,7 @@ def test_jl_projection_is_map_only(spark, sf_dir):
 def test_adx_trix_are_grouped_map_kernels(spark, sf_dir):
     for name in ("q145_adx", "q146_trix"):
         plan = _plan(spark, sf_dir, name)
-        assert "FlatMapGroupsInPandas" in plan, name
+        assert "MapInPandas" in plan and "FlatMapGroupsInPandas" not in plan, name
         # one id-shuffle for the kernel (plus the candle groupBy)
         assert plan.count("Exchange hashpartitioning") <= 2, name
 
@@ -959,10 +960,10 @@ def test_kcore_rounds_are_bounded_and_broadcast(spark, sf_dir):
 
 
 def test_garch_kernel_single_id_shuffle(spark, sf_dir):
-    """q312: the GARCH recursion is one grouped-map pandas kernel over
-    one id-shuffle (the EMA/Holt kernel law)."""
+    """q312: the GARCH recursion is one partition-streaming pandas
+    kernel over one id-shuffle (the EMA/Holt kernel law)."""
     plan = _plan(spark, sf_dir, "q312_garch_filter")
-    assert "FlatMapGroupsInPandas" in plan
+    assert "MapInPandas" in plan and "FlatMapGroupsInPandas" not in plan
     # one exchange builds the candles (groupBy id, dt), one feeds the
     # kernel's id partitioning — nothing else may shuffle
     assert plan.count("Exchange hashpartitioning") <= 2, plan[:3000]

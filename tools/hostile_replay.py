@@ -89,7 +89,9 @@ from tests.oracle import replay  # noqa: E402
 # that assumes batch boundaries align with group boundaries, diverges
 # here. applyInPandas/GROUPED_AGG still see whole groups by contract —
 # Spark reassembles them — so this axis isolates the iterator-protocol
-# kernels specifically.
+# kernels specifically, the nine indicator kernels included: their
+# `_per_id` runner cuts batches at id boundaries and carries the open
+# id's rows into the next batch.
 # --ansi-off (round 9): Spark 4 enables ANSI SQL mode by default, and
 # every result in this repo was adjudicated under it.  A migrated or
 # legacy-configured cluster flips spark.sql.ansi.enabled=false, which
