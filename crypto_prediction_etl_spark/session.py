@@ -28,10 +28,16 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def driver_memory() -> str:
+    """Driver heap: $SPARK_GRAFT_DRIVER_MEM, else a quarter of physical
+    memory, at least 1 GiB (the driver shares the host with the workers)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return os.getenv("SPARK_GRAFT_DRIVER_MEM") or f"{max(1024, phys // 4 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     *,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
@@ -40,13 +46,11 @@ def get_spark(
     except ``master`` comes from spark-submit.
     """
     cpus = default_parallelism()
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         # -- planner / runtime ------------------------------------------
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -67,7 +71,7 @@ def get_spark(
         # -- write semantics: overwrite only matching partitions --------
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # -- local-mode memory (driver == only JVM) ---------------------
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # graceful streaming shutdown (reference: session.py:29)
         .config("spark.streaming.stopGracefullyOnShutdown", "true")

@@ -27,9 +27,6 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 # events.parquet has stored ts as parquet TIMESTAMP(NANOS) in some
 # testdata generations (Spark's vectorized reader rejects that type
 # unless the legacy nanosAsLong conf maps it to int64) and as

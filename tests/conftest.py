@@ -10,11 +10,6 @@ for _p in (REPO_ROOT, os.path.join(REPO_ROOT, "tools")):
     if _p not in sys.path:
         sys.path.insert(0, _p)
 
-# The engine's 48g default driver heap lets one long-lived test JVM grow
-# until a 16 GB host OOM-kills it mid-suite; the sf0.001 inputs need far
-# less (perfbench caps its own sessions at 4 GiB too).
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
-
 SF_DIR_SMOKE = "/root/testdata/sf0.001"
 SF_DIR_CORRECTNESS = "/root/testdata/sf0.01"
 

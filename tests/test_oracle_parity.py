@@ -14,6 +14,11 @@ in this order:
 3. **Oracle type ban**: no HUGEINT/list/STRUCT/MAP/DECIMAL in the
    oracle's ``DESCRIBE`` types.
 4. **Parity** through ``tests.oracle.compare_query``.
+5. **Plan-fingerprint drift**: a fingerprint that differs from
+   PLAN_FINGERPRINTS.json needs the query staged in
+   ``__spark_entry__._ADJUDICATE_FIRST`` (``tools/plan_fingerprint.py``).
+   The ledger is at tier-1's sf0.001; under a ``SPARK_GRAFT_TEST_SF_DIR``
+   at another scale, only the tool checks drift.
 
 The type bans are the r4 lesson (q154/q157/q200/q265): the driver
 round-trips both sides through pandas before sorting and hashing, so
@@ -26,6 +31,8 @@ since r2; the float32->float64 widening is identical on both sides.
 from __future__ import annotations
 
 import pytest
+from __spark_entry__ import _ADJUDICATE_FIRST
+from plan_fingerprint import drift, frame_fingerprint, load_ledger
 from pyspark.sql import types as T
 from window_audit import capture_checkpoint_plans, unbounded_partitionless_specs
 
@@ -34,6 +41,7 @@ from crypto_prediction_etl_spark.plans import registry
 from .oracle import compare_query
 
 registry.load_all()
+_LEDGER = load_ledger()
 
 # Partition-less windows over frames that are BOUNDED by semantics,
 # not by a limit operator the mechanical audit can see.  Every entry
@@ -149,6 +157,16 @@ def test_oracle_parity(spark, duck, sf_dir, name):
 
     verdict, detail, _ = compare_query(df, duck, name)
     assert verdict == "PASS", f"{name}: {verdict} {detail}"
+
+    ledger = _LEDGER["entries"] if _LEDGER["sf_dir"] == sf_dir else {}
+    _, unstaged = drift({name: frame_fingerprint(df, name)}, ledger, _ADJUDICATE_FIRST)
+    assert not unstaged, (
+        "plan or oracle changed since last recorded fingerprint but the "
+        f"query is not staged for re-adjudication: {unstaged} — "
+        "add it to __spark_entry__._ADJUDICATE_FIRST (or, if the change "
+        "lands in the same round as its pending verdict, run "
+        "`python tools/plan_fingerprint.py --update`)"
+    )
 
 
 def test_plan_guard_flags_each_offender(spark):

@@ -8,30 +8,22 @@ slip shows how that fails.  PLAN_FINGERPRINTS.json records, per query,
 the normalized analyzed-plan + oracle hash current at its last green
 driver verdict (see tools/plan_fingerprint.py for the protocol and
 for why the ANALYZED plan — the deterministic product of the builder
-code — is the right level); this test recomputes every fingerprint
-and fails if a drifted query is not staged for re-adjudication in
-``__spark_entry__._ADJUDICATE_FIRST``.
+code — is the right level).
 
-The full-catalog recompute costs ~2-3 min (it builds every query at
-the ledger's sf_dir; eager checkpoints run their pin jobs), the one
-catalog rebuild in tier-1 besides ``test_oracle_parity`` — the price of making
-"verdict is stale" machine-detected instead of hand-remembered.
+The drift check itself runs in ``test_oracle_parity[name]`` on the frame
+that test builds, so tier-1 builds the catalog once.  This module checks
+the ledger (it covers the catalog, at tier-1's scale) and the
+fingerprint (stable across rebuilds, moved by a plan or oracle edit).
 """
 
-import json
-
 import pytest
+from plan_fingerprint import drift, fingerprint, load_ledger, normalize_plan
 
 from crypto_prediction_etl_spark.plans import registry
 
-registry.load_all()
+from .conftest import SF_DIR_SMOKE
 
-from plan_fingerprint import (  # noqa: E402
-    LEDGER,
-    SF_DIR,
-    fingerprint,
-    normalize_plan,
-)
+registry.load_all()
 
 
 def test_normalize_plan_is_session_independent():
@@ -63,39 +55,13 @@ def test_normalize_plan_is_session_independent():
 
 
 def test_ledger_covers_every_registered_query():
-    with open(LEDGER) as f:
-        ledger = json.load(f)
+    ledger = load_ledger()
     entries = ledger["entries"]
     missing = sorted(set(registry.QUERIES) - set(entries))
     stale = sorted(set(entries) - set(registry.QUERIES))
     assert not missing, f"queries missing from PLAN_FINGERPRINTS.json: {missing}"
     assert not stale, f"ledger entries for unregistered queries: {stale}"
-    assert ledger["sf_dir"] == SF_DIR
-
-
-def test_plan_drift_is_staged_for_readjudication(spark):
-    """Every query whose current fingerprint differs from the ledger
-    must be in _ADJUDICATE_FIRST (it gets a fresh driver verdict at
-    round end, after which --update re-records it)."""
-    import __spark_entry__ as entry
-
-    with open(LEDGER) as f:
-        entries = json.load(f)["entries"]
-    staged = set(entry._ADJUDICATE_FIRST)
-    unstaged_drift = []
-    for name in sorted(registry.QUERIES):
-        rec = entries.get(name)
-        if rec is None:
-            continue  # covered by test_ledger_covers_every_registered_query
-        if fingerprint(spark, name) != rec["fp"] and name not in staged:
-            unstaged_drift.append(name)
-    assert not unstaged_drift, (
-        "plan or oracle changed since last recorded fingerprint but the "
-        f"query is not staged for re-adjudication: {unstaged_drift} — "
-        "add it to __spark_entry__._ADJUDICATE_FIRST (or, if the change "
-        "lands in the same round as its pending verdict, run "
-        "`python tools/plan_fingerprint.py --update`)"
-    )
+    assert ledger["sf_dir"] == SF_DIR_SMOKE
 
 
 @pytest.mark.parametrize("name", ["q141_edit_distance_pairs"])
@@ -106,15 +72,21 @@ def test_fingerprint_stable_across_rebuilds(spark, name):
 
 
 def test_fingerprint_moves_on_plan_change(spark, monkeypatch):
-    """Mutation self-test: a real plan edit must move the hash —
+    """Mutation self-test: a real plan edit must move the hash, and the
+    drift check parity runs (``drift`` against the ledger) must flag the
+    edit while the query is unstaged and pass it once it is staged —
     otherwise the drift guard is vacuous."""
     name = "q01_pricing_summary"
     base = fingerprint(spark, name)
+    entries = load_ledger()["entries"]
+    assert drift({name: base}, entries, ()) == ([], [])
     orig = registry.QUERIES[name]
     monkeypatch.setitem(
         registry.QUERIES, name, lambda s, d: orig(s, d).limit(999_999)
     )
-    assert fingerprint(spark, name) != base
+    edited = fingerprint(spark, name)
+    assert drift({name: edited}, entries, ()) == ([name], [name])
+    assert drift({name: edited}, entries, {name}) == ([name], [])
 
 
 def test_fingerprint_moves_on_oracle_change(spark, monkeypatch):

@@ -6,8 +6,8 @@ driver verdict yet" when it had an r3 one on a superseded plan) shows
 the failure mode.  This tool records a normalized fingerprint per
 query; any query whose CURRENT fingerprint differs from the one
 recorded at its last driver verdict is flagged for re-adjudication,
-and tests/test_plan_fingerprints.py fails if such a query is absent
-from ``__spark_entry__._ADJUDICATE_FIRST``.
+and tier-1's ``test_oracle_parity[name]`` fails if such a query is
+absent from ``__spark_entry__._ADJUDICATE_FIRST``.
 
 Fingerprint = md5 over
   * the normalized ANALYZED plan of the query at the ledger sf_dir
@@ -32,8 +32,17 @@ final plan nor the oracle is invisible here — but such a change
 either alters results (caught by tools/driver_replay.py) or is
 perf-only.
 
+The ledger is recorded at ``SF_DIR``, tier-1's sf0.001, so the parity
+test checks the frames it builds.  Scale matters: q55_kmeans_clusters,
+q56_ivf_ann, q101_semdedup, q249_bpe_train and q384_conformal_coverage
+put values computed from the input into the plan, so their fingerprints
+differ between scales (the other 415 are equal at sf0.001 and sf0.01).
+
 Ledger protocol (PLAN_FINGERPRINTS.json):
-  * bootstrap (once, r9): record all queries at their current plans.
+  * ``--bootstrap [name ...]`` records the named queries (default: all)
+    at ``SF_DIR`` and stamps the ledger with it; a recorded entry keeps
+    its ``verdict_round``.  To move the ledger's scale, check at the
+    old one, then bootstrap the five scale-dependent builders.
   * at each round START, after the driver wrote CORRECTNESS_r{N}:
     ``python tools/plan_fingerprint.py --update`` refreshes exactly
     the entries whose latest green verdict round is NEWER than the
@@ -41,7 +50,8 @@ Ledger protocol (PLAN_FINGERPRINTS.json):
     is the tree at next round start — so the current fingerprint IS
     the at-verdict fingerprint) plus any new/unrecorded names.
   * plain run = check mode: prints drift, exit 1 if a drifted query
-    is not staged for re-adjudication.
+    is not staged for re-adjudication.  Check and update exit 1 at
+    once when the ledger's ``sf_dir`` is not ``SF_DIR``.
 
 Usage:
   python tools/plan_fingerprint.py [--bootstrap | --update] [name ...]
@@ -57,7 +67,7 @@ from _harness import REPO, registry, session
 from make_window import green_verdict_rounds
 
 LEDGER = os.path.join(REPO, "PLAN_FINGERPRINTS.json")
-SF_DIR = "/root/testdata/sf0.01"
+SF_DIR = "/root/testdata/sf0.001"
 
 _EXPR_ID = re.compile(r"#(\d+)")
 _PATH = re.compile(r"/root/testdata/\S+")
@@ -89,15 +99,29 @@ def normalize_plan(plan: str, par: int | None = None) -> str:
     return _EXPR_ID.sub(renumber, plan)
 
 
-def fingerprint(spark, name: str, sf_dir: str = SF_DIR) -> str:
-    df = registry.QUERIES[name](spark, sf_dir)
+def frame_fingerprint(df, name: str) -> str:
+    """Fingerprint of ``df``, the built frame of query ``name``."""
     plan = df._jdf.queryExecution().analyzed().toString()
     blob = (
-        normalize_plan(plan, spark.sparkContext.defaultParallelism)
+        normalize_plan(plan, df.sparkSession.sparkContext.defaultParallelism)
         + "\n==oracle==\n"
         + registry.ORACLES.get(name, "")
     )
     return hashlib.md5(blob.encode()).hexdigest()
+
+
+def fingerprint(spark, name: str) -> str:
+    return frame_fingerprint(registry.QUERIES[name](spark, SF_DIR), name)
+
+
+def drift(fps: dict[str, str], entries: dict, staged) -> tuple[list, list]:
+    """``(drifted, unstaged)``: the names in ``fps`` whose fingerprint
+    differs from their ledger entry, and those of them not ``staged``
+    for re-adjudication.  A name without an entry is not drift."""
+    drifted = sorted(
+        n for n, fp in fps.items() if n in entries and entries[n]["fp"] != fp
+    )
+    return drifted, [n for n in drifted if n not in staged]
 
 
 def load_ledger() -> dict:
@@ -124,61 +148,47 @@ def main() -> int:
         mode = argv[0][2:]
         argv = argv[1:]
 
+    ledger = load_ledger()
+    entries = ledger["entries"]
+    line = {"metric": "plan_fingerprint", "mode": mode, "sf_dir": SF_DIR}
+    if mode != "bootstrap" and ledger["sf_dir"] != SF_DIR:
+        line["error"] = f"ledger recorded at {ledger['sf_dir']}"
+        print(json.dumps(line))
+        return 1
+
     spark = session("plan-fingerprint")
 
     names = argv or list(registry.QUERIES)
     fps = compute_all(spark, names)
     verdict_rounds = green_verdict_rounds(REPO)
-    ledger = load_ledger()
-    entries = ledger["entries"]
 
     import __spark_entry__ as entry_mod
 
-    staged = set(entry_mod._ADJUDICATE_FIRST)
-
-    drifted = sorted(
-        n
-        for n in names
-        if n in entries and entries[n]["fp"] != fps[n]
-    )
+    drifted, unstaged_drift = drift(fps, entries, entry_mod._ADJUDICATE_FIRST)
     missing = sorted(n for n in names if n not in entries)
-    unstaged_drift = [n for n in drifted if n not in staged]
 
-    if mode == "bootstrap":
-        for n in names:
-            entries[n] = {
-                "fp": fps[n],
-                "verdict_round": verdict_rounds.get(n),
-            }
-    elif mode == "update":
+    if mode in ("bootstrap", "update"):
         for n in names:
             rec = entries.get(n)
-            newer_verdict = rec is not None and (
-                verdict_rounds.get(n) or 0
-            ) > (rec["verdict_round"] or 0)
-            if rec is None or newer_verdict:
-                entries[n] = {
-                    "fp": fps[n],
-                    "verdict_round": verdict_rounds.get(n),
-                }
-    if mode in ("bootstrap", "update"):
-        ledger["entries"] = dict(sorted(entries.items()))
+            if rec is None or (
+                mode == "update"
+                and (verdict_rounds.get(n) or 0) > (rec["verdict_round"] or 0)
+            ):
+                entries[n] = {"fp": fps[n], "verdict_round": verdict_rounds.get(n)}
+            elif mode == "bootstrap":
+                rec["fp"] = fps[n]
+        ledger["sf_dir"] = SF_DIR
         with open(LEDGER, "w") as f:
             json.dump(ledger, f, indent=1, sort_keys=True)
             f.write("\n")
 
-    print(
-        json.dumps(
-            {
-                "metric": "plan_fingerprint",
-                "mode": mode,
-                "checked": len(names),
-                "drifted": drifted,
-                "unstaged_drift": unstaged_drift,
-                "missing_from_ledger": len(missing),
-            }
-        )
+    line.update(
+        checked=len(names),
+        drifted=drifted,
+        unstaged_drift=unstaged_drift,
+        missing_from_ledger=len(missing),
     )
+    print(json.dumps(line))
     return 1 if mode == "check" and unstaged_drift else 0
 
 
