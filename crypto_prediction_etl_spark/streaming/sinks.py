@@ -6,7 +6,8 @@ write_stream.py:1-16). Without a key-value store, the scalable
 equivalent is merge-on-read: append micro-batches (cheap, no
 read-modify-write in the hot path), dedup by PK at read time keeping
 the newest ``ts_insert_utc``/``ts_send``. Compaction == rewriting the
-table through :func:`read_hot_table` periodically.
+table through :func:`read_hot_table` periodically; its row count is
+observed on the frame it writes, so the output is never read back.
 
 Exactly-once: Spark checkpoints offsets per micro-batch; a replayed
 batch appends duplicate PK rows, which merge-on-read collapses — same
@@ -15,7 +16,7 @@ end state as Cassandra upsert.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..quality.checks import progress_dict
@@ -277,11 +278,16 @@ def compact_hot_table(
     rewrite (no extra pass). ``now`` defaults to the current timestamp;
     pass a fixed value for deterministic runs. Idempotent: re-running
     with the same ``now`` rewrites the identical survivor set.
-    Returns the compacted row count."""
+
+    Returns the compacted row count, observed during the rewrite rather
+    than by reading the output back: the count sits after the TTL filter,
+    directly above the write, so every row it sees is a row written."""
     hot = read_hot_table(spark, path, pk_cols, order_cols)
     if ttl_seconds is not None:
         now_expr = F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
         cutoff = now_expr - F.make_dt_interval(secs=F.lit(float(ttl_seconds)))
         hot = hot.filter(F.col(ts_col).cast("timestamp") >= cutoff)
+    seen = Observation()
+    hot = hot.observe(seen, F.count(F.lit(1)).alias("rows"))
     hot.write.mode("overwrite").parquet(compacted_path)
-    return spark.read.parquet(compacted_path).count()
+    return seen.get["rows"]

@@ -265,10 +265,37 @@ def test_compaction_bounds_read_amplification(spark, workdir):
         ).write.mode("append").parquet(path)
     assert spark.read.parquet(path).count() == 6
     out = os.path.join(workdir, "compacted")
-    n = compact_hot_table(spark, path, ["id", "k"], ["_epoch"], out)
-    assert n == 2
+    sc = spark.sparkContext
+    sc.setJobGroup("compact-once", "compact_hot_table")
+    try:
+        n = compact_hot_table(spark, path, ["id", "k"], ["_epoch"], out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the count is observed during the rewrite, not read back: the input's
+    # schema inference plus the write's shuffle-map and result jobs
+    assert len(sc.statusTracker().getJobIdsForGroup("compact-once")) <= 3
+    assert n == spark.read.parquet(out).count() == 2
     vals = {r.k: r.v for r in spark.read.parquet(out).collect()}
     assert vals == {1: 2.0, 2: 2.0}  # newest epoch won
+
+
+def test_compaction_ttl_expiring_every_row_leaves_empty_table(spark, workdir):
+    from crypto_prediction_etl_spark.streaming.sinks import compact_hot_table
+
+    path = os.path.join(workdir, "stalehot")
+    spark.createDataFrame(
+        [("BTC", 1, 1.0, "2024-01-01 00:00:00"), ("ETH", 2, 2.0, "2024-01-02 00:00:00")],
+        "id string, k int, v double, ts_insert_utc string",
+    ).withColumn("ts_insert_utc", F.to_timestamp("ts_insert_utc")).write.parquet(path)
+    out = os.path.join(workdir, "stalecompacted")
+    n = compact_hot_table(
+        spark, path, ["id", "k"], ["ts_insert_utc"], out,
+        ttl_seconds=2592000, now="2024-03-01 00:00:00",
+    )
+    assert n == 0
+    empty = spark.read.parquet(out)
+    assert empty.columns == spark.read.parquet(path).columns
+    assert empty.count() == 0
 
 
 def test_bucketed_join_avoids_shuffle(spark, sf_dir):

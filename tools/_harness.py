@@ -1,7 +1,15 @@
 """The one place that decides how a catalog query is set up, warmed and
 timed, so ``bench.py`` and every tool under ``tools/`` measure the same
 query the same way. It also puts the repo root (``REPO``) on
-``sys.path``; ``SF_DIR`` is ``$SPARK_GRAFT_SF_DIR``, else sf0.1.
+``sys.path``.
+
+Scale: the timing tools (``bench.py``, ``ab_measure.py``,
+``explain_dump.py``) run at ``$SPARK_GRAFT_SF_DIR``, else ``SF_DIR``'s
+sf0.1; the plan audits (``window_audit.py``, ``plan_dup_audit.py``) at
+``$SPARK_GRAFT_SF_DIR``, else ``AUDIT_SF_DIR``'s sf0.01. The oracle replays
+(``driver_replay.py``, ``hostile_replay.py``) ignore the variable and gate
+at sf0.01 (``driver_replay.py --sf DIR`` replays at another scale);
+``plan_fingerprint.py`` pins tier-1's sf0.001.
 """
 
 from __future__ import annotations
@@ -18,6 +26,7 @@ if REPO not in sys.path:
 from crypto_prediction_etl_spark.plans import registry  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+AUDIT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
 def session(app: str):

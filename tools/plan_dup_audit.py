@@ -10,8 +10,9 @@ and 3 aggs.  Locally that is noise; at 100 TB it multiplies the most
 expensive stages of the job.  Both were found by hand.  This tool
 finds the shape mechanically across the whole catalog:
 
-  * build each query's df at sf0.01, EXECUTE it, and take the FINAL
-    adaptive plan (``isFinalPlan=true`` section).  Executing matters:
+  * build each query's df (at ``--sf DIR``, else $SPARK_GRAFT_SF_DIR,
+    else sf0.01), EXECUTE it, and take the FINAL adaptive plan
+    (``isFinalPlan=true`` section).  Executing matters:
     AQE performs exchange reuse at runtime (q44's duplicated sizes
     broadcast shows ReusedExchange only in the final plan), so the
     initial physical plan over-reports duplicates.  In the final plan
@@ -49,9 +50,8 @@ import json
 import re
 import sys
 
-from _harness import registry, select, session
+from _harness import AUDIT_SF_DIR, registry, select, session
 
-SF_DIR = "/root/testdata/sf0.01"
 MIN_NODES = 4
 # operators that represent real distributed work; a duplicated subtree
 # must contain at least one to be reported
@@ -217,14 +217,14 @@ def audit_query(df, min_nodes: int):
 
 
 def main() -> int:
-    global SF_DIR
     args = sys.argv[1:]
     min_nodes = MIN_NODES
+    sf_dir = AUDIT_SF_DIR
     while args[:1] in (["--min-nodes"], ["--sf"]):
         if args[0] == "--min-nodes":
             min_nodes = int(args[1])
         else:
-            SF_DIR = args[1]
+            sf_dir = args[1]
         args = args[2:]
     spark = session("plan-dup-audit")
     names = select(args)
@@ -232,7 +232,7 @@ def main() -> int:
     errs = 0
     for name in names:
         try:
-            df = registry.QUERIES[name](spark, SF_DIR)
+            df = registry.QUERIES[name](spark, sf_dir)
             for f in audit_query(df, min_nodes):
                 rows.append({"query": name, **f})
         except Exception as e:  # noqa: BLE001
@@ -246,7 +246,7 @@ def main() -> int:
         json.dumps(
             {
                 "metric": "plan_dup_audit",
-                "sf_dir": SF_DIR,
+                "sf_dir": sf_dir,
                 "queries_checked": len(names),
                 "flagged": len(rows),
                 "errors": errs,

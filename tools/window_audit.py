@@ -17,16 +17,14 @@ columns carry ``ASC``/``DESC``; the frame is the trailing
 non-frame top-level arg is a sort spec.
 
 Usage: python tools/window_audit.py [name-prefix ...]
+  (at $SPARK_GRAFT_SF_DIR, else sf0.01)
 """
 
 import contextlib
-import os
 import re
 import sys
 
-from _harness import registry, select, session
-
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+from _harness import AUDIT_SF_DIR, registry, select, session
 
 _MARK = "windowspecdefinition("
 
@@ -198,7 +196,7 @@ def main() -> int:
         try:
             with capture_checkpoint_plans(pinned):
                 plan = (
-                    registry.QUERIES[name](spark, SF)
+                    registry.QUERIES[name](spark, AUDIT_SF_DIR)
                     ._jdf.queryExecution()
                     .executedPlan()
                     .toString()
