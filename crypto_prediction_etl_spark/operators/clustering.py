@@ -38,16 +38,14 @@ def _sq_dist(vec_col: Column, centroid: list[float]) -> Column:
     )
 
 
-def assign_clusters(
-    vecs: DataFrame, centroids: list[list[float]], id_col: str = "vec_id", vec_col: str = "v"
-) -> DataFrame:
+def assign_clusters(vecs: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """(id, cluster, sq_dist): nearest centroid, ties to lowest index."""
-    dists = F.array(*[_sq_dist(F.col(vec_col), c) for c in centroids])
+    dists = F.array(*[_sq_dist(F.col("v"), c) for c in centroids])
     # array_position returns the FIRST index of the minimum -> low-index ties
     cluster = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
     return vecs.select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("v"),
         cluster.alias("cluster"),
         F.array_min(dists).alias("sq_dist"),
     )
@@ -57,21 +55,19 @@ def kmeans(
     vecs: DataFrame,
     k: int = 4,
     iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> tuple[DataFrame, list[float]]:
     """Lloyd's k-means: returns (assignments, inertia_per_iteration).
 
     Init: the k vectors with smallest ids (deterministic, no RNG).
     Empty clusters keep their previous centroid.
     """
-    dim = len(vecs.select(vec_col).first()[0])
-    seed_rows = vecs.orderBy(id_col).limit(k).collect()
-    centroids = [[float(x) for x in r[vec_col]] for r in seed_rows]
+    dim = len(vecs.select("v").first()[0])
+    seed_rows = vecs.orderBy("vec_id").limit(k).collect()
+    centroids = [[float(x) for x in r["v"]] for r in seed_rows]
 
     inertia_history: list[float] = []
     for _ in range(iters):
-        assigned = assign_clusters(vecs, centroids, id_col, vec_col)
+        assigned = assign_clusters(vecs, centroids)
         # elementwise mean per cluster AND inertia in ONE action: explode
         # to (cluster, pos, val) rows that carry sq_dist, one groupBy —
         # the only shuffle AND only distance pass of the iteration
@@ -79,7 +75,7 @@ def kmeans(
         # counted once, not dim times).
         stats = (
             assigned.select(
-                "cluster", "sq_dist", F.posexplode(vec_col).alias("pos", "val")
+                "cluster", "sq_dist", F.posexplode("v").alias("pos", "val")
             )
             .groupBy("cluster", "pos")
             .agg(
@@ -103,4 +99,4 @@ def kmeans(
             new_centroids[c] = [s / cnt[c] for s in sums]
         centroids = new_centroids
 
-    return assign_clusters(vecs, centroids, id_col, vec_col), inertia_history
+    return assign_clusters(vecs, centroids), inertia_history

@@ -44,12 +44,7 @@ MINHASH_PERMS: list[tuple[int, int]] = [
 LSH_BANDS = 4  # 4 bands x 4 rows
 
 
-def exact_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    pin: bool = True,
-) -> DataFrame:
+def exact_dedup(docs: DataFrame, pin: bool = True) -> DataFrame:
     """(id, fingerprint, canonical_id, is_duplicate) via content hash.
 
     The fingerprint frame feeds the canonical-id aggregation AND the
@@ -69,26 +64,23 @@ def exact_dedup(
             "route streaming frames to "
             "streaming.pipelines.streaming_exact_dedup instead"
         )
-    fp = docs.select(F.col(id_col), fingerprint_md5(text_col).alias("fingerprint"))
+    fp = docs.select(F.col("doc_id"), fingerprint_md5("text").alias("fingerprint"))
     if pin:
         fp = fp.transform(pin_frame)
-    canon = fp.groupBy("fingerprint").agg(F.min(id_col).alias("canonical_id"))
+    canon = fp.groupBy("fingerprint").agg(F.min("doc_id").alias("canonical_id"))
     return fp.join(canon, "fingerprint").select(
-        id_col,
+        "doc_id",
         "fingerprint",
         "canonical_id",
-        (F.col(id_col) != F.col("canonical_id")).cast("int").alias("is_duplicate"),
+        (F.col("doc_id") != F.col("canonical_id")).cast("int").alias("is_duplicate"),
     )
 
 
 def doc_shingle_arrays(
     docs: DataFrame,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     nonempty: bool = False,
 ) -> DataFrame:
-    """(id, shingles) — distinct shingle ARRAY per document.
+    """(doc_id, shingles) — distinct 3-word shingle ARRAY per document.
 
     The array form is the cheap thing to persist (one row per doc, not
     one per shingle) and feeds both signature computation (hash the
@@ -106,27 +98,25 @@ def doc_shingle_arrays(
     # generated code stays small — the inline form compiled to code ~2x
     # slower to Janino-compile and evaluate.
     toks = spread_small_scan(docs).select(
-        F.col(id_col), tokens(text_col).alias("_toks")
+        F.col("doc_id"), tokens("text").alias("_toks")
     )
     if nonempty:
         # equivalent to filter(size(shingles) > 0) AFTER shingling —
         # word_shingles yields an empty array exactly when the doc has
-        # fewer than n tokens — but a post-hoc filter on the computed
+        # fewer than 3 tokens — but a post-hoc filter on the computed
         # column gets pushed below the projection with the ENTIRE
         # shingle expression inlined into the Filter condition, so the
         # build evaluated twice per doc (plan-verified on the memo
         # build job). Filtering on the token count inlines only the
         # split().
-        toks = toks.filter(F.size("_toks") >= n)
+        toks = toks.filter(F.size("_toks") >= 3)
     return toks.select(
-        F.col(id_col),
-        F.array_distinct(word_shingles(F.col("_toks"), n)).alias("shingles"),
+        F.col("doc_id"),
+        F.array_distinct(word_shingles(F.col("_toks"), 3)).alias("shingles"),
     )
 
 
-def shingle_arrays_cached(
-    docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def shingle_arrays_cached(docs: DataFrame) -> DataFrame:
     """Materialized (id, shingles) arrays with TRUNCATED lineage.
 
     Eager on purpose: the dedup pipelines consume this frame from
@@ -145,9 +135,7 @@ def shingle_arrays_cached(
     parquet dedup-index table (streaming.sinks.neardup_screen_writer
     persists exactly that); localCheckpoint is the in-session analog.
     """
-    return doc_shingle_arrays(
-        docs, n, id_col, text_col, nonempty=True
-    ).transform(pin_frame)
+    return doc_shingle_arrays(docs, nonempty=True).transform(pin_frame)
 
 
 # Session-scoped memo of shared corpus derivations, keyed by
@@ -169,9 +157,7 @@ def _memo(spark, sf_dir: str, tag: str, build) -> DataFrame:
     return df
 
 
-def corpus_shingle_arrays(
-    spark, sf_dir: str, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def corpus_shingle_arrays(spark, sf_dir: str) -> DataFrame:
     """Session-memoized, lineage-truncated shingle arrays of the shared
     ``documents`` corpus: the first caller materializes (tokenize ->
     n-gram shingle -> distinct, one row per doc), every later query in
@@ -179,16 +165,12 @@ def corpus_shingle_arrays(
     from ..sources.readers import table
 
     def build() -> DataFrame:
-        return shingle_arrays_cached(
-            table(spark, sf_dir, "documents"), n, id_col, text_col
-        )
+        return shingle_arrays_cached(table(spark, sf_dir, "documents"))
 
-    return _memo(spark, sf_dir, f"shingle_arrays:{n}:{id_col}:{text_col}", build)
+    return _memo(spark, sf_dir, "shingle_arrays", build)
 
 
-def corpus_minhash_pairs(
-    spark, sf_dir: str, threshold: float = 0.8, n: int = 3
-) -> DataFrame:
+def corpus_minhash_pairs(spark, sf_dir: str, threshold: float = 0.8) -> DataFrame:
     """Session-memoized MinHash-LSH verified near-dup pairs of the
     shared corpus (the q45 result frame). Downstream consumers (cluster
     assignment, curation) re-use the materialized pair set instead of
@@ -196,27 +178,23 @@ def corpus_minhash_pairs(
 
     def build() -> DataFrame:
         return minhash_dedup_pairs(
-            None, threshold, n, arrays=corpus_shingle_arrays(spark, sf_dir, n)
+            None, threshold, arrays=corpus_shingle_arrays(spark, sf_dir)
         ).transform(pin_frame)
 
-    return _memo(spark, sf_dir, f"minhash_pairs:{threshold}:{n}", build)
+    return _memo(spark, sf_dir, f"minhash_pairs:{threshold}", build)
 
 
-def doc_shingles(
-    docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def doc_shingles(docs: DataFrame) -> DataFrame:
     """(id, shingle) — distinct shingles per document, exploded.
 
     Exploding drops empty arrays, so routing through the size-filtered
     cached array frame is result-identical to shingling inline."""
-    return shingle_arrays_cached(docs, n, id_col, text_col).select(
-        F.col(id_col), F.explode("shingles").alias("shingle")
+    return shingle_arrays_cached(docs).select(
+        F.col("doc_id"), F.explode("shingles").alias("shingle")
     )
 
 
-def stop_shingle_cut(
-    shingled: DataFrame, max_doc_freq: int, id_col: str = "doc_id"
-) -> DataFrame:
+def stop_shingle_cut(shingled: DataFrame, max_doc_freq: int) -> DataFrame:
     """Drop shingles whose document frequency exceeds ``max_doc_freq``.
 
     The skew guard for the exact-Jaccard path: the shingle self-join is
@@ -238,9 +216,7 @@ def stop_shingle_cut(
     return shingled.join(keep, "shingle", "left_semi")
 
 
-def jaccard_pairs(
-    shingled: DataFrame, threshold: float, id_col: str = "doc_id"
-) -> DataFrame:
+def jaccard_pairs(shingled: DataFrame, threshold: float) -> DataFrame:
     """Exact pairwise Jaccard over documents sharing >= 1 shingle.
 
     Output: (id_a, id_b, n_inter, jaccard) with id_a < id_b.
@@ -249,19 +225,19 @@ def jaccard_pairs(
     # with truncated lineage — see shingle_arrays_cached for why a lazy
     # persist races and why checkpoint beats persist here
     shingled = shingled.transform(pin_frame)
-    sizes = shingled.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+    sizes = shingled.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     # length filter (PPJoin family): J <= min/max, so a pair whose
     # size ratio is below the threshold can NEVER pass the final
     # filter — prune it BEFORE the pair aggregation. The 0.5 slack
     # keeps the float comparison lossless for integer sizes (a true
     # J >= t pair has min >= t*max in exact arithmetic; float error
     # is ~1e-12, far inside the slack), so output rows are unchanged.
-    sized = shingled.join(F.broadcast(sizes), id_col)
+    sized = shingled.join(F.broadcast(sizes), "doc_id")
     a = sized.select(
-        F.col(id_col).alias("id_a"), "shingle", F.col("n_sh").alias("n_a0")
+        F.col("doc_id").alias("id_a"), "shingle", F.col("n_sh").alias("n_a0")
     )
     b = sized.select(
-        F.col(id_col).alias("id_b"), "shingle", F.col("n_sh").alias("n_b0")
+        F.col("doc_id").alias("id_b"), "shingle", F.col("n_sh").alias("n_b0")
     )
     ratio_ok = F.least("n_a0", "n_b0") >= (
         F.lit(threshold) * F.greatest("n_a0", "n_b0") - 0.5
@@ -272,8 +248,8 @@ def jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"))
     return (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
@@ -288,10 +264,7 @@ def jaccard_pairs(
 
 
 def jaccard_pairs_capped(
-    shingled: DataFrame,
-    threshold: float,
-    max_doc_freq: int,
-    id_col: str = "doc_id",
+    shingled: DataFrame, threshold: float, max_doc_freq: int
 ) -> DataFrame:
     """Exact pairwise Jaccard >= threshold with the stop-shingle cut
     folded in — result-identical to ``stop_shingle_cut(shingled, cap)``
@@ -326,14 +299,14 @@ def jaccard_pairs_capped(
     (every current caller) set == list, bit-identically."""
     pl = (
         shingled.groupBy("shingle")
-        .agg(F.sort_array(F.collect_set(F.col(id_col))).alias("_ds"))
+        .agg(F.sort_array(F.collect_set(F.col("doc_id"))).alias("_ds"))
         .filter(F.size("_ds") <= max_doc_freq)
         .select("_ds")
         .transform(pin_frame)
     )
     sizes = (
-        pl.select(F.explode("_ds").alias(id_col))
-        .groupBy(id_col)
+        pl.select(F.explode("_ds").alias("doc_id"))
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_sh"))
     )
     multi = pl.filter(F.size("_ds") >= 2).repartition(
@@ -353,8 +326,8 @@ def jaccard_pairs_capped(
         .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .agg(F.count("*").alias("n_inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"))
     return (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
@@ -368,17 +341,17 @@ def jaccard_pairs_capped(
     )
 
 
-def minhash_signatures(shingled: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def minhash_signatures(shingled: DataFrame) -> DataFrame:
     """(id, mh0..mh15): min over shingles of (a*H(sh)+b) mod p."""
     h = shingled.withColumn("_h", hash64("shingle") % MINHASH_PRIME)
     aggs = [
         F.min((F.lit(a) * F.col("_h") + F.lit(b)) % MINHASH_PRIME).alias(f"mh{i}")
         for i, (a, b) in enumerate(MINHASH_PERMS)
     ]
-    return h.groupBy(id_col).agg(*aggs)
+    return h.groupBy("doc_id").agg(*aggs)
 
 
-def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     """Banded-LSH candidate pairs: equal md5 over any band of the
     signature. Output (id_a, id_b) distinct, id_a < id_b.
 
@@ -393,10 +366,10 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id") -> DataFr
         cols = [f"mh{band * rows_per_band + j}" for j in range(rows_per_band)]
         keys.append(F.md5(F.concat_ws(",", *[F.col(c).cast("string") for c in cols])))
     banded = signatures.select(
-        F.col(id_col), F.posexplode(F.array(*keys)).alias("band", "bk")
+        F.col("doc_id"), F.posexplode(F.array(*keys)).alias("band", "bk")
     )
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "bk")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "bk")
+    a = banded.select(F.col("doc_id").alias("id_a"), "band", "bk")
+    b = banded.select(F.col("doc_id").alias("id_b"), "band", "bk")
     return (
         a.join(b, ["band", "bk"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -408,9 +381,6 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id") -> DataFr
 def minhash_dedup_pairs(
     docs: DataFrame | None,
     threshold: float = 0.8,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     arrays: DataFrame | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: shingle -> sign -> band-bucket join ->
@@ -425,23 +395,23 @@ def minhash_dedup_pairs(
     so the signature shuffle is 16 longs per doc per map partition.
     """
     if arrays is None:
-        arrays = shingle_arrays_cached(docs, n, id_col, text_col)
-    sigs = _minhash_sigs_from_arrays(arrays, id_col).transform(pin_frame)
+        arrays = shingle_arrays_cached(docs)
+    sigs = _minhash_sigs_from_arrays(arrays).transform(pin_frame)
     # cands feeds both the doc semi-join and the final pair join —
     # without eager materialization the band self-join runs twice
-    cands = lsh_candidate_pairs(sigs, id_col).transform(pin_frame)
+    cands = lsh_candidate_pairs(sigs).transform(pin_frame)
     # verify ONLY candidate docs: cut the corpus to docs appearing in
     # some candidate pair, explode just their shingles, exact-Jaccard —
     # the full n^2 pair join never runs (the LSH point)
     cand_docs = (
-        cands.select(F.col("id_a").alias(id_col))
-        .unionByName(cands.select(F.col("id_b").alias(id_col)))
+        cands.select(F.col("id_a").alias("doc_id"))
+        .unionByName(cands.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    sub = arrays.join(F.broadcast(cand_docs), id_col, "left_semi")
-    expl = sub.select(F.col(id_col), F.explode("shingles").alias("shingle"))
-    ea = expl.select(F.col(id_col).alias("id_a"), "shingle")
-    eb = expl.select(F.col(id_col).alias("id_b"), "shingle")
+    sub = arrays.join(F.broadcast(cand_docs), "doc_id", "left_semi")
+    expl = sub.select(F.col("doc_id"), F.explode("shingles").alias("shingle"))
+    ea = expl.select(F.col("doc_id").alias("id_a"), "shingle")
+    eb = expl.select(F.col("doc_id").alias("id_b"), "shingle")
     inter = (
         ea.join(eb, "shingle")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -449,8 +419,8 @@ def minhash_dedup_pairs(
         .agg(F.count("*").alias("n_inter"))
     )
     # per-doc sizes come free from the array length — no groupBy pass
-    sa = sub.select(F.col(id_col).alias("id_a"), F.size("shingles").alias("n_a"))
-    sb = sub.select(F.col(id_col).alias("id_b"), F.size("shingles").alias("n_b"))
+    sa = sub.select(F.col("doc_id").alias("id_a"), F.size("shingles").alias("n_a"))
+    sb = sub.select(F.col("doc_id").alias("id_b"), F.size("shingles").alias("n_b"))
     verified = (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
@@ -466,7 +436,7 @@ def minhash_dedup_pairs(
     )
 
 
-def _band_keys(signatures: DataFrame, id_col: str) -> DataFrame:
+def _band_keys(signatures: DataFrame) -> DataFrame:
     """(id, band, bk): md5 band keys, one row per band per doc."""
     n = len(MINHASH_PERMS)
     rows_per_band = n // LSH_BANDS
@@ -475,17 +445,17 @@ def _band_keys(signatures: DataFrame, id_col: str) -> DataFrame:
         cols = [f"mh{band * rows_per_band + j}" for j in range(rows_per_band)]
         keys.append(F.md5(F.concat_ws(",", *[F.col(c).cast("string") for c in cols])))
     return signatures.select(
-        F.col(id_col), F.posexplode(F.array(*keys)).alias("band", "bk")
+        F.col("doc_id"), F.posexplode(F.array(*keys)).alias("band", "bk")
     )
 
 
-def _minhash_sigs_from_arrays(arrays: DataFrame, id_col: str) -> DataFrame:
+def _minhash_sigs_from_arrays(arrays: DataFrame) -> DataFrame:
     """(id, mh0..mh15) from per-doc shingle arrays — map-only
     mapInPandas kernel (r13, VERDICT r12 item 1: the span/simhash md5
     template applied to the minhash signature path, guide S4.2).
 
-    The expression form (:func:`_minhash_sigs_from_arrays_expr`, kept
-    as the cross-checked reference) pays an interpreted
+    The expression form (kept as the cross-checked reference in
+    tests/test_span_kernel.py) pays an interpreted
     ``transform(shingles, md5-conv)`` HOF, an explode to hash grain,
     16 modular-arithmetic min aggregates per row, and a
     groupBy(id) EXCHANGE of the exploded hash stream.  The kernel does
@@ -518,7 +488,7 @@ def _minhash_sigs_from_arrays(arrays: DataFrame, id_col: str) -> DataFrame:
         for batch in batches:
             ids = []
             sigs = []
-            for did, shs in zip(batch[id_col].values, batch["shingles"].values):
+            for did, shs in zip(batch["doc_id"].values, batch["shingles"].values):
                 if shs is None or len(shs) == 0:
                     continue
                 h = np.fromiter(
@@ -530,14 +500,14 @@ def _minhash_sigs_from_arrays(arrays: DataFrame, id_col: str) -> DataFrame:
                 sigs.append(((h[:, None] * A + B) % prime).min(axis=0))
             if ids:
                 m = np.vstack(sigs)
-                out = {id_col: np.array(ids, dtype=np.int64)}
+                out = {"doc_id": np.array(ids, dtype=np.int64)}
                 for i in range(n_perm):
                     out[f"mh{i}"] = m[:, i]
                 yield pd.DataFrame(out)
             else:
                 yield pd.DataFrame(
                     {
-                        id_col: pd.Series([], dtype="int64"),
+                        "doc_id": pd.Series([], dtype="int64"),
                         **{
                             f"mh{i}": pd.Series([], dtype="int64")
                             for i in range(n_perm)
@@ -545,27 +515,8 @@ def _minhash_sigs_from_arrays(arrays: DataFrame, id_col: str) -> DataFrame:
                     }
                 )
 
-    schema = f"{id_col} long, " + ", ".join(
-        f"mh{i} long" for i in range(n_perm)
-    )
-    return arrays.select(id_col, "shingles").mapInPandas(fn, schema=schema)
-
-
-def _minhash_sigs_from_arrays_expr(arrays: DataFrame, id_col: str) -> DataFrame:
-    """JVM expression form of :func:`_minhash_sigs_from_arrays` — the
-    reference implementation the kernel is identity-tested against
-    (and the shape a pure-SQL engine would run)."""
-    hashed = arrays.select(
-        F.col(id_col),
-        F.explode(
-            F.transform("shingles", lambda s: hash64(s) % MINHASH_PRIME)
-        ).alias("_h"),
-    )
-    aggs = [
-        F.min((F.lit(a) * F.col("_h") + F.lit(b)) % MINHASH_PRIME).alias(f"mh{i}")
-        for i, (a, b) in enumerate(MINHASH_PERMS)
-    ]
-    return hashed.groupBy(id_col).agg(*aggs)
+    schema = "doc_id long, " + ", ".join(f"mh{i} long" for i in range(n_perm))
+    return arrays.select("doc_id", "shingles").mapInPandas(fn, schema=schema)
 
 
 def screen_against_index(
@@ -575,7 +526,6 @@ def screen_against_index(
     new_bands: DataFrame,
     incoming_ids: DataFrame,
     threshold: float = 0.8,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Core of ingestion-time dedup over PRECOMPUTED index state:
     ``idx_arrays`` (id, shingles) and ``idx_bands`` (id, band, bk) are
@@ -585,10 +535,10 @@ def screen_against_index(
     with its best match (rounded-Jaccard desc, index id asc) or NULL.
     """
     cand = (
-        idx_bands.select(F.col(id_col).alias("_idx_id"), "band", "bk")
+        idx_bands.select(F.col("doc_id").alias("_idx_id"), "band", "bk")
         .join(
             F.broadcast(
-                new_bands.select(F.col(id_col).alias("_new_id"), "band", "bk")
+                new_bands.select(F.col("doc_id").alias("_new_id"), "band", "bk")
             ),
             ["band", "bk"],
         )
@@ -598,14 +548,14 @@ def screen_against_index(
     ver = (
         cand.join(
             idx_arrays.select(
-                F.col(id_col).alias("_idx_id"), F.col("shingles").alias("_ish")
+                F.col("doc_id").alias("_idx_id"), F.col("shingles").alias("_ish")
             ),
             "_idx_id",
         )
         .join(
             F.broadcast(
                 new_arrays.select(
-                    F.col(id_col).alias("_new_id"), F.col("shingles").alias("_nsh")
+                    F.col("doc_id").alias("_new_id"), F.col("shingles").alias("_nsh")
                 )
             ),
             "_new_id",
@@ -624,16 +574,16 @@ def screen_against_index(
         ver.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(
-            F.col("_new_id").alias(id_col),
+            F.col("_new_id").alias("doc_id"),
             F.col("_idx_id").alias("matched_id"),
             "jaccard",
         )
     )
     return (
-        incoming_ids.select(id_col)
-        .join(best, id_col, "left")
+        incoming_ids.select("doc_id")
+        .join(best, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "matched_id",
             "jaccard",
             F.col("matched_id").isNotNull().cast("int").alias("is_dup"),
@@ -645,9 +595,6 @@ def incremental_dedup(
     index_docs: DataFrame,
     incoming_docs: DataFrame,
     threshold: float = 0.8,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     index_arrays: DataFrame | None = None,
     incoming_arrays: DataFrame | None = None,
 ) -> DataFrame:
@@ -674,29 +621,26 @@ def incremental_dedup(
     idx_arrays = index_arrays
     if idx_arrays is None:
         idx_arrays = doc_shingle_arrays(
-            index_docs, n, id_col, text_col, nonempty=True
+            index_docs, nonempty=True
         ).transform(pin_frame)
     new_arrays = incoming_arrays
     if new_arrays is None:
         new_arrays = doc_shingle_arrays(
-            incoming_docs, n, id_col, text_col, nonempty=True
+            incoming_docs, nonempty=True
         ).transform(pin_frame)
-    idx_bands = _band_keys(_minhash_sigs_from_arrays(idx_arrays, id_col), id_col)
-    new_bands = _band_keys(_minhash_sigs_from_arrays(new_arrays, id_col), id_col)
+    idx_bands = _band_keys(_minhash_sigs_from_arrays(idx_arrays))
+    new_bands = _band_keys(_minhash_sigs_from_arrays(new_arrays))
     return screen_against_index(
         idx_arrays,
         idx_bands,
         new_arrays,
         new_bands,
-        incoming_docs.select(id_col),
+        incoming_docs.select("doc_id"),
         threshold,
-        id_col,
     )
 
 
-def simhash_signatures(
-    docs: DataFrame, bits: int = 32, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash_signatures(docs: DataFrame, bits: int = 32) -> DataFrame:
     """(id, simhash): tf-weighted bitwise-majority of token hashes.
 
     mapInPandas kernel (r12, guide S4.2 — the span_hash_rows
@@ -706,9 +650,8 @@ def simhash_signatures(
     signature is ONE map pass, no shuffle at all.  All arithmetic is
     integer-exact (sum of +-1 per bit == 2*ones - n; bit set iff
     sum > 0), so output is bit-identical to the expression form
-    (:func:`_simhash_signatures_expr`, kept as the cross-checked
-    reference — tests/test_span_kernel.py asserts equality on the
-    corpus fixture and edge docs).  Measured 0.675 -> 0.407 s at
+    (kept as the cross-checked reference in tests/test_span_kernel.py,
+    which asserts equality on the corpus fixture and edge docs).  Measured 0.675 -> 0.407 s at
     sf0.1 warm.  Spread first: the derivation is CPU-bound map work
     and an under-partitioned scan would put it all on one task.
     A NULL text row is skipped (matching the expression form, whose
@@ -725,7 +668,7 @@ def simhash_signatures(
         for b in batches:
             ids = []
             sigs = []
-            for did, txt in zip(b[id_col].values, b[text_col].values):
+            for did, txt in zip(b["doc_id"].values, b["text"].values):
                 if txt is None:
                     continue
                 toks = txt.lower().split(" ")
@@ -738,45 +681,17 @@ def simhash_signatures(
                 ids.append(did)
                 sigs.append(sig)
             yield pd.DataFrame(
-                {id_col: ids, "simhash": np.array(sigs, dtype=np.int64)}
+                {"doc_id": ids, "simhash": np.array(sigs, dtype=np.int64)}
             )
 
     return (
         spread_small_scan(docs)
-        .select(id_col, text_col)
-        .mapInPandas(fn, schema=f"{id_col} long, simhash long")
+        .select("doc_id", "text")
+        .mapInPandas(fn, schema="doc_id long, simhash long")
     )
 
 
-def _simhash_signatures_expr(
-    docs: DataFrame, bits: int = 32, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """JVM expression form of :func:`simhash_signatures` — the
-    reference implementation the kernel is identity-tested against
-    (and the shape a pure-SQL engine would run)."""
-    tok = spread_small_scan(docs).select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("tok")
-    )
-    tok = tok.withColumn("_h", hash64("tok"))
-    aggs = [
-        F.sum(
-            F.when(F.expr(f"(shiftright(_h, {b}) & 1) = 1"), 1).otherwise(-1)
-        ).alias(f"s{b}")
-        for b in range(bits)
-    ]
-    sums = tok.groupBy(id_col).agg(*aggs)
-    sig = None
-    for b in range(bits):
-        term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = term if sig is None else (sig + term)
-    return sums.select(F.col(id_col), sig.alias("simhash"))
-
-
-def dedup_clusters(
-    pairs: DataFrame, max_iter: int = 10
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components of the near-dup pair graph: every document
     that appears in some pair gets (doc_id, cluster_id, is_canonical),
     cluster_id = smallest doc_id reachable via pair edges, canonical =
@@ -788,7 +703,7 @@ def dedup_clusters(
     list + one groupBy min), stopping when a round changes nothing.
     Rounds needed = component diameter, and near-dup components are
     small dense clusters (diameter a few hops), so the loop converges
-    in 2-4 rounds; ``max_iter`` hard-caps adversarial chains. Each
+    in 2-4 rounds; a cap of 10 rounds stops adversarial chains. Each
     round localCheckpoints eagerly — lineage stays O(1) instead of
     growing per iteration.
 
@@ -816,7 +731,7 @@ def dedup_clusters(
         ).collect()[0][0]
 
     prev_sum = _label_sum(labels)
-    for _ in range(max_iter):
+    for _ in range(10):
         nbr = sym.join(
             labels.select(F.col("id").alias("dst"), "label"), "dst"
         ).select(F.col("src").alias("id"), "label")
@@ -843,7 +758,6 @@ def prefix_filter_pairs(
     arrays: DataFrame,
     t_num: int = 4,
     t_den: int = 5,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """EXACT Jaccard pairs >= threshold via prefix filtering (the
     PPJoin/All-Pairs family) — the third candidate-generation strategy
@@ -871,20 +785,20 @@ def prefix_filter_pairs(
     # rounds to 4.0000000000000004 in IEEE (ceil 5) but to 4.0 in a
     # decimal engine (ceil 4), so a float formulation could never
     # hash-match across engines on boundary sizes
-    expl = arrays.select(F.col(id_col), F.explode("shingles").alias("shingle"))
+    expl = arrays.select(F.col("doc_id"), F.explode("shingles").alias("shingle"))
     dfreq = expl.groupBy("shingle").agg(F.count("*").alias("_df"))
     # per-doc shingle list in global (df, shingle) order: collect_list
     # order is nondeterministic, array_sort normalizes it
     ordered = (
         expl.join(dfreq, "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.array_sort(
                 F.collect_list(F.struct(F.col("_df"), F.col("shingle")))
             ).alias("_ord")
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.transform("_ord", lambda s: s.getField("shingle")).alias("_sorted"),
             F.size("_ord").alias("_n"),
         )
@@ -893,15 +807,15 @@ def prefix_filter_pairs(
     ceil_tn = F.expr(f"({t_num} * _n + {t_den - 1}) div {t_den}")
     prefix_len = F.col("_n") - ceil_tn + 1
     prefix = ordered.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("_n"),
         F.explode(F.slice("_sorted", 1, prefix_len.cast("int"))).alias("shingle"),
     )
     a = prefix.select(
-        F.col(id_col).alias("id_a"), F.col("_n").alias("_na"), "shingle"
+        F.col("doc_id").alias("id_a"), F.col("_n").alias("_na"), "shingle"
     )
     b = prefix.select(
-        F.col(id_col).alias("id_b"), F.col("_n").alias("_nb"), "shingle"
+        F.col("doc_id").alias("id_b"), F.col("_n").alias("_nb"), "shingle"
     )
     cand = (
         a.join(b, "shingle")
@@ -913,8 +827,8 @@ def prefix_filter_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    va = arrays.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("_sa"))
-    vb = arrays.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("_sb"))
+    va = arrays.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("_sa"))
+    vb = arrays.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("_sb"))
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")

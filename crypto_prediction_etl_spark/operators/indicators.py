@@ -55,8 +55,8 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 
-def _w(order_col: str = "dt"):
-    return W.partitionBy("id").orderBy(order_col)
+def _w():
+    return W.partitionBy("id").orderBy("dt")
 
 
 def _guarded(expr, n: int, w):
@@ -64,9 +64,9 @@ def _guarded(expr, n: int, w):
     return F.when(F.count("close").over(w.rowsBetween(-(n - 1), 0)) >= n, expr)
 
 
-def sma(n: int, col: str = "close"):
+def sma(n: int):
     w = _w()
-    return _guarded(F.avg(col).over(w.rowsBetween(-(n - 1), 0)), n, w)
+    return _guarded(F.avg("close").over(w.rowsBetween(-(n - 1), 0)), n, w)
 
 
 def bollinger(n: int = 20, k: float = 2.0):
@@ -92,14 +92,14 @@ def obv():
     return F.sum(signed).over(w.rowsBetween(W.unboundedPreceding, 0))
 
 
-def stochastic(n: int = 14, smooth_k: int = 3, d_periods: int = 3):
-    """%K (smoothed), %D, %J (reference: calculate_market_indicators.py:40-42,
+def stochastic():
+    """Raw %K over 14 rows (reference: calculate_market_indicators.py:40-42,
     output cols D_Create_crypto_ind_day_001.py:100-102,130-132).
 
-    Computed compositionally: raw %K over n rows -> SMA(smooth_k) -> %D =
-    SMA(d_periods) of %K -> %J = 3K - 2D. Returns exprs usable after two
-    intermediate selects (see `with_indicators`).
+    `with_window_indicators` composes the rest over two more selects:
+    %K = SMA(3) of raw %K, %D = SMA(3) of %K, %J = 3K - 2D.
     """
+    n = 14
     w = _w()
     frame = w.rowsBetween(-(n - 1), 0)
     lo = F.min("low").over(frame)
@@ -142,7 +142,7 @@ def aroon(n: int = 25):
     return rn, up, down
 
 
-def with_window_indicators(candles: DataFrame, round_to: int = 2) -> DataFrame:
+def with_window_indicators(candles: DataFrame) -> DataFrame:
     """Add every frame-bounded indicator column to a candle frame
     (id, dt, high, low, close, volume). One shuffle on id; all windows
     share the (id, dt) sort."""
@@ -430,7 +430,7 @@ def heikin_ashi(candles: DataFrame) -> DataFrame:
 ADX_N = 14
 
 
-def adx(candles: DataFrame, n: int = ADX_N) -> DataFrame:
+def adx(candles: DataFrame) -> DataFrame:
     """Wilder's Average Directional Index (ADX-14) per id: true range
     and +/- directional movement per bar, Wilder-smoothed (sum/14 seed
     then (prev*13 + x)/14), +DI/-DI ratios, DX, and ADX as a second
@@ -440,6 +440,7 @@ def adx(candles: DataFrame, n: int = ADX_N) -> DataFrame:
     Every float op is written in the exact sequence the DuckDB
     recursive-CTE oracle replays, so state stays bit-identical across
     engines."""
+    n = ADX_N
     nf = float(n)
     nm1 = float(n - 1)
 
@@ -508,7 +509,7 @@ TRIX_ALPHA = 2.0 / (TRIX_N + 1.0)
 TRIX_OMA = 1.0 - TRIX_ALPHA
 
 
-def trix(candles: DataFrame, n: int = TRIX_N) -> DataFrame:
+def trix(candles: DataFrame) -> DataFrame:
     """TRIX(15): 1-bar rate of change of a TRIPLE-smoothed EMA of
     close. Each EMA level uses the family's SMA-seed convention
     (q37/W5): level k seeds with the mean of the first 15 values of
@@ -517,6 +518,7 @@ def trix(candles: DataFrame, n: int = TRIX_N) -> DataFrame:
 
     Seeds accumulate SEQUENTIALLY (plain running sum, not np.mean) so
     the DuckDB recursive-CTE oracle replays bit-identical IEEE ops."""
+    n = TRIX_N
     nf = float(n)
     a, oma = TRIX_ALPHA, TRIX_OMA
 
@@ -680,9 +682,7 @@ def holt_winters_additive(candles: DataFrame) -> DataFrame:
 GARCH_ALPHA, GARCH_BETA = 0.08, 0.90
 
 
-def garch_filter(
-    candles: DataFrame, alpha: float = GARCH_ALPHA, beta: float = GARCH_BETA
-) -> DataFrame:
+def garch_filter(candles: DataFrame) -> DataFrame:
     """GARCH(1,1) conditional-variance filtering per id with pinned
     (alpha, beta) and variance targeting: omega = (1-alpha-beta)*vbar
     where vbar is the series' mean squared log return — the
@@ -698,7 +698,7 @@ def garch_filter(
     is out of scope by design: filtering with pinned params is the
     deterministic, hash-checkable core; the estimation loop would ride
     the same kernel."""
-    a, b = alpha, beta
+    a, b = GARCH_ALPHA, GARCH_BETA
 
     def step(pdf: pd.DataFrame):
         ret = _log_returns(pdf["close"].astype("float64").to_numpy())

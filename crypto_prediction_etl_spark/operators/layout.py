@@ -59,9 +59,7 @@ def interleave_bits(b1: Column, b2: Column, bits: int) -> Column:
     return z
 
 
-def with_zvalue(
-    df: DataFrame, dim1: str, dim2: str, bits: int = 8, z_col: str = "z"
-) -> DataFrame:
+def with_zvalue(df: DataFrame, dim1: str, dim2: str, bits: int = 8) -> DataFrame:
     """Add bucket + z-value columns for two numeric dimensions.
 
     One scalar min/max aggregate over the input (broadcast back via a
@@ -84,7 +82,7 @@ def with_zvalue(
         df.crossJoin(F.broadcast(stats))
         .withColumn("_b1", b1)
         .withColumn("_b2", b2)
-        .withColumn(z_col, interleave_bits(F.col("_b1"), F.col("_b2"), bits))
+        .withColumn("z", interleave_bits(F.col("_b1"), F.col("_b2"), bits))
         .drop("_min1", "_max1", "_min2", "_max2")
     )
 
@@ -95,7 +93,6 @@ def write_zordered(
     dim1: str,
     dim2: str,
     n_files: int = 16,
-    bits: int = 8,
 ) -> None:
     """Rewrite ``df`` as ``n_files`` parquet files clustered along the
     Z-order curve of (dim1, dim2): range-partition on the z-value (each
@@ -103,7 +100,7 @@ def write_zordered(
     row-group envelopes stay tight for the parquet reader's min-max
     skipping."""
     (
-        with_zvalue(df, dim1, dim2, bits)
+        with_zvalue(df, dim1, dim2)
         .repartitionByRange(n_files, "z")
         .sortWithinPartitions("z")
         .drop("_b1", "_b2", "z")

@@ -67,7 +67,7 @@ def payload_metadata(payload: Column) -> dict[str, Column]:
     }
 
 
-def decode_features(payloads: DataFrame, batch_schema: str | None = None) -> DataFrame:
+def decode_features(payloads: DataFrame) -> DataFrame:
     """Feature extraction over binary payloads via ``mapInPandas``.
 
     With PIL present this would decode real images; here the decode is
@@ -75,7 +75,7 @@ def decode_features(payloads: DataFrame, batch_schema: str | None = None) -> Dat
     is fully exercised. Raises NotImplementedError only for payloads
     that declare a real codec.
     """
-    schema = batch_schema or (
+    schema = (
         "doc_id long, width int, height int, n_bytes int, "
         "mean_byte double, max_byte int, body_checksum string"
     )
@@ -115,9 +115,7 @@ def decode_features(payloads: DataFrame, batch_schema: str | None = None) -> Dat
 FRAME_CHARS = 64  # fake-codec frame size (characters of the body)
 
 
-def sample_frames(
-    payloads: DataFrame, every_n: int = 2, frame_chars: int = FRAME_CHARS
-) -> DataFrame:
+def sample_frames(payloads: DataFrame, every_n: int = 2) -> DataFrame:
     """Frame sampling over binary "video" payloads via ``mapInPandas``:
     decode (fake codec = fixed-size character chunks of the body), keep
     every ``every_n``-th frame, emit one row per kept frame.
@@ -140,9 +138,9 @@ def sample_frames(
                 head, _, rest = raw.partition(b";H=")
                 _, _, body = rest.partition(b";")
                 s = body.decode("utf-8")
-                n_frames = (len(s) + frame_chars - 1) // frame_chars
+                n_frames = (len(s) + FRAME_CHARS - 1) // FRAME_CHARS
                 for idx in range(0, n_frames, every_n):
-                    fr = s[idx * frame_chars : (idx + 1) * frame_chars]
+                    fr = s[idx * FRAME_CHARS : (idx + 1) * FRAME_CHARS]
                     rows.append(
                         {
                             "doc_id": int(doc_id),
@@ -193,7 +191,7 @@ PCM_WINDOW = 128  # samples per analysis window
 PCM_BASE_SAMPLES = 256  # payload length = base + doc_id % base
 
 
-def synthetic_pcm_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthetic_pcm_payload(docs: DataFrame) -> DataFrame:
     """(id, audio) with a REAL little-endian int16 PCM payload per row.
 
     Unlike the image path (codec stubbed — PIL absent from the
@@ -208,21 +206,17 @@ def synthetic_pcm_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = []
-            for k in pdf[id_col].astype("int64"):
+            for k in pdf["doc_id"].astype("int64"):
                 n = PCM_BASE_SAMPLES + int(k) % PCM_BASE_SAMPLES
                 i = np.arange(n, dtype="int64")
                 x = (int(k) * 7919 + i * 104729) % 65536 - 32768
                 payloads.append(x.astype("<i2").tobytes())
-            yield pd.DataFrame({id_col: pdf[id_col], "audio": payloads})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "audio": payloads})
 
-    return docs.select(id_col).mapInPandas(
-        kernel, schema=f"{id_col} long, audio binary"
-    )
+    return docs.select("doc_id").mapInPandas(kernel, schema="doc_id long, audio binary")
 
 
-def pcm_window_features(
-    payloads: DataFrame, window: int = PCM_WINDOW, id_col: str = "doc_id"
-) -> DataFrame:
+def pcm_window_features(payloads: DataFrame) -> DataFrame:
     """Windowed audio features decoded from the binary PCM column:
     per window — sample count, RMS energy, zero-crossing count.
 
@@ -237,16 +231,16 @@ def pcm_window_features(
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for k, payload in zip(pdf[id_col].astype("int64"), pdf["audio"]):
+            for k, payload in zip(pdf["doc_id"].astype("int64"), pdf["audio"]):
                 x = np.frombuffer(bytes(payload), dtype="<i2").astype("int64")
                 n = len(x)
-                for w in range(0, (n + window - 1) // window):
-                    xs = x[w * window : min(n, (w + 1) * window)]
+                for w in range(0, (n + PCM_WINDOW - 1) // PCM_WINDOW):
+                    xs = x[w * PCM_WINDOW : min(n, (w + 1) * PCM_WINDOW)]
                     ssum = int((xs * xs).sum())
                     zc = int(((xs[:-1] * xs[1:]) < 0).sum())
                     rows.append(
                         {
-                            id_col: int(k),
+                            "doc_id": int(k),
                             "window_id": w,
                             "n_samples": len(xs),
                             # math.sqrt, not **0.5: pow(x, 0.5) is not
@@ -258,13 +252,13 @@ def pcm_window_features(
                     )
             yield pd.DataFrame(
                 rows,
-                columns=[id_col, "window_id", "n_samples", "rms", "zero_crossings"],
+                columns=["doc_id", "window_id", "n_samples", "rms", "zero_crossings"],
             )
 
     return payloads.mapInPandas(
         kernel,
         schema=(
-            f"{id_col} long, window_id int, n_samples long, "
+            "doc_id long, window_id int, n_samples long, "
             "rms double, zero_crossings long"
         ),
     )

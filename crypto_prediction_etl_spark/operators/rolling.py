@@ -22,9 +22,7 @@ from ..functions.portable import o_rnd, prnd
 DEFAULT_RANGES = (1, 3, 5, 7, 10, 30)
 
 
-def daily_close_stats(
-    dense: DataFrame, ranges: tuple[int, ...] = DEFAULT_RANGES, round_to: int = 4
-) -> DataFrame:
+def daily_close_stats(dense: DataFrame) -> DataFrame:
     """dense: (id, dt, high, low, close, volume) calendar-densified.
 
     Output: (symbol_id, dt_start, dt_end, stat_range, close_today,
@@ -36,13 +34,11 @@ def daily_close_stats(
     # range-stamped rows the reference materializes via 6x UNION ALL —
     # same output, 1/6th the sorts/joins/scans.
     cols = []
-    for n in ranges:
+    for n in DEFAULT_RANGES:
         lag_close = F.lag("close", n).over(w)
         cols.append(F.lag("dt", n).over(w).alias(f"_ds{n}"))
         cols.append(
-            prnd(F.avg("close").over(w.rowsBetween(-n, 0)), round_to).alias(
-                f"_ac{n}"
-            )
+            prnd(F.avg("close").over(w.rowsBetween(-n, 0)), 4).alias(f"_ac{n}")
         )
         cols.append(
             prnd(
@@ -56,12 +52,12 @@ def daily_close_stats(
     wide = dense.select(
         F.col("id").alias("symbol_id"),
         F.col("dt").alias("dt_end"),
-        prnd(F.col("close"), round_to).alias("close_today"),
+        prnd(F.col("close"), 4).alias("close_today"),
         *cols,
     )
     stack = (
-        f"stack({len(ranges)}, "
-        + ", ".join(f"'{n}', _ds{n}, _ac{n}, _roc{n}" for n in ranges)
+        f"stack({len(DEFAULT_RANGES)}, "
+        + ", ".join(f"'{n}', _ds{n}, _ac{n}, _roc{n}" for n in DEFAULT_RANGES)
         + ") AS (stat_range, dt_start, avg_close, roc)"
     )
     return wide.selectExpr(
@@ -77,12 +73,10 @@ def daily_close_stats(
     )
 
 
-def daily_close_stats_sql(
-    dense_prefix_sql: str, ranges=DEFAULT_RANGES, round_to: int = 4
-) -> str:
+def daily_close_stats_sql(dense_prefix_sql: str) -> str:
     """DuckDB oracle: same mart over a CTE prefix ending in ``dense``."""
     blocks = []
-    for n in ranges:
+    for n in DEFAULT_RANGES:
         lag_close = f"lag(close, {n}) OVER (PARTITION BY id ORDER BY dt)"
         avg_close = (
             f"avg(close) OVER (PARTITION BY id ORDER BY dt "
@@ -98,8 +92,8 @@ def daily_close_stats_sql(
          lag(dt, {n}) OVER (PARTITION BY id ORDER BY dt) AS dt_start,
          dt AS dt_end,
          '{n}' AS stat_range,
-         {o_rnd('close', round_to)} AS close_today,
-         {o_rnd(avg_close, round_to)} AS avg_close,
+         {o_rnd('close', 4)} AS close_today,
+         {o_rnd(avg_close, 4)} AS avg_close,
          {o_rnd(roc, 6)} AS roc
   FROM dense"""
         )

@@ -48,14 +48,7 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    round_to: int = 6,
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
     Output: (query_id, vec_id, cos_sim, rank), rank 1..k, deterministic
@@ -72,18 +65,18 @@ def cosine_topk(
     import pandas as pd
 
     spark = corpus.sparkSession
-    q_rows = queries.select(id_col, vec_col).collect()
+    q_rows = queries.select("vec_id", "v").collect()
     qids = np.array([r[0] for r in q_rows], dtype="int64")
     qm = np.stack([np.asarray(r[1], dtype="float64") for r in q_rows])
     qm = qm / np.linalg.norm(qm, axis=1, keepdims=True)
     bc = spark.sparkContext.broadcast((qids, qm))
 
-    scale = float(10**round_to)
+    scale = 1e6
 
     def kernel(batches):
         ids, qmat = bc.value
         for pdf in batches:
-            vm = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
+            vm = np.stack([np.asarray(v, dtype="float64") for v in pdf["v"]])
             vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
             sims = vm @ qmat.T  # (batch, n_queries)
             # round on the portable grid INSIDE the kernel (same IEEE ops
@@ -91,18 +84,18 @@ def cosine_topk(
             # ordering key (rounded sim desc, id asc) — provably a
             # superset of the global top-k
             sims = np.floor(sims * scale + 0.5001) / scale
-            vid = pdf[id_col].to_numpy()
+            vid = pdf["vec_id"].to_numpy()
             full = pd.DataFrame(
                 {
                     "query_id": np.repeat(ids, len(vid)),
-                    id_col: np.tile(vid, len(ids)),
+                    "vec_id": np.tile(vid, len(ids)),
                     "cos_sim": sims.T.reshape(-1),
                 }
             )
-            full = full[full["query_id"] != full[id_col]]
+            full = full[full["query_id"] != full["vec_id"]]
             full = (
                 full.sort_values(
-                    ["query_id", "cos_sim", id_col], ascending=[True, False, True]
+                    ["query_id", "cos_sim", "vec_id"], ascending=[True, False, True]
                 )
                 .groupby("query_id", sort=False)
                 .head(k)
@@ -114,10 +107,10 @@ def cosine_topk(
     # The kernel is map-side CPU work on the never-shuffled corpus: an
     # under-partitioned scan (one parquet file) would score every batch
     # in one task. Identity when input splits already >= parallelism.
-    scored = spread_small_scan(corpus.select(id_col, vec_col)).mapInPandas(
-        kernel, schema=f"query_id long, {id_col} long, cos_sim double"
+    scored = spread_small_scan(corpus.select("vec_id", "v")).mapInPandas(
+        kernel, schema="query_id long, vec_id long, cos_sim double"
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
+    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
@@ -155,9 +148,6 @@ def bucketed_ann_topk(
     k: int = 5,
     bits: int = 4,
     multiprobe: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    round_to: int = 6,
 ) -> DataFrame:
     """Approximate top-k: probe the query's sign-LSH bucket plus every
     bucket within Hamming distance ``multiprobe`` (classic multiprobe
@@ -176,11 +166,11 @@ def bucketed_ann_topk(
     fewer probes and more bits)."""
     import pandas as pd
 
-    c = corpus.withColumn("_bkt", sign_bucket_int(F.col(vec_col), bits))
+    c = corpus.withColumn("_bkt", sign_bucket_int(F.col("v"), bits))
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        sign_bucket_int(F.col(vec_col), bits).alias("_qbkt"),
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("_qv"),
+        sign_bucket_int(F.col("v"), bits).alias("_qbkt"),
     )
     masks = probe_masks(bits, multiprobe)
     q = q.withColumn(
@@ -188,10 +178,10 @@ def bucketed_ann_topk(
         F.explode(F.array(*[F.col("_qbkt").bitwiseXOR(F.lit(m)) for m in masks])),
     )
     joined = c.join(F.broadcast(q), "_bkt").filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
-    sim = prnd(cosine(F.col("_qv"), F.col(vec_col)), round_to)
-    scored = joined.select("query_id", id_col, sim.alias("cos_sim"))
+    sim = prnd(cosine(F.col("_qv"), F.col("v")), 6)
+    scored = joined.select("query_id", "vec_id", sim.alias("cos_sim"))
 
     # Map-side partial top-k (the q50 kernel's trick applied after the
     # bucket join): the broadcast-hash join emits candidates inside the
@@ -205,7 +195,7 @@ def bucketed_ann_topk(
         for pdf in batches:
             yield (
                 pdf.sort_values(
-                    ["query_id", "cos_sim", id_col],
+                    ["query_id", "cos_sim", "vec_id"],
                     ascending=[True, False, True],
                 )
                 .groupby("query_id", sort=False)
@@ -213,22 +203,16 @@ def bucketed_ann_topk(
             )
 
     pruned = scored.mapInPandas(
-        partial_topk, schema=f"query_id long, {id_col} long, cos_sim double"
+        partial_topk, schema="query_id long, vec_id long, cos_sim double"
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
+    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return (
         pruned.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 
 
-def write_bucketed_ann_index(
-    vecs: DataFrame,
-    path: str,
-    bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> None:
+def write_bucketed_ann_index(vecs: DataFrame, path: str, bits: int = 4) -> None:
     """Persist the corpus as a DURABLE sign-bucket ANN index: parquet
     PARTITIONED BY the integer sign bucket.
 
@@ -251,8 +235,8 @@ def write_bucketed_ann_index(
     """
     spark = vecs.sparkSession
     (
-        vecs.select(F.col(id_col), F.col(vec_col))
-        .withColumn("_bkt", sign_bucket_int(F.col(vec_col), bits))
+        vecs.select(F.col("vec_id"), F.col("v"))
+        .withColumn("_bkt", sign_bucket_int(F.col("v"), bits))
         .write.mode("overwrite")
         .partitionBy("_bkt")
         .parquet(path)
@@ -272,9 +256,6 @@ def bucketed_ann_topk_from_index(
     k: int = 5,
     bits: int | None = None,
     multiprobe: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    round_to: int = 6,
 ) -> DataFrame:
     """Probe a written bucket-partitioned index (see
     write_bucketed_ann_index) with PARTITION PRUNING: the query
@@ -306,7 +287,7 @@ def bucketed_ann_topk_from_index(
     qb = {
         r[0]
         for r in queries.select(
-            sign_bucket_int(F.col(vec_col), bits).alias("_qbkt")
+            sign_bucket_int(F.col("v"), bits).alias("_qbkt")
         )
         .distinct()
         .collect()
@@ -323,28 +304,19 @@ def bucketed_ann_topk_from_index(
         k=k,
         bits=bits,
         multiprobe=multiprobe,
-        id_col=id_col,
-        vec_col=vec_col,
-        round_to=round_to,
     )
 
 
-def near_dup_pairs(
-    corpus: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    round_to: int = 6,
-) -> DataFrame:
+def near_dup_pairs(corpus: DataFrame, threshold: float) -> DataFrame:
     """All pairs (a < b) with cosine >= threshold. EXACT BASELINE ONLY:
     the theta self-join is a nested-loop cross product — O(n^2) rows
     scored, unusable beyond ~10^4 vectors. The registered query path is
     :func:`near_dup_pairs_lsh`; this stays as the recall yardstick the
     tests measure against."""
-    a = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
+    a = corpus.select(F.col("vec_id").alias("id_a"), F.col("v").alias("_va"))
+    b = corpus.select(F.col("vec_id").alias("id_b"), F.col("v").alias("_vb"))
     pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    sim = prnd(cosine(F.col("_va"), F.col("_vb")), round_to)
+    sim = prnd(cosine(F.col("_va"), F.col("_vb")), 6)
     return pairs.select("id_a", "id_b", sim.alias("cos_sim")).filter(
         F.col("cos_sim") >= threshold
     )
@@ -355,18 +327,12 @@ def near_dup_pairs_lsh(
     threshold: float,
     bands: int = 16,
     band_bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    round_to: int = 6,
-    pin: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via banded sign-LSH prefilter + exact verify
     (the q45 MinHash-band shape applied to embeddings).
 
-    ``pin=True`` (default) eager-pins the banded signature frame, so
-    CONSTRUCTION runs a Spark job; pass ``pin=False`` from callers
-    that only build/explain the plan and pin at the consumption site.
-    The registered q51 consumer session-memoizes the whole verified
+    The banded signature frame is eager-pinned, so CONSTRUCTION runs
+    a Spark job. The registered q51 consumer session-memoizes the whole verified
     pair frame on top of this (plans/similarity_q.py), so repeated
     in-session calls pay the signature + band join once.
 
@@ -391,11 +357,11 @@ def near_dup_pairs_lsh(
     gate checks the LSH result exactly.
     """
     n_bits = bands * band_bits
-    sig = sign_bucket(F.col(vec_col), n_bits)
+    sig = sign_bucket(F.col("v"), n_bits)
     banded = (
-        corpus.select(F.col(id_col), sig.alias("_sig"))
+        corpus.select(F.col("vec_id"), sig.alias("_sig"))
         .select(
-            id_col,
+            "vec_id",
             F.explode(
                 F.array(
                     *[
@@ -410,26 +376,25 @@ def near_dup_pairs_lsh(
                 )
             ).alias("_bb"),
         )
-        .select(id_col, F.col("_bb.band").alias("band"), F.col("_bb.bkt").alias("bkt"))
+        .select("vec_id", F.col("_bb.band").alias("band"), F.col("_bb.bkt").alias("bkt"))
     )
-    if pin:
-        # both self-join sides consume the banded frame: eager-pin it
-        # (q141's law; r9 plan_dup_audit caught the signature compute +
-        # band explode planned once per side) — the pinned frame is
-        # three narrow columns, the "write the signature table once,
-        # then join it" production shape
-        banded = banded.transform(pin_frame)
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "bkt")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "bkt")
+    # both self-join sides consume the banded frame: eager-pin it
+    # (q141's law; r9 plan_dup_audit caught the signature compute +
+    # band explode planned once per side) — the pinned frame is
+    # three narrow columns, the "write the signature table once,
+    # then join it" production shape
+    banded = banded.transform(pin_frame)
+    a = banded.select(F.col("vec_id").alias("id_a"), "band", "bkt")
+    b = banded.select(F.col("vec_id").alias("id_b"), "band", "bkt")
     cand = (
         a.join(b, ["band", "bkt"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-    va = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    vb = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    sim = prnd(cosine(F.col("_va"), F.col("_vb")), round_to)
+    va = corpus.select(F.col("vec_id").alias("id_a"), F.col("v").alias("_va"))
+    vb = corpus.select(F.col("vec_id").alias("id_b"), F.col("v").alias("_vb"))
+    sim = prnd(cosine(F.col("_va"), F.col("_vb")), 6)
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -438,13 +403,7 @@ def near_dup_pairs_lsh(
     )
 
 
-def ivf_assign(
-    corpus: DataFrame,
-    seeds: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    round_to: int = 6,
-) -> DataFrame:
+def ivf_assign(corpus: DataFrame, seeds: list[list[float]]) -> DataFrame:
     """Assign every vector to its nearest coarse centroid (IVF cell).
 
     cell = argmax_j cosine(v, seed_j); ties break to the smallest j.
@@ -464,7 +423,7 @@ def ivf_assign(
         s = F.array(*[F.lit(float(x)) for x in vec])
         structs.append(
             F.struct(
-                prnd(cosine(F.col(vec_col), s), round_to).alias("c"),
+                prnd(cosine(F.col("v"), s), 6).alias("c"),
                 F.lit(-j).alias("nj"),
             )
         )
@@ -473,12 +432,7 @@ def ivf_assign(
 
 
 def ivf_probe_cells(
-    queries: DataFrame,
-    seeds: list[list[float]],
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    round_to: int = 6,
+    queries: DataFrame, seeds: list[list[float]], nprobe: int = 2
 ) -> DataFrame:
     """(query_id, qv, cell) — each query's ``nprobe`` nearest cells.
 
@@ -491,15 +445,15 @@ def ivf_probe_cells(
         s = F.array(*[F.lit(float(x)) for x in vec])
         structs.append(
             F.struct(
-                prnd(cosine(F.col(vec_col), s), round_to).alias("c"),
+                prnd(cosine(F.col("v"), s), 6).alias("c"),
                 F.lit(-j).alias("nj"),
             )
         )
     ranked = F.array_sort(F.array(*structs))
     top = F.slice(ranked, len(seeds) - nprobe + 1, nprobe)
     return queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("_qv"),
         F.explode(
             F.transform(top, lambda s: (-s.getField("nj")).cast("int"))
         ).alias("cell"),
@@ -512,9 +466,6 @@ def ivf_ann_topk(
     seeds: list[list[float]],
     k: int = 5,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    round_to: int = 6,
 ) -> DataFrame:
     """IVF approximate nearest neighbours: coarse-quantize the corpus
     into len(seeds) cells, probe each query's ``nprobe`` nearest cells,
@@ -528,27 +479,21 @@ def ivf_ann_topk(
     seeds, this is textbook IVF-Flat; the seed variant keeps a SQL
     oracle bit-exact.
     """
-    assigned = ivf_assign(corpus, seeds, id_col, vec_col, round_to)
-    probes = ivf_probe_cells(queries, seeds, nprobe, id_col, vec_col, round_to)
+    assigned = ivf_assign(corpus, seeds)
+    probes = ivf_probe_cells(queries, seeds, nprobe)
     joined = assigned.join(F.broadcast(probes), "cell").filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
-    sim = prnd(cosine(F.col("_qv"), F.col(vec_col)), round_to)
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
+    sim = prnd(cosine(F.col("_qv"), F.col("v")), 6)
+    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return (
-        joined.select("query_id", id_col, sim.alias("cos_sim"))
+        joined.select("query_id", "vec_id", sim.alias("cos_sim"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 
 
-def knn_dist_edges(
-    vecs: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    round_to: int = 6,
-) -> DataFrame:
+def knn_dist_edges(vecs: DataFrame, k: int) -> DataFrame:
     """Exact kNN edges (pid, nid, dist) by grid-rounded cosine distance.
 
     Replaces the theta-join all-pairs formulation (|V|^2 interpreted
@@ -569,21 +514,21 @@ def knn_dist_edges(
     import pandas as pd
 
     spark = vecs.sparkSession
-    rows = vecs.select(id_col, vec_col).collect()
+    rows = vecs.select("vec_id", "v").collect()
     ids = np.array([r[0] for r in rows], dtype="int64")
     m = np.stack([np.asarray(r[1], dtype="float64") for r in rows])
     m = m / np.linalg.norm(m, axis=1, keepdims=True)
     bc = spark.sparkContext.broadcast((ids, m))
-    scale = float(10**round_to)
+    scale = 1e6
 
     def kernel(batches):
         all_ids, mat = bc.value
         for pdf in batches:
             pm = np.stack(
-                [np.asarray(v, dtype="float64") for v in pdf[vec_col]]
+                [np.asarray(v, dtype="float64") for v in pdf["v"]]
             )
             pm = pm / np.linalg.norm(pm, axis=1, keepdims=True)
-            pids = pdf[id_col].to_numpy()
+            pids = pdf["vec_id"].to_numpy()
             # chunk rows so the (rows x |V|) score block stays bounded
             for lo in range(0, len(pids), 1024):
                 hi = min(lo + 1024, len(pids))
@@ -607,7 +552,7 @@ def knn_dist_edges(
 
     from ..sources.readers import spread_small_scan
 
-    return spread_small_scan(vecs.select(id_col, vec_col)).mapInPandas(
+    return spread_small_scan(vecs.select("vec_id", "v")).mapInPandas(
         kernel, schema="pid long, nid long, dist double"
     )
 
@@ -617,9 +562,6 @@ def knn_candidate_edges_bucketed(
     k: int,
     bits: int = 6,
     multiprobe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    round_to: int = 6,
     salt_target: int = 8192,
 ) -> DataFrame:
     """Approximate kNN edges (pid, nid, dist) from bucketed-ANN
@@ -670,20 +612,20 @@ def knn_candidate_edges_bucketed(
     import pandas as pd
 
     c = vecs.select(
-        F.col(id_col).alias("nid"),
-        F.col(vec_col).alias("_cv"),
-        sign_bucket_int(F.col(vec_col), bits).alias("_bkt"),
+        F.col("vec_id").alias("nid"),
+        F.col("v").alias("_cv"),
+        sign_bucket_int(F.col("v"), bits).alias("_bkt"),
     )
     masks = probe_masks(bits, multiprobe)
     p = vecs.select(
-        F.col(id_col).alias("pid"),
-        F.col(vec_col).alias("_pv"),
-        sign_bucket_int(F.col(vec_col), bits).alias("_pbkt"),
+        F.col("vec_id").alias("pid"),
+        F.col("v").alias("_pv"),
+        sign_bucket_int(F.col("v"), bits).alias("_pbkt"),
     ).withColumn(
         "_bkt",
         F.explode(F.array(*[F.col("_pbkt").bitwiseXOR(F.lit(m)) for m in masks])),
     )
-    scale = float(10**round_to)
+    scale = 1e6
 
     # per-bucket salt counts: id-only aggregates (cheap vs the vector
     # payload), inner join drops probe-only buckets — nothing to score

@@ -41,7 +41,6 @@ def kmv_distinct(
     group_col: str,
     value_col: str,
     k: int = 16,
-    round_to: int = 2,
 ) -> DataFrame:
     """(group, n_exact, kmv_estimate): KMV estimate next to the exact
     distinct count (the test oracle a pipeline QA job would keep)."""
@@ -65,7 +64,7 @@ def kmv_distinct(
     return kth.select(
         F.col(group_col),
         F.col("_nd").cast("long").alias("n_exact"),
-        prnd(est, round_to).alias("kmv_estimate"),
+        prnd(est, 2).alias("kmv_estimate"),
     )
 
 
@@ -73,7 +72,6 @@ def hll_distinct(
     df: DataFrame,
     group_col: str | list[str],
     value_col: str,
-    round_to: int = 2,
 ) -> DataFrame:
     """(group, n_exact, hll_estimate): HyperLogLog estimate next to the
     exact distinct count, bit-for-bit reproducible across engines.
@@ -129,9 +127,7 @@ def hll_distinct(
         (e_raw <= F.lit(2.5 * HLL_M)) & (v > 0),
         F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v),
     ).otherwise(e_raw)
-    est = per_group.select(
-        *gc, prnd(corrected, round_to).alias("hll_estimate")
-    )
+    est = per_group.select(*gc, prnd(corrected, 2).alias("hll_estimate"))
     exact = df.groupBy(*group_cols).agg(
         F.countDistinct(value_col).alias("n_exact")
     )
@@ -151,8 +147,6 @@ def cms_token_counts(
     df: DataFrame,
     token_col: str,
     probes: list[str],
-    rows: int = CMS_ROWS,
-    width: int = CMS_WIDTH,
 ) -> DataFrame:
     """(token, n_exact, cms_estimate) for each probe token: a
     count-min sketch built over the full token stream, probed for the
@@ -168,8 +162,8 @@ def cms_token_counts(
     """
     bkts = F.array(
         *[
-            hash64(F.concat(F.lit(f"cms{r}:"), F.col(token_col))) % width
-            for r in range(rows)
+            hash64(F.concat(F.lit(f"cms{r}:"), F.col(token_col))) % CMS_WIDTH
+            for r in range(CMS_ROWS)
         ]
     )
     # one scan: each token emits its (row, bucket) coordinates for all
@@ -178,14 +172,14 @@ def cms_token_counts(
     sketch = cells.groupBy("_row", "_bkt").agg(F.count("*").alias("_cnt"))
     probe_rows = []
     for tok in probes:
-        for r in range(rows):
+        for r in range(CMS_ROWS):
             probe_rows.append((tok, r))
     spark = df.sparkSession
     pdf = spark.createDataFrame(probe_rows, "token string, _row int")
     pdf = pdf.withColumn(
         "_bkt",
         hash64(F.concat(F.concat(F.lit("cms"), F.col("_row").cast("string"), F.lit(":")), F.col("token")))
-        % width,
+        % CMS_WIDTH,
     )
     est = (
         pdf.join(sketch, ["_row", "_bkt"], "left")

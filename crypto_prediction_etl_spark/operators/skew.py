@@ -17,11 +17,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, n_salts: int, salt_col: str = "_salt") -> DataFrame:
+def with_salt(df: DataFrame, n_salts: int) -> DataFrame:
     """Deterministic shard assignment: hash of the full row spread over
     ``n_salts`` shards (no rand() — keeps plans replayable)."""
     return df.withColumn(
-        salt_col,
+        "_salt",
         F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts)),
     )
 

@@ -122,9 +122,7 @@ def with_word_shingles(
     return df.select(*keep, out.alias(out_col))
 
 
-def span_hash_rows(
-    docs, k: int, id_col: str = "doc_id", text_col: str = "text"
-):
+def span_hash_rows(docs, k: int):
     """(id, h) — one row per token position opening a k-token span,
     ``h`` the portable 60-bit md5 hash of the space-joined span
     (:func:`functions.portable.hash64` semantics, bit-identical).
@@ -157,7 +155,7 @@ def span_hash_rows(
         for b in batches:
             ids = []
             hs = []
-            for did, txt in zip(b[id_col].values, b[text_col].values):
+            for did, txt in zip(b["doc_id"].values, b["text"].values):
                 if txt is None:
                     continue
                 toks = txt.lower().split(" ")
@@ -165,11 +163,9 @@ def span_hash_rows(
                 for i in range(n - k + 1):
                     hs.append(py_hash64(" ".join(toks[i : i + k])))
                     ids.append(did)
-            yield pd.DataFrame({id_col: ids, "h": hs})
+            yield pd.DataFrame({"doc_id": ids, "h": hs})
 
-    return docs.select(id_col, text_col).mapInPandas(
-        fn, schema=f"{id_col} long, h long"
-    )
+    return docs.select("doc_id", "text").mapInPandas(fn, schema="doc_id long, h long")
 
 
 # ---------------------------------------------------------------------------

@@ -68,8 +68,8 @@ def events_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _candles(table(spark, sf_dir, "events"), "event_type", "ts", "value")
 
 
-def calendar_spine(bounded: DataFrame, dt_col: str = "dt") -> DataFrame:
-    """Contiguous daily date spine bounded by min/max of ``dt_col``.
+def calendar_spine(bounded: DataFrame) -> DataFrame:
+    """Contiguous daily date spine bounded by min/max of ``dt``.
 
     The reference materializes a 1900-2200 dbt date_spine
     (modules/dbt/crypto_etl_pjr/models/utilities/calendar.sql:3-8) and
@@ -79,7 +79,7 @@ def calendar_spine(bounded: DataFrame, dt_col: str = "dt") -> DataFrame:
     static table.
     """
     bounds = bounded.agg(
-        F.min(dt_col).alias("_mn"), F.max(dt_col).alias("_mx")
+        F.min("dt").alias("_mn"), F.max("dt").alias("_mx")
     )
     return bounds.select(
         F.explode(F.sequence("_mn", "_mx")).alias("date_day")
@@ -137,9 +137,6 @@ def densify_sql(candles_sql: str) -> str:
 def interval_join(
     intervals: DataFrame,
     points: DataFrame,
-    start_col: str = "start_ts",
-    end_col: str = "end_ts",
-    ts_col: str = "ts",
     bucket_seconds: int = 300,
 ) -> DataFrame:
     """Half-open interval join ([start, end) contains point ts) as an
@@ -159,7 +156,7 @@ def interval_join(
     = more false candidates per bucket.
     """
     n_buckets_spanned = 2  # end - start <= bucket_seconds => 2 buckets
-    b0 = F.floor(F.unix_timestamp(F.col(start_col)) / bucket_seconds)
+    b0 = F.floor(F.unix_timestamp(F.col("start_ts")) / bucket_seconds)
     ivals = intervals.withColumn(
         "_bkt",
         F.explode(
@@ -169,10 +166,10 @@ def interval_join(
         ),
     )
     pts = points.withColumn(
-        "_bkt", F.floor(F.unix_timestamp(F.col(ts_col)) / bucket_seconds)
+        "_bkt", F.floor(F.unix_timestamp(F.col("ts")) / bucket_seconds)
     )
     return ivals.join(pts, "_bkt").filter(
-        (F.col(ts_col) >= F.col(start_col)) & (F.col(ts_col) < F.col(end_col))
+        (F.col("ts") >= F.col("start_ts")) & (F.col("ts") < F.col("end_ts"))
     )
 
 
@@ -201,12 +198,7 @@ HAWKES_ALPHA = 0.5
 HAWKES_TAU_S = 3600.0  # decay time constant (beta = 1/tau)
 
 
-def hawkes_intensity(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def hawkes_intensity(events: DataFrame) -> DataFrame:
     """Hawkes self-exciting intensity per event stream: at each event,
     the exponentially-decayed count of all earlier events
     A_k = exp(-dt_k / tau) * (A_{k-1} + 1) (A_1 = 0) and the implied
@@ -227,13 +219,13 @@ def hawkes_intensity(
     import pandas as pd
 
     out_schema = (
-        f"{key_col} string, {id_col} long, rn long, "
+        "event_type string, event_id long, rn long, "
         "decayed_count double, intensity double"
     )
     inv_tau = 1.0 / HAWKES_TAU_S
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([ts_col, id_col]).reset_index(drop=True)
+        pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
         us = pdf["_us"].to_numpy()
         n = len(us)
         a = [0.0] * n
@@ -249,8 +241,8 @@ def hawkes_intensity(
             lam[k] = HAWKES_MU + HAWKES_ALPHA * inv_tau * prev_a
         out = pd.DataFrame(
             {
-                key_col: pdf[key_col],
-                id_col: pdf[id_col],
+                "event_type": pdf["event_type"],
+                "event_id": pdf["event_id"],
                 "rn": range(1, n + 1),
                 "decayed_count": a,
                 "intensity": lam,
@@ -259,6 +251,6 @@ def hawkes_intensity(
         return out
 
     prepped = events.select(
-        key_col, id_col, ts_col, F.unix_micros(F.col(ts_col)).alias("_us")
+        "event_type", "event_id", "ts", F.unix_micros(F.col("ts")).alias("_us")
     )
-    return prepped.groupBy(key_col).applyInPandas(kernel, schema=out_schema)
+    return prepped.groupBy("event_type").applyInPandas(kernel, schema=out_schema)

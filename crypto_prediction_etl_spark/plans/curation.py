@@ -29,9 +29,9 @@ from ..sources.writers import write_partitioned
 SPLIT_TRAIN, SPLIT_VAL = 80, 90  # hash-percentile fences (80/10/10)
 
 
-def split_col(id_col: str = "doc_id") -> F.Column:
+def split_col() -> F.Column:
     """Deterministic split assignment — identical to q73's fences."""
-    bucket = hash64(F.col(id_col)) % 100
+    bucket = hash64(F.col("doc_id")) % 100
     return (
         F.when(bucket < SPLIT_TRAIN, "train")
         .when(bucket < SPLIT_VAL, "val")
@@ -39,9 +39,7 @@ def split_col(id_col: str = "doc_id") -> F.Column:
     )
 
 
-def curated_corpus(
-    docs: DataFrame, near_dup_threshold: float = 0.8
-) -> DataFrame:
+def curated_corpus(docs: DataFrame) -> DataFrame:
     """Documents surviving exact + near-dup dedup, with split column.
 
     Keep rules: a doc survives iff it is its exact-fingerprint group's
@@ -61,7 +59,7 @@ def curated_corpus(
         .select("doc_id")
     )
     near_drop = (
-        dedup_clusters(minhash_dedup_pairs(docs, near_dup_threshold))
+        dedup_clusters(minhash_dedup_pairs(docs))
         .filter(F.col("is_canonical") == 0)
         .select("doc_id")
     )
@@ -71,19 +69,14 @@ def curated_corpus(
     return kept.withColumn("split", split_col())
 
 
-def curate_corpus(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    near_dup_threshold: float = 0.8,
-) -> DataFrame:
+def curate_corpus(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFrame:
     """Run the full curation over the documents table and write the
     result partitioned by (lang, split) — the layout downstream
     training jobs partition-prune on. Overwrite mode keeps the run
     idempotent. Returns the curated frame for inspection (already
     computed by the write; its pinned dedup intermediates materialized
     eagerly during construction — see curated_corpus)."""
-    kept = curated_corpus(table(spark, sf_dir, "documents"), near_dup_threshold)
+    kept = curated_corpus(table(spark, sf_dir, "documents"))
     write_partitioned(
         kept, out_dir, partition_cols=("lang", "split"), mode="overwrite"
     )

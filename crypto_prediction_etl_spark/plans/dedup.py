@@ -158,14 +158,14 @@ def q45_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select("id_a", "id_b", prnd("jaccard", 6).alias("jaccard"))
 
 
-def _simhash_oracle(bits: int = 32) -> str:
+def _simhash_oracle() -> str:
     sums = ",\n             ".join(
         f"sum(CASE WHEN (hh >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
-        for b in range(bits)
+        for b in range(32)
     )
     sig = " + ".join(
         f"CASE WHEN s{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END"
-        for b in range(bits)
+        for b in range(32)
     )
     return f"""
     WITH d AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),

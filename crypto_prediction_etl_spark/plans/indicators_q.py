@@ -76,11 +76,11 @@ def _with_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WIN = "PARTITION BY id ORDER BY dt"
 
 
-def _sma_sql(n: int, col: str = "close") -> str:
+def _sma_sql(n: int) -> str:
     frame = f"OVER ({_WIN} ROWS BETWEEN {n - 1} PRECEDING AND CURRENT ROW)"
     return (
-        f"CASE WHEN count({col}) {frame} >= {n} "
-        f"THEN avg({col}) {frame} END"
+        f"CASE WHEN count(close) {frame} >= {n} "
+        f"THEN avg(close) {frame} END"
     )
 
 
@@ -367,22 +367,22 @@ def _cutoff(alpha: float) -> int:
     return max(10, int(math.ceil(math.log(1e-22) / math.log(1.0 - alpha))))
 
 
-def _ema_cte(n: int, src: str = "c", val: str = "close") -> str:
-    """CTE pair computing SMA-seeded EMA_n of src.val as ema_{n}(id, rn, ema)."""
+def _ema_cte(n: int) -> str:
+    """CTE pair computing SMA-seeded EMA_n of c.close as ema_{n}(id, rn, ema)."""
     alpha = 2.0 / (n + 1.0)
     k = _cutoff(alpha)
     return f"""
     seed_{n} AS (
-      SELECT id, avg({val}) AS seed FROM {src} WHERE rn <= {n} GROUP BY id
+      SELECT id, avg(close) AS seed FROM c WHERE rn <= {n} GROUP BY id
     ),
     ema_{n} AS (
       SELECT a.id, a.rn,
              s.seed * power({1.0 - alpha!r}, a.rn - {n})
-             + coalesce(sum({alpha!r} * power({1.0 - alpha!r}, a.rn - b.rn) * b.{val}), 0.0)
+             + coalesce(sum({alpha!r} * power({1.0 - alpha!r}, a.rn - b.rn) * b.close), 0.0)
                AS ema
-      FROM {src} a
+      FROM c a
       JOIN seed_{n} s ON s.id = a.id
-      LEFT JOIN {src} b
+      LEFT JOIN c b
         ON b.id = a.id AND b.rn > {n} AND b.rn <= a.rn AND b.rn >= a.rn - {k}
       WHERE a.rn >= {n}
       GROUP BY a.id, a.rn, s.seed

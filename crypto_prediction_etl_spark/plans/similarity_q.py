@@ -8,8 +8,6 @@ the portable grid before ranking so ranks hash identically.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -40,12 +38,10 @@ _COS = (
 # Row gate for _gated_broadcast: 2M rows of (long id [+ one numeric])
 # builds a hash relation well under the session's 64 MiB
 # autoBroadcastJoinThreshold and orders of magnitude under the 8 GiB
-# broadcast ceiling.  Env-overridable for cluster tuning; the default
-# is size-derived, not local-core-count-derived, so the same gate is
-# correct at any scale factor.
-_BROADCAST_GATE_ROWS = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_GATE_ROWS", "2000000")
-)
+# broadcast ceiling.  The gate is size-derived, not
+# local-core-count-derived, so the same gate is correct at any scale
+# factor.
+_BROADCAST_GATE_ROWS = 2_000_000
 
 
 def _gated_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
@@ -290,7 +286,7 @@ def q54_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q55_K, _Q55_ITERS, _Q55_DIM = 4, 5, 64
 
 
-def _q55_oracle(k: int = _Q55_K, iters: int = _Q55_ITERS, dim: int = _Q55_DIM) -> str:
+def _q55_oracle() -> str:
     """Unrolled Lloyd iterations as a chained-CTE DuckDB replay (the
     q100/q176 recursion technique applied to k-means). Exact parity
     holds because (a) the seed centroids are the k smallest-id vectors
@@ -302,7 +298,7 @@ def _q55_oracle(k: int = _Q55_K, iters: int = _Q55_ITERS, dim: int = _Q55_DIM) -
 
     def sq(a: str, c: str) -> str:
         return (
-            f"list_aggregate(list_transform(range(1, {dim + 1}), "
+            f"list_aggregate(list_transform(range(1, {_Q55_DIM + 1}), "
             f"i -> ({a}.v[i] - {c}.v[i]) * ({a}.v[i] - {c}.v[i])), 'sum')"
         )
 
@@ -310,10 +306,10 @@ def _q55_oracle(k: int = _Q55_K, iters: int = _Q55_ITERS, dim: int = _Q55_DIM) -
         _VECS_CTE.strip(),
         f"""c0 AS (
       SELECT row_number() OVER (ORDER BY vec_id) - 1 AS j, v
-      FROM e ORDER BY vec_id LIMIT {k})""",
+      FROM e ORDER BY vec_id LIMIT {_Q55_K})""",
     ]
     prev = "c0"
-    for it in range(1, iters + 1):
+    for it in range(1, _Q55_ITERS + 1):
         parts.append(f"""a{it} AS (
       SELECT vec_id, v, cluster FROM (
         SELECT x.vec_id, x.v, c.j AS cluster,
@@ -2533,7 +2529,7 @@ def _q348_oracle() -> str:
     """
 
 
-def lof_from_knn_edges(knn: DataFrame, k: int, id_filter_mod: int | None = 5) -> DataFrame:
+def lof_from_knn_edges(knn: DataFrame, k: int) -> DataFrame:
     """LOF scores from ANY (pid, nid, dist) kNN edge frame.
 
     This is the consumer half of the q348 split: it only sees edges,
@@ -2570,9 +2566,7 @@ def lof_from_knn_edges(knn: DataFrame, k: int, id_filter_mod: int | None = 5) ->
         .groupBy("pid")
         .agg((F.avg("lrd_n") / F.any_value("lrd")).alias("lof"))
     )
-    out = lof.join(kd, "pid").join(lrd, "pid")
-    if id_filter_mod is not None:
-        out = out.filter(F.col("pid") % id_filter_mod == 0)
+    out = lof.join(kd, "pid").join(lrd, "pid").filter(F.col("pid") % 5 == 0)
     return out.select(
         F.col("pid").alias("vec_id"),
         prnd("kdist", 6).alias("k_distance"),

@@ -268,7 +268,7 @@ def q141_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_chars") / _Q141_BKT).cast("long").alias("bkt"),
         F.substring("text", 1, _Q141_PFX).alias("pfx"),
     )
-    sigs = _minhash_sigs_from_arrays(corpus_shingle_arrays(spark, sf_dir), "doc_id")
+    sigs = _minhash_sigs_from_arrays(corpus_shingle_arrays(spark, sf_dir))
     # Pin the banded frame before the self-join: the two sides differ
     # only in aliases, so Catalyst plans the signature aggregation +
     # band explode TWICE with no exchange reuse.  The pinned frame is
@@ -279,9 +279,7 @@ def q141_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches of one job (shingle_arrays_cached docstring; ADVICE r8):
     # a lazy checkpoint lets the two join-side stages race and each
     # recompute not-yet-cached partitions of the signature agg.
-    banded = (
-        _band_keys(sigs, "doc_id").join(d, "doc_id").transform(pin_frame)
-    )
+    banded = _band_keys(sigs).join(d, "doc_id").transform(pin_frame)
     a = banded.select(
         F.col("doc_id").alias("id_a"),
         "band",
@@ -1252,81 +1250,6 @@ def _q249_oracle() -> str:
     """
 
 
-def _q249_spark_round(spark, toks_df, r):
-    """One merge round on a (doc_id, toks) frame; returns
-    (round_summary_df, next_toks_df)."""
-    from pyspark.sql import Window as W
-
-    pr = toks_df.select(
-        "doc_id", F.posexplode("toks").alias("pos0", "tok")
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok")
-    wdoc = W.partitionBy("doc_id").orderBy("pos")
-    nb = pr.select(
-        "doc_id", "pos", "tok", F.lead("tok").over(wdoc).alias("nxt")
-    )
-    top = (
-        nb.filter(F.col("nxt").isNotNull())
-        .groupBy(F.col("tok").alias("a"), F.col("nxt").alias("b"))
-        .agg(F.count("*").cast("long").alias("n_occ"))
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                W.orderBy(F.col("n_occ").desc(), "a", "b")
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .transform(pin_loop)
-    )
-    mt = nb.join(
-        F.broadcast(top),
-        (F.col("tok") == F.col("a")) & (F.col("nxt") == F.col("b")),
-    ).select("doc_id", "pos")
-    isl = mt.select(
-        "doc_id",
-        "pos",
-        (F.col("pos") - F.row_number().over(wdoc)).alias("grp"),
-    )
-    wgrp = W.partitionBy("doc_id", "grp").orderBy("pos")
-    st = (
-        isl.withColumn("k", F.row_number().over(wgrp))
-        .filter(F.col("k") % 2 == 1)
-        .select("doc_id", "pos")
-        .transform(pin_loop)
-    )
-    s1 = st.select("doc_id", F.col("pos").alias("pos"), F.lit(1).alias("_m"))
-    s2 = st.select(
-        "doc_id", (F.col("pos") + 1).alias("pos"), F.lit(1).alias("_d")
-    )
-    rb = (
-        pr.crossJoin(F.broadcast(top.select("a", "b")))
-        .join(s1, ["doc_id", "pos"], "left")
-        .join(s2, ["doc_id", "pos"], "left")
-        .filter(F.col("_d").isNull())
-        .select(
-            "doc_id",
-            "pos",
-            F.when(
-                F.col("_m").isNotNull(),
-                F.concat(F.col("a"), F.lit("~"), F.col("b")),
-            )
-            .otherwise(F.col("tok"))
-            .alias("tok"),
-        )
-    )
-    nxt_toks = rb.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-            lambda s: s["tok"],
-        ).alias("toks")
-    )
-    n_merges = st.groupBy().agg(F.count("*").cast("long").alias("n_merges"))
-    summary = top.crossJoin(F.broadcast(n_merges)).select(
-        F.lit(r).cast("int").alias("round"), "a", "b", "n_occ", "n_merges"
-    )
-    return summary, nxt_toks
-
-
 def _rx_quote(s: str) -> str:
     """java.util.regex.Pattern.quote: wrap in \\Q...\\E, splitting any
     embedded \\E so arbitrary token text is matched literally."""
@@ -1367,8 +1290,8 @@ def q249_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     resumes past it, so the overlapping second match is skipped;
     disjoint adjacent matches ('a b a b') both merge because the
     lookaround boundaries consume no separator.  Equality with the
-    window/island reference (`_q249_spark_round`, kept for the
-    identity test) is asserted in tests/test_q249_equivalence.py.
+    window/island reference (kept in tests/test_q249_equivalence.py)
+    is asserted there.
     Per round the only distributed work left is the pair-count
     groupBy (partial-aggregated zip_with pairs off the stored string)
     + a LIMIT-1 driver probe of the winner, the map-only
@@ -1384,8 +1307,7 @@ def q249_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q249_train_rounds(docs: DataFrame, rounds: int) -> DataFrame:
     """Regex-greedy BPE training loop over a (doc_id, text) frame —
     the q249 engine, factored so the identity test can drive it on
-    synthetic corpora against the window/island reference
-    (:func:`_q249_spark_round`)."""
+    synthetic corpora against the window/island reference."""
     # sentinel-wrapped token stream: join(split(lower(text)),' ') is
     # lower(text) itself, so round 1 needs no tokenize at all
     s_df = docs.select(

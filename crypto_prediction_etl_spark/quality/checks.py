@@ -85,12 +85,11 @@ def check_deletion(df: DataFrame, predicate: Column) -> CheckResult:
     return CheckResult("deletion", n == 0, f"matching rows: {n}")
 
 
-def check_row_count_parity(a: DataFrame, b: DataFrame, rel_tol: float = 0.0) -> CheckResult:
-    """Row-count parity between two tables (reference:
+def check_row_count_parity(a: DataFrame, b: DataFrame) -> CheckResult:
+    """Exact row-count parity between two tables (reference:
     cross_use_test.sql count model)."""
     na, nb = a.count(), b.count()
-    ok = na == nb if rel_tol == 0 else abs(na - nb) <= rel_tol * max(na, nb)
-    return CheckResult("row_count_parity", ok, f"{na} vs {nb}")
+    return CheckResult("row_count_parity", na == nb, f"{na} vs {nb}")
 
 
 def check_not_null(df: DataFrame, cols: list[str]) -> CheckResult:
@@ -190,10 +189,9 @@ def check_offset_lag(progress: dict, max_lag: int = 1000) -> CheckResult:
 def check_offset_lag_trend(
     current: dict[str, int] | None,
     previous: dict[str, int] | None,
-    max_lag: int = 1000,
 ) -> CheckResult:
     """Lag-GROWTH alarm: fail only where a partition's lag exceeds
-    ``max_lag`` AND grew since the previous snapshot — a big-but-
+    1000 AND grew since the previous snapshot — a big-but-
     draining backlog is healthy catch-up, a big-and-growing one is a
     stuck consumer (reference: check_offset_diff.py:56-69,
     ``curr > pre and ALLOWED < curr``). First run (no previous) passes.
@@ -205,7 +203,7 @@ def check_offset_lag_trend(
     bad = {
         p: (previous.get(p, 0), lag)
         for p, lag in current.items()
-        if lag > max_lag and lag > previous.get(p, 0)
+        if lag > 1000 and lag > previous.get(p, 0)
     }
     return CheckResult(
         "offset_lag_trend", not bad, f"growing over threshold: {bad or None}"

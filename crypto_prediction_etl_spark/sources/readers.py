@@ -96,15 +96,13 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def csv_bootstrap(
-    spark: SparkSession, path: str, schema=None, *, header: bool = True
-) -> DataFrame:
+def csv_bootstrap(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """CSV external-table bootstrap (reference:
     modules/hive_operations/query_script/init_insert_crypto_candles_past_from_csv.sql:1-48).
 
     Explicit schema in production — ``inferSchema`` forces an extra pass.
     """
-    reader = spark.read.option("header", str(header).lower())
+    reader = spark.read.option("header", "true")
     if schema is not None:
         reader = reader.schema(schema)
     else:

@@ -24,14 +24,12 @@ from pyspark.sql import functions as F
 DEFAULT_PARTITION_COLS = ("year", "month", "day")
 
 
-def add_partition_cols(
-    df: DataFrame, ts_col: str = "ts_create_utc", with_hour: bool = False
-) -> DataFrame:
-    """Derive year/month/day[/hour] partition columns from a timestamp."""
-    parts = {"year": F.year(ts_col), "month": F.month(ts_col), "day": F.dayofmonth(ts_col)}
-    if with_hour:
-        parts["hour"] = F.hour(ts_col)
-    return df.withColumns(parts)
+def add_partition_cols(df: DataFrame) -> DataFrame:
+    """Derive year/month/day partition columns from ``ts_create_utc``."""
+    ts = "ts_create_utc"
+    return df.withColumns(
+        {"year": F.year(ts), "month": F.month(ts), "day": F.dayofmonth(ts)}
+    )
 
 
 def write_partitioned(
@@ -56,11 +54,7 @@ def write_partitioned(
     w.save(path)
 
 
-def reload_window(
-    new_df: DataFrame,
-    path: str,
-    partition_cols: tuple[str, ...] = DEFAULT_PARTITION_COLS,
-) -> None:
+def reload_window(new_df: DataFrame, path: str) -> None:
     """Idempotent window reload (L3 delete->insert in ONE writer).
 
     With ``spark.sql.sources.partitionOverwriteMode=dynamic`` (set by
@@ -70,7 +64,7 @@ def reload_window(
     (D_Load_crypto_candles_day_001/_003.sql) as a single atomic-per-
     partition operation. Re-running is a no-op-equivalent overwrite.
     """
-    new_df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+    new_df.write.mode("overwrite").partitionBy(*DEFAULT_PARTITION_COLS).parquet(path)
 
 
 def delete_partitions(
@@ -162,7 +156,6 @@ def write_bucketed_table(
     table_name: str,
     bucket_col: str,
     n_buckets: int = 16,
-    sort_col: str | None = None,
 ) -> None:
     """Bucketed managed table (S4 variant for repeated co-located joins).
 
@@ -171,13 +164,10 @@ def write_bucketed_table(
     fact-to-fact join on the bucket key from a full exchange into a
     local zip of pre-hashed files (see tests/test_elt.py plan assert).
     """
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_name)
+    df.write.mode("overwrite").bucketBy(n_buckets, bucket_col).saveAsTable(table_name)
 
 
-def cast_float_storage_edge(df: DataFrame, exclude: tuple[str, ...] = ()) -> DataFrame:
+def cast_float_storage_edge(df: DataFrame) -> DataFrame:
     """Compute in double, store as float32 (SURVEY hard part 5): the
     reference's Hive DDLs declare `float` for every price/volume column
     (ddl/hive/crypto_raw/candles_day.ddl:5-9); casting only at the
@@ -187,6 +177,6 @@ def cast_float_storage_edge(df: DataFrame, exclude: tuple[str, ...] = ()) -> Dat
         {
             name: F.col(name).cast("float")
             for name, dtype in df.dtypes
-            if dtype == "double" and name not in exclude
+            if dtype == "double"
         }
     )

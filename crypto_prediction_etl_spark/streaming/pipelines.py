@@ -174,7 +174,7 @@ def order_book_pipeline(raw: DataFrame) -> DataFrame:
 ORDER_BOOK_PK = ["id", "dt_create_utc", "seqid", "order_type", "order_rank"]
 
 
-def running_ohlc_stateful(grouped_stream, seq_col: str = "seq"):
+def running_ohlc_stateful(grouped_stream):
     """Custom stateful streaming operator (applyInPandasWithState):
     per-symbol running OHLC + volume over an unbounded stream.
 
@@ -184,13 +184,13 @@ def running_ohlc_stateful(grouped_stream, seq_col: str = "seq"):
     updated per micro-batch, emitted on every update.
 
     ``grouped_stream``: result of ``df.groupBy("id")`` over a stream
-    with columns (id, price, qty, <seq_col>). ``seq_col`` is the
+    with columns (id, price, qty, seq). ``seq`` is the
     event-time / trade-sequence column (the reference's trade_id /
     createTime, market_trade.py:78-99): open/close are defined by TRADE
-    ORDER, so each micro-batch folds in ``seq_col`` order — Spark gives
+    ORDER, so each micro-batch folds in ``seq`` order — Spark gives
     no intra-batch ordering guarantee, and a batch holding >1 trade per
     symbol would otherwise produce arrival-order (wrong) open/close.
-    Ties on ``seq_col`` break deterministically by (price, qty).
+    Ties on ``seq`` break deterministically by (price, qty).
     Returns the streaming DataFrame.
     """
     import pandas as pd
@@ -214,7 +214,7 @@ def running_ohlc_stateful(grouped_stream, seq_col: str = "seq"):
             o = h = l = c = None
             v, n = 0.0, 0
         for pdf in pdfs:
-            pdf = pdf.sort_values([seq_col, "price", "qty"], kind="stable")
+            pdf = pdf.sort_values(["seq", "price", "qty"], kind="stable")
             for price, qty in zip(pdf["price"], pdf["qty"]):
                 price, qty = float(price), float(qty)
                 if o is None:
@@ -239,12 +239,7 @@ def running_ohlc_stateful(grouped_stream, seq_col: str = "seq"):
     )
 
 
-def streaming_exact_dedup(
-    stream: DataFrame,
-    text_col: str = "text",
-    event_time_col: str = "ts",
-    delay: str = "10 minutes",
-) -> DataFrame:
+def streaming_exact_dedup(stream: DataFrame) -> DataFrame:
     """Streaming exact dedup: drop re-ingested duplicate documents by
     content fingerprint, with state bounded by the watermark.
 
@@ -253,7 +248,7 @@ def streaming_exact_dedup(
     text (same canon form as the batch op, so batch and stream agree
     on what "identical" means), then ``dropDuplicatesWithinWatermark``
     keeps ONE state entry per fingerprint only until the watermark
-    passes ``delay`` beyond its event time. Unbounded-key streams stay
+    passes 10 minutes beyond its event time ``ts``. Unbounded-key streams stay
     bounded: state is O(distinct fingerprints per watermark window),
     not O(all history) — the difference between a dedup that survives
     a week of 100 TB ingest and one that OOMs on day one. Emission is
@@ -262,8 +257,8 @@ def streaming_exact_dedup(
     """
     from ..operators.text import fingerprint_md5
 
-    fp = stream.withColumn("fingerprint", fingerprint_md5(text_col))
-    return fp.withWatermark(event_time_col, delay).dropDuplicatesWithinWatermark(
+    fp = stream.withColumn("fingerprint", fingerprint_md5("text"))
+    return fp.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
         ["fingerprint"]
     )
 
@@ -271,12 +266,11 @@ def streaming_exact_dedup(
 def trade_candle_stream_join(
     trades: DataFrame,
     candles: DataFrame,
-    candle_seconds: int = 60,
     watermark: str = "2 minutes",
     how: str = "inner",
 ) -> DataFrame:
     """Watermarked stream-stream interval join: stamp each trade with
-    the same-symbol candle whose [startTime, startTime+candle_seconds)
+    the same-symbol candle whose [startTime, startTime+60 s)
     window contains the trade's createTime — the enrich step that fuses
     the reference's two independent topic pipelines (market_trade +
     candles_minute) into one stream.
@@ -284,7 +278,7 @@ def trade_candle_stream_join(
     Both inputs take event-time watermarks and the join condition
     bounds the two event times' distance, which is exactly what lets
     Spark evict join state: each side buffers only rows newer than
-    the other side's watermark minus candle_seconds — state is
+    the other side's watermark minus the 60 s candle — state is
     O(in-flight window x symbols), not O(stream history), at any
     scale. Inner join in append mode emits a row as soon as both sides
     of a match have arrived; ``how="left_outer"`` additionally emits
@@ -315,7 +309,7 @@ def trade_candle_stream_join(
         & (t["trade_ts"] >= c["candle_start_ts"])
         & (
             t["trade_ts"]
-            < c["candle_start_ts"] + F.expr(f"INTERVAL {candle_seconds} SECONDS")
+            < c["candle_start_ts"] + F.expr("INTERVAL 60 SECONDS")
         )
     )
     return t.join(c, cond, how).select(
@@ -332,7 +326,7 @@ def trade_candle_stream_join(
     )
 
 
-def running_zscore_tws(grouped_stream, seq_col: str = "seq"):
+def running_zscore_tws(grouped_stream):
     """Stateful streaming via the Spark 4 ``transformWithStateInPandas``
     API (the arbitrary-state successor to applyInPandasWithState):
     per-symbol running mean/variance (Welford) held in a ValueState,
@@ -341,7 +335,7 @@ def running_zscore_tws(grouped_stream, seq_col: str = "seq"):
 
     Complements ``running_ohlc_stateful``: same one-shuffle-per-batch
     execution (state lives in the state store, partitioned by key;
-    batches fold in ``seq_col`` order for determinism), but on the new
+    batches fold in ``seq`` order for determinism), but on the new
     StatefulProcessor handle API with typed ValueState, timers
     available, and state schema evolution — where new stateful
     operators should land.
@@ -384,8 +378,8 @@ def running_zscore_tws(grouped_stream, seq_col: str = "seq"):
                 n, mean, m2 = 0, 0.0, 0.0
             out = []
             for pdf in rows:
-                pdf = pdf.sort_values([seq_col, "price"], kind="stable")
-                for seq, price in zip(pdf[seq_col], pdf["price"]):
+                pdf = pdf.sort_values(["seq", "price"], kind="stable")
+                for seq, price in zip(pdf["seq"], pdf["price"]):
                     price = float(price)
                     if n >= 2 and m2 > 0.0:
                         z = (price - mean) / math.sqrt(m2 / (n - 1))

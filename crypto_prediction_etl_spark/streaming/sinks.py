@@ -154,9 +154,6 @@ def neardup_screen_writer(
     spark: SparkSession,
     index_dir: str,
     out_dir: str,
-    threshold: float = 0.8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ):
     """foreachBatch function: screen each document micro-batch against
     the PERSISTED near-dup band index, emit a keep/drop decision per
@@ -198,14 +195,12 @@ def neardup_screen_writer(
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         new_arrays = (
-            doc_shingle_arrays(batch_df, id_col=id_col, text_col=text_col)
+            doc_shingle_arrays(batch_df)
             .filter(F.size("shingles") > 0)
             .persist()
         )
         new_arrays.count()
-        new_bands = _band_keys(
-            _minhash_sigs_from_arrays(new_arrays, id_col), id_col
-        )
+        new_bands = _band_keys(_minhash_sigs_from_arrays(new_arrays))
         try:
             idx_arrays = spark.read.parquet(arrays_dir)
             idx_bands = spark.read.parquet(bands_dir)
@@ -216,8 +211,8 @@ def neardup_screen_writer(
         except Exception:
             idx_arrays = idx_bands = None
         if idx_arrays is None:
-            decisions = batch_df.select(id_col).select(
-                id_col,
+            decisions = batch_df.select("doc_id").select(
+                "doc_id",
                 F.lit(None).cast("long").alias("matched_id"),
                 F.lit(None).cast("double").alias("jaccard"),
                 F.lit(0).alias("is_dup"),
@@ -228,22 +223,20 @@ def neardup_screen_writer(
                 idx_bands,
                 new_arrays,
                 new_bands,
-                batch_df.select(id_col),
-                threshold,
-                id_col,
+                batch_df.select("doc_id"),
             )
         decisions = decisions.withColumn("_epoch", F.lit(epoch_id)).persist()
         decisions.count()
         _write_epoch(decisions, out_dir)
-        novel = decisions.filter(F.col("is_dup") == 0).select(id_col)
+        novel = decisions.filter(F.col("is_dup") == 0).select("doc_id")
         _write_epoch(
-            new_arrays.join(F.broadcast(novel), id_col, "left_semi").withColumn(
+            new_arrays.join(F.broadcast(novel), "doc_id", "left_semi").withColumn(
                 "_epoch", F.lit(epoch_id)
             ),
             arrays_dir,
         )
         _write_epoch(
-            new_bands.join(F.broadcast(novel), id_col, "left_semi").withColumn(
+            new_bands.join(F.broadcast(novel), "doc_id", "left_semi").withColumn(
                 "_epoch", F.lit(epoch_id)
             ),
             bands_dir,
@@ -264,7 +257,6 @@ def compact_hot_table(
     order_cols: list[str],
     compacted_path: str,
     ttl_seconds: int | None = None,
-    ts_col: str = "ts_insert_utc",
     now=None,
 ) -> int:
     """Rewrite the append log as its merge-on-read view (one row per
@@ -274,7 +266,7 @@ def compact_hot_table(
     ``ttl_seconds`` additionally enforces the hot table's retention —
     Cassandra's ``default_time_to_live = 2592000``
     (ddl/cassandra/crypto/candles_realtime.ddl:20) — by dropping rows
-    whose ``ts_col`` is older than ``now - ttl_seconds`` during the same
+    whose ``ts_insert_utc`` is older than ``now - ttl_seconds`` during the same
     rewrite (no extra pass). ``now`` defaults to the current timestamp;
     pass a fixed value for deterministic runs. Idempotent: re-running
     with the same ``now`` rewrites the identical survivor set.
@@ -286,7 +278,7 @@ def compact_hot_table(
     if ttl_seconds is not None:
         now_expr = F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
         cutoff = now_expr - F.make_dt_interval(secs=F.lit(float(ttl_seconds)))
-        hot = hot.filter(F.col(ts_col).cast("timestamp") >= cutoff)
+        hot = hot.filter(F.col("ts_insert_utc").cast("timestamp") >= cutoff)
     seen = Observation()
     hot = hot.observe(seen, F.count(F.lit(1)).alias("rows"))
     hot.write.mode("overwrite").parquet(compacted_path)

@@ -27,19 +27,6 @@ from crypto_prediction_etl_spark.sources.writers import (
     write_partitioned,
 )
 
-SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "elt_tests"
-)
-
-
-@pytest.fixture()
-def workdir():
-    shutil.rmtree(SCRATCH, ignore_errors=True)
-    os.makedirs(SCRATCH)
-    yield SCRATCH
-    shutil.rmtree(SCRATCH, ignore_errors=True)
-
-
 def _frame(spark, days, symbol="BTC_USDT", price=100.0):
     rows = [
         (symbol, f"2024-01-{d:02d} 12:00:00", price + d) for d in days
@@ -48,8 +35,8 @@ def _frame(spark, days, symbol="BTC_USDT", price=100.0):
     return add_partition_cols(df.withColumn("ts_create_utc", F.to_timestamp("ts")))
 
 
-def test_partitioned_write_layout_and_pruning(spark, workdir):
-    path = os.path.join(workdir, "t1")
+def test_partitioned_write_layout_and_pruning(spark, tmp_path):
+    path = os.path.join(tmp_path, "t1")
     write_partitioned(_frame(spark, [1, 2, 3]), path)
     assert os.path.isdir(os.path.join(path, "year=2024", "month=1", "day=2"))
     got = spark.read.parquet(path).filter("day = 2")
@@ -59,8 +46,8 @@ def test_partitioned_write_layout_and_pruning(spark, workdir):
     assert "PartitionFilters: [" in plan and "day" in plan.split("PartitionFilters")[1][:120]
 
 
-def test_reload_window_is_idempotent_delete_insert(spark, workdir):
-    path = os.path.join(workdir, "t2")
+def test_reload_window_is_idempotent_delete_insert(spark, tmp_path):
+    path = os.path.join(tmp_path, "t2")
     write_partitioned(_frame(spark, [1, 2, 3, 4, 5]), path)
     # reload days 4-5 with corrected values; days 1-3 must be untouched
     corrected = _frame(spark, [4, 5], price=500.0)
@@ -72,8 +59,8 @@ def test_reload_window_is_idempotent_delete_insert(spark, workdir):
     assert out.filter("day = 1").select("close").first().close == pytest.approx(101.0)
 
 
-def test_delete_partitions_and_verify(spark, workdir):
-    path = os.path.join(workdir, "t3")
+def test_delete_partitions_and_verify(spark, tmp_path):
+    path = os.path.join(tmp_path, "t3")
     write_partitioned(_frame(spark, [1, 2, 3]), path)
     n = delete_partitions(spark, path, "day >= 2")
     assert n == 2
@@ -82,12 +69,12 @@ def test_delete_partitions_and_verify(spark, workdir):
     assert res.passed
 
 
-def test_delete_partitions_rejects_data_column_predicate(spark, workdir):
+def test_delete_partitions_rejects_data_column_predicate(spark, tmp_path):
     """A predicate on a non-partition column must fail analysis instead of
     sweeping whole directories that also hold non-matching rows."""
     from pyspark.errors import AnalysisException
 
-    path = os.path.join(workdir, "t3b")
+    path = os.path.join(tmp_path, "t3b")
     write_partitioned(_frame(spark, [1, 2, 3]), path)
     with pytest.raises(AnalysisException):
         delete_partitions(spark, path, "close > 0")
@@ -98,7 +85,7 @@ def test_delete_partitions_rejects_data_column_predicate(spark, workdir):
         delete_partitions(spark, path, "day >= 1", partition_cols=("nope",))
 
 
-def test_upsert_by_key(spark, workdir):
+def test_upsert_by_key(spark, tmp_path):
     existing = spark.createDataFrame(
         [("BTC", 1, 100.0, 10), ("BTC", 2, 200.0, 10)],
         "id string, k int, v double, ver int",
@@ -223,13 +210,13 @@ def test_salted_join_matches_plain(spark, sf_dir):
     assert salted == plain
 
 
-def test_compaction_ttl_retention(spark, workdir):
+def test_compaction_ttl_retention(spark, tmp_path):
     """TTL sweep during compaction (reference candles_realtime.ddl:20,
     default_time_to_live=2592000): expired rows dropped, fresh rows
     intact, idempotent re-run."""
     from crypto_prediction_etl_spark.streaming.sinks import compact_hot_table
 
-    path = os.path.join(workdir, "ttlhot")
+    path = os.path.join(tmp_path, "ttlhot")
     spark.createDataFrame(
         [
             ("BTC", 1, 1.0, "2024-01-01 00:00:00"),  # 44 days old -> expired
@@ -238,7 +225,7 @@ def test_compaction_ttl_retention(spark, workdir):
         ],
         "id string, k int, v double, ts_insert_utc string",
     ).withColumn("ts_insert_utc", F.to_timestamp("ts_insert_utc")).write.parquet(path)
-    out = os.path.join(workdir, "ttlcompacted")
+    out = os.path.join(tmp_path, "ttlcompacted")
     now = "2024-02-14 00:00:00"
     n = compact_hot_table(
         spark, path, ["id", "k"], ["ts_insert_utc"], out,
@@ -254,17 +241,17 @@ def test_compaction_ttl_retention(spark, workdir):
     assert n2 == 2
 
 
-def test_compaction_bounds_read_amplification(spark, workdir):
+def test_compaction_bounds_read_amplification(spark, tmp_path):
     from crypto_prediction_etl_spark.streaming.sinks import compact_hot_table
 
-    path = os.path.join(workdir, "hot")
+    path = os.path.join(tmp_path, "hot")
     for epoch in range(3):
         spark.createDataFrame(
             [("BTC", 1, float(epoch), epoch), ("BTC", 2, float(epoch), epoch)],
             "id string, k int, v double, _epoch int",
         ).write.mode("append").parquet(path)
     assert spark.read.parquet(path).count() == 6
-    out = os.path.join(workdir, "compacted")
+    out = os.path.join(tmp_path, "compacted")
     sc = spark.sparkContext
     sc.setJobGroup("compact-once", "compact_hot_table")
     try:
@@ -279,15 +266,15 @@ def test_compaction_bounds_read_amplification(spark, workdir):
     assert vals == {1: 2.0, 2: 2.0}  # newest epoch won
 
 
-def test_compaction_ttl_expiring_every_row_leaves_empty_table(spark, workdir):
+def test_compaction_ttl_expiring_every_row_leaves_empty_table(spark, tmp_path):
     from crypto_prediction_etl_spark.streaming.sinks import compact_hot_table
 
-    path = os.path.join(workdir, "stalehot")
+    path = os.path.join(tmp_path, "stalehot")
     spark.createDataFrame(
         [("BTC", 1, 1.0, "2024-01-01 00:00:00"), ("ETH", 2, 2.0, "2024-01-02 00:00:00")],
         "id string, k int, v double, ts_insert_utc string",
     ).withColumn("ts_insert_utc", F.to_timestamp("ts_insert_utc")).write.parquet(path)
-    out = os.path.join(workdir, "stalecompacted")
+    out = os.path.join(tmp_path, "stalecompacted")
     n = compact_hot_table(
         spark, path, ["id", "k"], ["ts_insert_utc"], out,
         ttl_seconds=2592000, now="2024-03-01 00:00:00",
@@ -355,13 +342,13 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir):
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
-def test_float_storage_edge(spark, workdir):
+def test_float_storage_edge(spark, tmp_path):
     from crypto_prediction_etl_spark.sources.writers import cast_float_storage_edge
 
     df = _frame(spark, [1, 2])
     out = cast_float_storage_edge(df)
     assert dict(out.dtypes)["close"] == "float"
-    path = os.path.join(workdir, "floatedge")
+    path = os.path.join(tmp_path, "floatedge")
     out.write.parquet(path)
     import glob
 
@@ -371,7 +358,7 @@ def test_float_storage_edge(spark, workdir):
     assert "float" == str(pq.read_schema(part).field("close").type)
 
 
-def test_multi_format_round_trip(spark, sf_dir, workdir):
+def test_multi_format_round_trip(spark, sf_dir, tmp_path):
     """Format-agnostic IO: the same frame writes and reads back through
     parquet, ORC, JSON-lines and CSV with values intact — the engine's
     source/sink surface is not parquet-only. (Avro requires the
@@ -390,7 +377,7 @@ def test_multi_format_round_trip(spark, sf_dir, workdir):
     expected = [tuple(r) for r in src.collect()]
     schema = src.schema
     for fmt in ("parquet", "orc", "json", "csv"):
-        path = os.path.join(workdir, f"roundtrip_{fmt}")
+        path = os.path.join(tmp_path, f"roundtrip_{fmt}")
         w = src.write.mode("overwrite").format(fmt)
         if fmt == "csv":
             w = w.option("header", "true")
@@ -404,7 +391,7 @@ def test_multi_format_round_trip(spark, sf_dir, workdir):
         assert got == expected, fmt
 
 
-def test_orc_snappy_partitioned_raw_layer(spark, sf_dir, workdir):
+def test_orc_snappy_partitioned_raw_layer(spark, sf_dir, tmp_path):
     """S4 in the reference's exact storage dress: the raw candle layer
     is `STORED AS ORC` with `orc.compress=SNAPPY` and partition columns
     (ddl/hive/crypto_raw/candles_day.ddl:27-31). write_partitioned with
@@ -418,7 +405,7 @@ def test_orc_snappy_partitioned_raw_layer(spark, sf_dir, workdir):
     from crypto_prediction_etl_spark.sources.writers import write_partitioned
 
     c = candles(spark, sf_dir).withColumn("year", F.year("dt"))
-    path = os.path.join(workdir, "orc_raw_candles")
+    path = os.path.join(tmp_path, "orc_raw_candles")
     write_partitioned(
         c, path, partition_cols=("year",), mode="overwrite",
         fmt="orc", compression="snappy",

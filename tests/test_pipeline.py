@@ -5,7 +5,6 @@ bootstrap path (S7)."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 
@@ -17,19 +16,6 @@ from crypto_prediction_etl_spark.sources.writers import (
     add_partition_cols,
     write_partitioned,
 )
-
-SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "pipeline_tests"
-)
-
-
-@pytest.fixture()
-def workdir():
-    shutil.rmtree(SCRATCH, ignore_errors=True)
-    os.makedirs(SCRATCH)
-    yield SCRATCH
-    shutil.rmtree(SCRATCH, ignore_errors=True)
-
 
 MART_COLUMNS = [
     "id", "dt", "high", "low", "close", "volume_cents", "volume", "n_multiple",
@@ -46,12 +32,12 @@ def _plan_nodes(plan: str, node: str) -> int:
     return sum(1 for ln in plan.splitlines() if ln.lstrip(" :+-").startswith(node))
 
 
-def test_indicator_mart_end_to_end(spark, sf_dir, workdir, monkeypatch):
+def test_indicator_mart_end_to_end(spark, sf_dir, tmp_path, monkeypatch):
     from crypto_prediction_etl_spark.plans import pipeline
     from crypto_prediction_etl_spark.plans.indicators_q import _with_volume
 
     candles = _with_volume(spark, sf_dir)
-    mart = os.path.join(workdir, "indicator_mart")
+    mart = os.path.join(tmp_path, "indicator_mart")
     reloaded = []
     write = pipeline.reload_window
 
@@ -113,7 +99,7 @@ def test_indicator_mart_end_to_end(spark, sf_dir, workdir, monkeypatch):
 
 
 @pytest.mark.parametrize("fault", ["duplicate_key", "null_close"])
-def test_checks_catch_a_faulty_reload(spark, sf_dir, workdir, monkeypatch, fault):
+def test_checks_catch_a_faulty_reload(spark, sf_dir, tmp_path, monkeypatch, fault):
     """The partition-pruned checks still see what a broken writer left
     in the rewritten partitions: one repeated (id, dt) row, or a NULL
     close."""
@@ -135,7 +121,7 @@ def test_checks_catch_a_faulty_reload(spark, sf_dir, workdir, monkeypatch, fault
 
     monkeypatch.setattr(pipeline, "reload_window", faulty)
     report = run_indicator_mart(
-        spark, _with_volume(spark, sf_dir), os.path.join(workdir, "mart"),
+        spark, _with_volume(spark, sf_dir), os.path.join(tmp_path, "mart"),
         lookback_days=120, update_days=30,
     )
     assert not report.passed
@@ -145,7 +131,7 @@ def test_checks_catch_a_faulty_reload(spark, sf_dir, workdir, monkeypatch, fault
     )
 
 
-def test_lookback_warmup_matches_bounded_scan(spark, sf_dir, workdir):
+def test_lookback_warmup_matches_bounded_scan(spark, sf_dir, tmp_path):
     """Indicators computed over the lookback window must equal a direct
     computation on the same bounded frame (the reference's 3-month scan
     semantics) — guards against accidental full-history leakage."""
@@ -153,7 +139,7 @@ def test_lookback_warmup_matches_bounded_scan(spark, sf_dir, workdir):
     from crypto_prediction_etl_spark.plans.indicators_q import _with_volume
 
     candles = _with_volume(spark, sf_dir)
-    mart = os.path.join(workdir, "mart2")
+    mart = os.path.join(tmp_path, "mart2")
     run_indicator_mart(spark, candles, mart, lookback_days=90, update_days=10)
 
     mx = candles.agg(F.max("dt")).first()[0]
@@ -176,10 +162,10 @@ def test_lookback_warmup_matches_bounded_scan(spark, sf_dir, workdir):
             assert have == pytest.approx(want, rel=1e-12)
 
 
-def test_csv_bootstrap_with_empty_string_filter(spark, workdir):
+def test_csv_bootstrap_with_empty_string_filter(spark, tmp_path):
     """S7 CSV external-table bootstrap + P9 empty-string filter
     (reference: init_insert_crypto_candles_past_from_csv.sql:47)."""
-    csv_dir = os.path.join(workdir, "csv_in")
+    csv_dir = os.path.join(tmp_path, "csv_in")
     os.makedirs(csv_dir)
     with open(os.path.join(csv_dir, "candles.csv"), "w") as f:
         f.write("id,open,close,ts\n")
@@ -197,7 +183,7 @@ def test_csv_bootstrap_with_empty_string_filter(spark, workdir):
         .withColumn("close", F.col("close").cast("float"))
         .withColumn("ts_create_utc", F.col("ts"))
     )
-    out = os.path.join(workdir, "bootstrapped")
+    out = os.path.join(tmp_path, "bootstrapped")
     write_partitioned(add_partition_cols(cleaned), out)
     got = spark.read.parquet(out)
     assert got.count() == 2

@@ -22,21 +22,93 @@ drives both engines over corpora built to break that claim:
 """
 from __future__ import annotations
 
-from crypto_prediction_etl_spark.plans.textprep_q import (
-    _q249_spark_round,
-    _q249_train_rounds,
-)
+from pyspark.sql import Window as W
+from pyspark.sql import functions as F
+
 from crypto_prediction_etl_spark.operators.text import tokens
+from crypto_prediction_etl_spark.pinning import pin_loop
+from crypto_prediction_etl_spark.plans.textprep_q import _q249_train_rounds
 
 
-def _reference_rounds(spark, docs, rounds: int):
+def _q249_spark_round(toks_df, r):
+    """One merge round on a (doc_id, toks) frame; returns
+    (round_summary_df, next_toks_df)."""
+    pr = toks_df.select(
+        "doc_id", F.posexplode("toks").alias("pos0", "tok")
+    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok")
+    wdoc = W.partitionBy("doc_id").orderBy("pos")
+    nb = pr.select(
+        "doc_id", "pos", "tok", F.lead("tok").over(wdoc).alias("nxt")
+    )
+    top = (
+        nb.filter(F.col("nxt").isNotNull())
+        .groupBy(F.col("tok").alias("a"), F.col("nxt").alias("b"))
+        .agg(F.count("*").cast("long").alias("n_occ"))
+        .withColumn(
+            "_rn",
+            F.row_number().over(
+                W.orderBy(F.col("n_occ").desc(), "a", "b")
+            ),
+        )
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+        .transform(pin_loop)
+    )
+    mt = nb.join(
+        F.broadcast(top),
+        (F.col("tok") == F.col("a")) & (F.col("nxt") == F.col("b")),
+    ).select("doc_id", "pos")
+    isl = mt.select(
+        "doc_id",
+        "pos",
+        (F.col("pos") - F.row_number().over(wdoc)).alias("grp"),
+    )
+    wgrp = W.partitionBy("doc_id", "grp").orderBy("pos")
+    st = (
+        isl.withColumn("k", F.row_number().over(wgrp))
+        .filter(F.col("k") % 2 == 1)
+        .select("doc_id", "pos")
+        .transform(pin_loop)
+    )
+    s1 = st.select("doc_id", F.col("pos").alias("pos"), F.lit(1).alias("_m"))
+    s2 = st.select(
+        "doc_id", (F.col("pos") + 1).alias("pos"), F.lit(1).alias("_d")
+    )
+    rb = (
+        pr.crossJoin(F.broadcast(top.select("a", "b")))
+        .join(s1, ["doc_id", "pos"], "left")
+        .join(s2, ["doc_id", "pos"], "left")
+        .filter(F.col("_d").isNull())
+        .select(
+            "doc_id",
+            "pos",
+            F.when(
+                F.col("_m").isNotNull(),
+                F.concat(F.col("a"), F.lit("~"), F.col("b")),
+            )
+            .otherwise(F.col("tok"))
+            .alias("tok"),
+        )
+    )
+    nxt_toks = rb.groupBy("doc_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "tok"))),
+            lambda s: s["tok"],
+        ).alias("toks")
+    )
+    n_merges = st.groupBy().agg(F.count("*").cast("long").alias("n_merges"))
+    summary = top.crossJoin(F.broadcast(n_merges)).select(
+        F.lit(r).cast("int").alias("round"), "a", "b", "n_occ", "n_merges"
+    )
+    return summary, nxt_toks
+
+
+def _reference_rounds(docs, rounds: int):
     """The r12 window/island loop, unchanged, as the ground truth."""
-    from crypto_prediction_etl_spark.pinning import pin_loop
-
     toks_df = docs.select("doc_id", tokens("text").alias("toks"))
     outs = []
     for r in range(1, rounds + 1):
-        summary, toks_df = _q249_spark_round(spark, toks_df, r)
+        summary, toks_df = _q249_spark_round(toks_df, r)
         outs.append(summary)
         if r < rounds:
             toks_df = toks_df.transform(pin_loop)
@@ -82,12 +154,12 @@ def test_q249_regex_engine_matches_window_reference(spark):
     for label, rows in CORPORA.items():
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         got = sorted(_q249_train_rounds(docs, 3).collect())
-        ref = sorted(_reference_rounds(spark, docs, 3).collect())
+        ref = sorted(_reference_rounds(docs, 3).collect())
         assert got == ref, f"corpus {label}: {got} != {ref}"
 
 
 def test_q249_regex_engine_matches_reference_on_corpus(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     got = sorted(_q249_train_rounds(docs, 3).collect())
-    ref = sorted(_reference_rounds(spark, docs, 3).collect())
+    ref = sorted(_reference_rounds(docs, 3).collect())
     assert got == ref

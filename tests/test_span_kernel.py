@@ -14,6 +14,13 @@ empty text.
 from pyspark.sql import functions as F
 
 from crypto_prediction_etl_spark.functions.portable import hash64, py_hash64
+from crypto_prediction_etl_spark.operators.dedup import (
+    MINHASH_PERMS,
+    MINHASH_PRIME,
+    _minhash_sigs_from_arrays,
+    doc_shingle_arrays,
+    simhash_signatures,
+)
 from crypto_prediction_etl_spark.operators.text import (
     span_hash_rows,
     tokens,
@@ -83,12 +90,46 @@ def test_doubling_ladder_matches_chained(spark):
         assert old == new
 
 
-def test_simhash_kernel_matches_expression_form(spark, sf_dir):
-    from crypto_prediction_etl_spark.operators.dedup import (
-        _simhash_signatures_expr,
-        simhash_signatures,
-    )
+def _simhash_signatures_expr(docs, bits):
+    """JVM expression form of ``simhash_signatures``: the reference the
+    kernel is identity-tested against (and the shape a pure-SQL engine
+    would run)."""
+    tok = docs.select(F.col("doc_id"), F.explode(tokens("text")).alias("tok"))
+    tok = tok.withColumn("_h", hash64("tok"))
+    aggs = [
+        F.sum(
+            F.when(F.expr(f"(shiftright(_h, {b}) & 1) = 1"), 1).otherwise(-1)
+        ).alias(f"s{b}")
+        for b in range(bits)
+    ]
+    sums = tok.groupBy("doc_id").agg(*aggs)
+    sig = None
+    for b in range(bits):
+        term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+        sig = term if sig is None else (sig + term)
+    return sums.select(F.col("doc_id"), sig.alias("simhash"))
 
+
+def _minhash_sigs_from_arrays_expr(arrays):
+    """JVM expression form of ``_minhash_sigs_from_arrays``: the
+    reference the kernel is identity-tested against (and the shape a
+    pure-SQL engine would run)."""
+    hashed = arrays.select(
+        F.col("doc_id"),
+        F.explode(
+            F.transform("shingles", lambda s: hash64(s) % MINHASH_PRIME)
+        ).alias("_h"),
+    )
+    aggs = [
+        F.min((F.lit(a) * F.col("_h") + F.lit(b)) % MINHASH_PRIME).alias(f"mh{i}")
+        for i, (a, b) in enumerate(MINHASH_PERMS)
+    ]
+    return hashed.groupBy("doc_id").agg(*aggs)
+
+
+def test_simhash_kernel_matches_expression_form(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     kern = sorted(simhash_signatures(docs, bits=32).collect())
     expr = sorted(_simhash_signatures_expr(docs, bits=32).collect())
@@ -109,16 +150,10 @@ def test_minhash_kernel_matches_expression_form(spark, sf_dir):
     hand-built edges (empty / NULL shingle arrays drop the doc in both
     forms; single-shingle docs take that shingle's 16 permuted hashes
     verbatim)."""
-    from crypto_prediction_etl_spark.operators.dedup import (
-        _minhash_sigs_from_arrays,
-        _minhash_sigs_from_arrays_expr,
-        doc_shingle_arrays,
-    )
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    arrays = doc_shingle_arrays(docs, 3, nonempty=True)
-    kern = sorted(_minhash_sigs_from_arrays(arrays, "doc_id").collect())
-    expr = sorted(_minhash_sigs_from_arrays_expr(arrays, "doc_id").collect())
+    arrays = doc_shingle_arrays(docs, nonempty=True)
+    kern = sorted(_minhash_sigs_from_arrays(arrays).collect())
+    expr = sorted(_minhash_sigs_from_arrays_expr(arrays).collect())
     assert kern and kern == expr
     edge = spark.createDataFrame(
         [
@@ -130,7 +165,7 @@ def test_minhash_kernel_matches_expression_form(spark, sf_dir):
         ],
         "doc_id long, shingles array<string>",
     )
-    ek = sorted(_minhash_sigs_from_arrays(edge, "doc_id").collect())
-    ee = sorted(_minhash_sigs_from_arrays_expr(edge, "doc_id").collect())
+    ek = sorted(_minhash_sigs_from_arrays(edge).collect())
+    ee = sorted(_minhash_sigs_from_arrays_expr(edge).collect())
     assert [r.doc_id for r in ek] == [1, 4, 5]
     assert ek == ee

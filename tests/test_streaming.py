@@ -26,9 +26,6 @@ from crypto_prediction_etl_spark.streaming.sinks import (
     start_file_stream_pipeline,
 )
 
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "stream_tests")
-
-
 def _candle_msg(id_, start, close_time, close="100.5"):
     return json.dumps(
         {
@@ -89,22 +86,13 @@ def _book_msg(id_, seqid, ts, levels=3):
     )
 
 
-@pytest.fixture()
-def workdir():
-    path = SCRATCH
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
-    yield path
-    shutil.rmtree(path, ignore_errors=True)
-
-
 BASE_TS = 1700000000  # 2023-11-14 UTC
 
 
-def _run_stream(spark, workdir, name, lines, pipeline):
-    src = os.path.join(workdir, f"{name}_src")
-    out = os.path.join(workdir, f"{name}_out")
-    ckpt = os.path.join(workdir, f"{name}_ckpt")
+def _run_stream(spark, tmp_path, name, lines, pipeline):
+    src = os.path.join(tmp_path, f"{name}_src")
+    out = os.path.join(tmp_path, f"{name}_out")
+    ckpt = os.path.join(tmp_path, f"{name}_ckpt")
     os.makedirs(src)
     with open(os.path.join(src, "batch0.jsonl"), "w") as f:
         f.write("\n".join(lines) + "\n")
@@ -113,7 +101,7 @@ def _run_stream(spark, workdir, name, lines, pipeline):
     return q, src, out, ckpt
 
 
-def test_candles_stream_end_to_end(spark, workdir):
+def test_candles_stream_end_to_end(spark, tmp_path):
     lines = [
         _candle_msg("BTC_USDT", BASE_TS, BASE_TS + 59),
         _candle_msg("ETH_USDT", BASE_TS, BASE_TS + 59),
@@ -121,7 +109,7 @@ def test_candles_stream_end_to_end(spark, workdir):
         "{not valid json",  # malformed -> dropped
         json.dumps({"data": []}),  # empty envelope -> dropped
     ]
-    q, src, out, ckpt = _run_stream(spark, workdir, "candles", lines, candles_pipeline)
+    q, src, out, ckpt = _run_stream(spark, tmp_path, "candles", lines, candles_pipeline)
     prog = progress_summary(q)
     q.stop()
 
@@ -137,9 +125,9 @@ def test_candles_stream_end_to_end(spark, workdir):
     assert prog["sources"][0]["endOffset"] == {"logOffset": 0}
 
 
-def test_candles_checkpoint_replay_no_duplicates(spark, workdir):
+def test_candles_checkpoint_replay_no_duplicates(spark, tmp_path):
     lines = [_candle_msg("BTC_USDT", BASE_TS, BASE_TS + 59)]
-    q, src, out, ckpt = _run_stream(spark, workdir, "replay", lines, candles_pipeline)
+    q, src, out, ckpt = _run_stream(spark, tmp_path, "replay", lines, candles_pipeline)
     q.stop()
     # restart on same checkpoint, no new files -> no new rows
     q2 = start_file_stream_pipeline(spark, src, candles_pipeline, out, ckpt)
@@ -155,10 +143,10 @@ def test_candles_checkpoint_replay_no_duplicates(spark, workdir):
     assert spark.read.parquet(out).count() == 2
 
 
-def test_market_trade_stream(spark, workdir):
+def test_market_trade_stream(spark, tmp_path):
     lines = [_trade_msg("BTC_USDT", i, BASE_TS + i) for i in range(5)]
     lines.append(_trade_msg("BTC_USDT", 2, BASE_TS + 2))  # dup trade_id
-    q, _, out, _ = _run_stream(spark, workdir, "trades", lines, market_trade_pipeline)
+    q, _, out, _ = _run_stream(spark, tmp_path, "trades", lines, market_trade_pipeline)
     q.stop()
     hot = read_hot_table(
         spark, out, ["id", "dt_create_utc", "trade_id"], ["ts_insert_utc", "_epoch"]
@@ -168,13 +156,13 @@ def test_market_trade_stream(spark, workdir):
     assert sides == {"buy", "sell"}
 
 
-def test_order_book_fork_explode_union(spark, workdir):
+def test_order_book_fork_explode_union(spark, tmp_path):
     lines = [
         _book_msg("BTC_USDT", 1, BASE_TS),
         _book_msg("BTC_USDT", 1, BASE_TS),  # duplicate snapshot (retry)
         _book_msg("ETH_USDT", 7, BASE_TS + 5, levels=2),
     ]
-    q, _, out, _ = _run_stream(spark, workdir, "book", lines, order_book_pipeline)
+    q, _, out, _ = _run_stream(spark, tmp_path, "book", lines, order_book_pipeline)
     q.stop()
     appended = spark.read.parquet(out)
     # 3 msgs: 2x(3 asks + 3 bids) + 1x(2+2) = 16 rows appended
@@ -222,12 +210,12 @@ def test_order_book_pipeline_parses_json_once(spark):
     assert plan.count("Generate") == 2
 
 
-def test_watermarked_window_aggregation(spark, workdir):
+def test_watermarked_window_aggregation(spark, tmp_path):
     """Event-time windowed aggregation with watermark over a file stream
     (engine extension beyond reference scope, SURVEY §2.9)."""
     import pandas as pd
 
-    src = os.path.join(workdir, "events_src")
+    src = os.path.join(tmp_path, "events_src")
     os.makedirs(src)
     pdf = pd.DataFrame(
         {
@@ -262,7 +250,7 @@ def test_watermarked_window_aggregation(spark, workdir):
     assert rows == {0: 3.0, 1: 10.0}
 
 
-def test_stateful_running_ohlc(spark, workdir):
+def test_stateful_running_ohlc(spark, tmp_path):
     """applyInPandasWithState: state persists across micro-batches."""
     import pandas as pd
 
@@ -270,7 +258,7 @@ def test_stateful_running_ohlc(spark, workdir):
         running_ohlc_stateful,
     )
 
-    src = os.path.join(workdir, "ohlc_src")
+    src = os.path.join(tmp_path, "ohlc_src")
     os.makedirs(src)
     # batch 0 holds 3 BTC trades whose price order DISAGREES with trade
     # order: open must be the seq-1 trade (105), close the seq-3 (100) —
@@ -292,7 +280,7 @@ def test_stateful_running_ohlc(spark, workdir):
         out.writeStream.outputMode("update")
         .format("memory")
         .queryName("ohlc")
-        .option("checkpointLocation", os.path.join(workdir, "ohlc_ckpt"))
+        .option("checkpointLocation", os.path.join(tmp_path, "ohlc_ckpt"))
         .start()
     )
     q.processAllAvailable()
@@ -317,10 +305,10 @@ def test_stateful_running_ohlc(spark, workdir):
     assert r.volume == 7.0
 
 
-def test_rate_limited_micro_batches(spark, workdir):
+def test_rate_limited_micro_batches(spark, tmp_path):
     """maxFilesPerTrigger (the maxOffsetsPerTrigger analog) splits the
     backlog into multiple micro-batches."""
-    src = os.path.join(workdir, "rate_src")
+    src = os.path.join(tmp_path, "rate_src")
     os.makedirs(src)
     for i in range(3):
         with open(os.path.join(src, f"f{i}.jsonl"), "w") as f:
@@ -329,18 +317,18 @@ def test_rate_limited_micro_batches(spark, workdir):
         spark,
         src,
         candles_pipeline,
-        os.path.join(workdir, "rate_out"),
-        os.path.join(workdir, "rate_ckpt"),
+        os.path.join(tmp_path, "rate_out"),
+        os.path.join(tmp_path, "rate_ckpt"),
         max_files_per_trigger=1,
     )
     q.processAllAvailable()
     last_batch = q.lastProgress["batchId"]
     q.stop()
     assert last_batch >= 2  # 3 files -> at least 3 micro-batches (0,1,2)
-    assert spark.read.parquet(os.path.join(workdir, "rate_out")).count() == 3
+    assert spark.read.parquet(os.path.join(tmp_path, "rate_out")).count() == 3
 
 
-def test_offset_lag_check_reads_live_progress(spark, workdir):
+def test_offset_lag_check_reads_live_progress(spark, tmp_path):
     """check_offset_lag on a live StreamingQueryProgress: the file
     source's {"logOffset": N} offsets parse, so the batch that reads the
     second file reports lag 1 and passes at max_lag=1."""
@@ -349,14 +337,14 @@ def test_offset_lag_check_reads_live_progress(spark, workdir):
         offset_lags,
     )
 
-    src = os.path.join(workdir, "lag_src")
+    src = os.path.join(tmp_path, "lag_src")
     os.makedirs(src)
     q = start_file_stream_pipeline(
         spark,
         src,
         candles_pipeline,
-        os.path.join(workdir, "lag_out"),
-        os.path.join(workdir, "lag_ckpt"),
+        os.path.join(tmp_path, "lag_out"),
+        os.path.join(tmp_path, "lag_ckpt"),
         max_files_per_trigger=1,
     )
     try:
@@ -373,7 +361,7 @@ def test_offset_lag_check_reads_live_progress(spark, workdir):
     assert result.passed, result.detail
 
 
-def test_stream_static_dimension_join(spark, workdir):
+def test_stream_static_dimension_join(spark, tmp_path):
     """Stream-static join: enrich the candles stream with a broadcast
     dimension table (symbol -> base/quote) — the streaming analog of the
     batch dim joins; Spark re-plans the static side per micro-batch."""
@@ -386,7 +374,7 @@ def test_stream_static_dimension_join(spark, workdir):
         _candle_msg("ETH_USDT", BASE_TS, BASE_TS + 59),
         _candle_msg("DOGE_USDT", BASE_TS, BASE_TS + 59),  # no dim row
     ]
-    src = os.path.join(workdir, "dimjoin_src")
+    src = os.path.join(tmp_path, "dimjoin_src")
     os.makedirs(src)
     with open(os.path.join(src, "b0.jsonl"), "w") as f:
         f.write("\n".join(lines) + "\n")
@@ -396,7 +384,7 @@ def test_stream_static_dimension_join(spark, workdir):
         enriched.writeStream.outputMode("append")
         .format("memory")
         .queryName("dimjoin")
-        .option("checkpointLocation", os.path.join(workdir, "dimjoin_ckpt"))
+        .option("checkpointLocation", os.path.join(tmp_path, "dimjoin_ckpt"))
         .start()
     )
     q.processAllAvailable()
@@ -406,7 +394,7 @@ def test_stream_static_dimension_join(spark, workdir):
     assert rows["DOGE_USDT"] == (None, None)  # left-outer preserved
 
 
-def test_streaming_agg_to_mart_via_foreachbatch(spark, workdir):
+def test_streaming_agg_to_mart_via_foreachbatch(spark, tmp_path):
     """Full streaming-analytics path: stream -> watermarked tumbling
     aggregation -> foreachBatch MERGE into a mart (update mode re-emits
     refined windows; the merge keeps the latest per window key) — the
@@ -415,8 +403,8 @@ def test_streaming_agg_to_mart_via_foreachbatch(spark, workdir):
 
     from crypto_prediction_etl_spark.sources.writers import upsert_by_key
 
-    src = os.path.join(workdir, "agg_src")
-    mart = os.path.join(workdir, "agg_mart")
+    src = os.path.join(tmp_path, "agg_src")
+    mart = os.path.join(tmp_path, "agg_mart")
     os.makedirs(src)
 
     def write_batch(name, rows):
@@ -455,7 +443,7 @@ def test_streaming_agg_to_mart_via_foreachbatch(spark, workdir):
     q = (
         agg.writeStream.outputMode("update")
         .foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(workdir, "agg_ckpt"))
+        .option("checkpointLocation", os.path.join(tmp_path, "agg_ckpt"))
         .start()
     )
     q.processAllAvailable()
@@ -468,7 +456,7 @@ def test_streaming_agg_to_mart_via_foreachbatch(spark, workdir):
     assert rows["2024-01-01 00:00:00"] == (13.0, 3)  # refined, not duplicated
 
 
-def test_kafka_source_option_surface(spark, workdir):
+def test_kafka_source_option_surface(spark, tmp_path):
     """The Kafka seam: same pipeline, source swapped by (format, options).
     No broker exists here, so assert the option surface mirrors the
     reference reader (read_stream.py:6-19) and that the generic
@@ -491,25 +479,25 @@ def test_kafka_source_option_surface(spark, workdir):
 
     # the generic seam runs the existing candles pipeline over the file
     # binding with the same results as start_file_stream_pipeline
-    src = os.path.join(workdir, "seam_src")
+    src = os.path.join(tmp_path, "seam_src")
     os.makedirs(src)
     with open(os.path.join(src, "b0.jsonl"), "w") as f:
         f.write(_candle_msg("BTC_USDT", BASE_TS, BASE_TS + 59) + "\n")
     q = start_stream_pipeline(
         spark,
         candles_pipeline,
-        os.path.join(workdir, "seam_out"),
-        os.path.join(workdir, "seam_ckpt"),
+        os.path.join(tmp_path, "seam_out"),
+        os.path.join(tmp_path, "seam_ckpt"),
         source_format="text",
         source_options={"maxFilesPerTrigger": "1"},
         source_path=src,
     )
     q.processAllAvailable()
     q.stop()
-    assert spark.read.parquet(os.path.join(workdir, "seam_out")).count() == 1
+    assert spark.read.parquet(os.path.join(tmp_path, "seam_out")).count() == 1
 
 
-def test_kafka_options_pass_through_to_reader(spark, workdir, monkeypatch):
+def test_kafka_options_pass_through_to_reader(spark, tmp_path, monkeypatch):
     """Contract test for the S1 Kafka branch (no broker in the sandbox):
     start_stream_pipeline with format="kafka" must push every
     kafka_source_options entry onto the DataStreamReader verbatim and
@@ -526,7 +514,7 @@ def test_kafka_options_pass_through_to_reader(spark, workdir, monkeypatch):
         start_stream_pipeline,
     )
 
-    src = os.path.join(workdir, "kafka_fake_src")
+    src = os.path.join(tmp_path, "kafka_fake_src")
     os.makedirs(src)
     with open(os.path.join(src, "b0.jsonl"), "w") as f:
         f.write(_candle_msg("BTC_USDT", BASE_TS, BASE_TS + 59) + "\n")
@@ -558,8 +546,8 @@ def test_kafka_options_pass_through_to_reader(spark, workdir, monkeypatch):
     q = start_stream_pipeline(
         spark,
         candles_pipeline,
-        os.path.join(workdir, "kafka_fake_out"),
-        os.path.join(workdir, "kafka_fake_ckpt"),
+        os.path.join(tmp_path, "kafka_fake_out"),
+        os.path.join(tmp_path, "kafka_fake_ckpt"),
         source_format="kafka",
         source_options=opts,
     )
@@ -570,11 +558,11 @@ def test_kafka_options_pass_through_to_reader(spark, workdir, monkeypatch):
     assert recorded["load_path"] is None  # kafka branch: load() without path
     for k, v in opts.items():
         assert recorded["options"].get(k) == v, (k, recorded["options"])
-    out = spark.read.parquet(os.path.join(workdir, "kafka_fake_out"))
+    out = spark.read.parquet(os.path.join(tmp_path, "kafka_fake_out"))
     assert out.count() == 1  # the wiring behind the seam ran end-to-end
 
 
-def test_streaming_exact_dedup(spark, workdir):
+def test_streaming_exact_dedup(spark, tmp_path):
     """Duplicate content arriving in a later micro-batch (inside the
     watermark window) is dropped; distinct content passes; whitespace/
     case variants hash to the same fingerprint (batch canon form)."""
@@ -584,7 +572,7 @@ def test_streaming_exact_dedup(spark, workdir):
         streaming_exact_dedup,
     )
 
-    src = os.path.join(workdir, "docs_src")
+    src = os.path.join(tmp_path, "docs_src")
     os.makedirs(src)
     t = pd.Timestamp("2024-01-01 00:00:00")
 
@@ -626,7 +614,7 @@ def test_streaming_exact_dedup(spark, workdir):
     assert got == [1, 2, 5]
 
 
-def test_stream_stream_trade_candle_interval_join(spark, workdir):
+def test_stream_stream_trade_candle_interval_join(spark, tmp_path):
     """Two live file streams (trades + candles) joined with watermarks
     and an event-time range condition — the stream-stream join surface.
     Only the trade that falls inside a same-symbol candle's minute
@@ -637,10 +625,10 @@ def test_stream_stream_trade_candle_interval_join(spark, workdir):
         trade_candle_stream_join,
     )
 
-    tsrc = os.path.join(workdir, "ss_trades_src")
-    csrc = os.path.join(workdir, "ss_candles_src")
-    out = os.path.join(workdir, "ss_out")
-    ckpt = os.path.join(workdir, "ss_ckpt")
+    tsrc = os.path.join(tmp_path, "ss_trades_src")
+    csrc = os.path.join(tmp_path, "ss_candles_src")
+    out = os.path.join(tmp_path, "ss_out")
+    ckpt = os.path.join(tmp_path, "ss_ckpt")
     os.makedirs(tsrc)
     os.makedirs(csrc)
     with open(os.path.join(tsrc, "b0.jsonl"), "w") as f:
@@ -680,7 +668,7 @@ def test_stream_stream_trade_candle_interval_join(spark, workdir):
     assert abs(r["candle_close"] - 100.5) < 1e-6
 
 
-def test_stream_stream_left_outer_emits_after_watermark(spark, workdir):
+def test_stream_stream_left_outer_emits_after_watermark(spark, tmp_path):
     """Left-outer stream-stream join: a trade with no candle emits with
     nulls — but only after the candle-side watermark passes its window,
     proving the row unmatchable. A second, much-later batch advances the
@@ -691,10 +679,10 @@ def test_stream_stream_left_outer_emits_after_watermark(spark, workdir):
         trade_candle_stream_join,
     )
 
-    tsrc = os.path.join(workdir, "lo_trades_src")
-    csrc = os.path.join(workdir, "lo_candles_src")
-    out = os.path.join(workdir, "lo_out")
-    ckpt = os.path.join(workdir, "lo_ckpt")
+    tsrc = os.path.join(tmp_path, "lo_trades_src")
+    csrc = os.path.join(tmp_path, "lo_candles_src")
+    out = os.path.join(tmp_path, "lo_out")
+    ckpt = os.path.join(tmp_path, "lo_ckpt")
     os.makedirs(tsrc)
     os.makedirs(csrc)
     # batch 0: one matchable trade, one orphan (no ETH candle exists)
@@ -786,7 +774,7 @@ def test_neardup_screen_writer_indexes_novel_and_flags_dups(spark, tmp_path):
     assert idx_ids == {1, 2, 11}
 
 
-def test_stream_stream_full_outer_emits_both_orphans(spark, workdir):
+def test_stream_stream_full_outer_emits_both_orphans(spark, tmp_path):
     """Full-outer stream-stream join: an unmatched trade AND an
     unmatched candle must both emit with nulls on the opposite side
     once the watermark proves them unmatchable — the symmetric
@@ -797,10 +785,10 @@ def test_stream_stream_full_outer_emits_both_orphans(spark, workdir):
         trade_candle_stream_join,
     )
 
-    tsrc = os.path.join(workdir, "fo_trades_src")
-    csrc = os.path.join(workdir, "fo_candles_src")
-    out = os.path.join(workdir, "fo_out")
-    ckpt = os.path.join(workdir, "fo_ckpt")
+    tsrc = os.path.join(tmp_path, "fo_trades_src")
+    csrc = os.path.join(tmp_path, "fo_candles_src")
+    out = os.path.join(tmp_path, "fo_out")
+    ckpt = os.path.join(tmp_path, "fo_ckpt")
     os.makedirs(tsrc)
     os.makedirs(csrc)
     # batch 0: matchable BTC pair, orphan ETH trade, orphan XRP candle
@@ -864,7 +852,7 @@ def test_stream_stream_full_outer_emits_both_orphans(spark, workdir):
     assert orphans[0]["price"] is None
 
 
-def test_transform_with_state_zscore(spark, workdir):
+def test_transform_with_state_zscore(spark, tmp_path):
     """transformWithStateInPandas (Spark 4 StatefulProcessor): Welford
     state persists across micro-batches; z-scores use pre-batch state.
 
@@ -886,7 +874,7 @@ def test_transform_with_state_zscore(spark, workdir):
         running_zscore_tws,
     )
 
-    src = os.path.join(workdir, "tws_src")
+    src = os.path.join(tmp_path, "tws_src")
     os.makedirs(src)
     pd.DataFrame(
         {
@@ -905,7 +893,7 @@ def test_transform_with_state_zscore(spark, workdir):
         out.writeStream.outputMode("append")
         .format("memory")
         .queryName("tws")
-        .option("checkpointLocation", os.path.join(workdir, "tws_ckpt"))
+        .option("checkpointLocation", os.path.join(tmp_path, "tws_ckpt"))
         .start()
     )
     q.processAllAvailable()
@@ -931,7 +919,7 @@ def test_transform_with_state_zscore(spark, workdir):
     assert rows[5].n_seen == 5
 
 
-def test_batch_stream_parity_tumbling(spark, workdir):
+def test_batch_stream_parity_tumbling(spark, tmp_path):
     """Unified-model parity: the SAME tumbling_hourly() transformation
     over (a) a batch read and (b) a file readStream of the same rows
     must produce identical results — the claim SURVEY §2.9 makes for
@@ -943,7 +931,7 @@ def test_batch_stream_parity_tumbling(spark, workdir):
     ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    src = os.path.join(workdir, "parity_src")
+    src = os.path.join(tmp_path, "parity_src")
     ev.write.parquet(src)
 
     batch = {
@@ -959,7 +947,7 @@ def test_batch_stream_parity_tumbling(spark, workdir):
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("parity_tumbling")
-        .option("checkpointLocation", os.path.join(workdir, "parity_ckpt"))
+        .option("checkpointLocation", os.path.join(tmp_path, "parity_ckpt"))
         .start()
     )
     q.processAllAvailable()
@@ -1077,13 +1065,13 @@ def _kafka_wire_rows(spark, msgs, topic="crypto.candles_minute", partition=0, ba
     return spark.createDataFrame(rows, _KAFKA_WIRE_SCHEMA)
 
 
-def test_kafka_wire_schema_binary_value_through_candles_pipeline(spark, workdir):
+def test_kafka_wire_schema_binary_value_through_candles_pipeline(spark, tmp_path):
     """The pipelines' Kafka-compat seam is ``CAST(value AS STRING)`` on a
     BINARY column — a real broker hands the consumer binary key/value,
     not the text source's string.  Streams parquet micro-batches carrying
     the full 7-column Kafka source schema through candles_pipeline and
     checks the parse result matches the batch run on decoded strings."""
-    src = os.path.join(workdir, "kafka_wire_src")
+    src = os.path.join(tmp_path, "kafka_wire_src")
     msgs = [
         ("BTC_USDT", _candle_msg("BTC_USDT", BASE_TS, BASE_TS + 59)),
         ("ETH_USDT", _candle_msg("ETH_USDT", BASE_TS, BASE_TS + 59, close="102.5")),
@@ -1118,7 +1106,7 @@ def test_kafka_wire_schema_binary_value_through_candles_pipeline(spark, workdir)
     assert batch == got
 
 
-def test_kafka_offset_redelivery_is_idempotent_via_hot_table(spark, workdir):
+def test_kafka_offset_redelivery_is_idempotent_via_hot_table(spark, tmp_path):
     """Kafka is at-least-once: after a consumer failure the same
     (topic, partition, offset) range is REDELIVERED.  The engine's
     idempotence pattern is the merge-on-read hot table keyed on the
@@ -1127,9 +1115,9 @@ def test_kafka_offset_redelivery_is_idempotent_via_hot_table(spark, workdir):
     1-4 (overlap 1-2), asserts the hot view is exactly offsets 0-4."""
     from crypto_prediction_etl_spark.streaming.sinks import upsert_append_writer
 
-    src = os.path.join(workdir, "kafka_redeliver_src")
-    out = os.path.join(workdir, "kafka_redeliver_out")
-    ckpt = os.path.join(workdir, "kafka_redeliver_ckpt")
+    src = os.path.join(tmp_path, "kafka_redeliver_src")
+    out = os.path.join(tmp_path, "kafka_redeliver_out")
+    ckpt = os.path.join(tmp_path, "kafka_redeliver_ckpt")
 
     def batch_frame(lo, hi):
         msgs = [
@@ -1155,14 +1143,14 @@ def test_kafka_offset_redelivery_is_idempotent_via_hot_table(spark, workdir):
         q.processAllAvailable()
         q.stop()
 
-    b1 = os.path.join(workdir, "b1")
+    b1 = os.path.join(tmp_path, "b1")
     batch_frame(0, 3).write.parquet(b1)
     consume(b1)
     # redelivery: offsets 1-2 arrive AGAIN (new files, same coordinates
     # and payloads) alongside new offsets 3-4 — a fresh checkpoint dir
     # models the post-crash consumer whose committed offsets were lost
     shutil.rmtree(ckpt)
-    b2 = os.path.join(workdir, "b2")
+    b2 = os.path.join(tmp_path, "b2")
     batch_frame(1, 5).write.parquet(b2)
     consume(b2)
 
