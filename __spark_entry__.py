@@ -51,10 +51,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # kernels (q30, q32-q39, q145, q146, q176, q222, q299, q312) — and
 # q100/q129, which with the other ten recursive-kernel queries (q32,
 # q37-q39, q145, q146, q176, q222, q299, q312) now run the
-# partition-streaming mapInPandas runner instead of applyInPandas.
-# All oracle-replayed green at sf0.01 AND sf0.001 before staging
-# (tools/driver_replay.py).  Remaining 30 seats are the mechanical age
-# fill (python tools/make_window.py --fill-oldest <picks>: oldest
+# partition-streaming mapInPandas runner instead of applyInPandas —
+# and q332, whose Hawkes recursion now rides that same runner
+# (operators/indicators._per_id keyed on event_type) instead of its own
+# applyInPandas.  All oracle-replayed green at sf0.01 AND sf0.001
+# before staging (tools/driver_replay.py).  Remaining 29 seats are the
+# mechanical age fill (python tools/make_window.py --fill-oldest <picks>: oldest
 # green verdicts first).
 #
 # r10-r13 audit trail (superseded windows) lives in git history and
@@ -84,6 +86,7 @@ _ADJUDICATE_FIRST = [
     "q222_ewma_vol",
     "q299_holt_winters",
     "q312_garch_filter",
+    "q332_hawkes_intensity",
     "q177_benford_digits",
     "q178_revenue_concentration",
     "q179_target_encoding",
@@ -113,7 +116,6 @@ _ADJUDICATE_FIRST = [
     "q202_langid_confusion",
     "q203_autocorrelation",
     "q204_basket_lift",
-    "q205_ar1_fit",
 ]
 
 

@@ -76,11 +76,9 @@ def exact_dedup(docs: DataFrame, pin: bool = True) -> DataFrame:
     )
 
 
-def doc_shingle_arrays(
-    docs: DataFrame,
-    nonempty: bool = False,
-) -> DataFrame:
-    """(doc_id, shingles) — distinct 3-word shingle ARRAY per document.
+def doc_shingle_arrays(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles) — distinct 3-word shingle ARRAY per document
+    with at least 3 tokens; shorter documents have no shingle and no row.
 
     The array form is the cheap thing to persist (one row per doc, not
     one per shingle) and feeds both signature computation (hash the
@@ -100,17 +98,14 @@ def doc_shingle_arrays(
     toks = spread_small_scan(docs).select(
         F.col("doc_id"), tokens("text").alias("_toks")
     )
-    if nonempty:
-        # equivalent to filter(size(shingles) > 0) AFTER shingling —
-        # word_shingles yields an empty array exactly when the doc has
-        # fewer than 3 tokens — but a post-hoc filter on the computed
-        # column gets pushed below the projection with the ENTIRE
-        # shingle expression inlined into the Filter condition, so the
-        # build evaluated twice per doc (plan-verified on the memo
-        # build job). Filtering on the token count inlines only the
-        # split().
-        toks = toks.filter(F.size("_toks") >= 3)
-    return toks.select(
+    # equivalent to filter(size(shingles) > 0) AFTER shingling —
+    # word_shingles yields an empty array exactly when the doc has
+    # fewer than 3 tokens — but a post-hoc filter on the computed
+    # column gets pushed below the projection with the ENTIRE shingle
+    # expression inlined into the Filter condition, so the build
+    # evaluated twice per doc (plan-verified on the memo build job).
+    # Filtering on the token count inlines only the split().
+    return toks.filter(F.size("_toks") >= 3).select(
         F.col("doc_id"),
         F.array_distinct(word_shingles(F.col("_toks"), 3)).alias("shingles"),
     )
@@ -135,7 +130,7 @@ def shingle_arrays_cached(docs: DataFrame) -> DataFrame:
     parquet dedup-index table (streaming.sinks.neardup_screen_writer
     persists exactly that); localCheckpoint is the in-session analog.
     """
-    return doc_shingle_arrays(docs, nonempty=True).transform(pin_frame)
+    return doc_shingle_arrays(docs).transform(pin_frame)
 
 
 # Session-scoped memo of shared corpus derivations, keyed by
@@ -620,14 +615,10 @@ def incremental_dedup(
     # filtered to each side is identical to shingling the side directly
     idx_arrays = index_arrays
     if idx_arrays is None:
-        idx_arrays = doc_shingle_arrays(
-            index_docs, nonempty=True
-        ).transform(pin_frame)
+        idx_arrays = doc_shingle_arrays(index_docs).transform(pin_frame)
     new_arrays = incoming_arrays
     if new_arrays is None:
-        new_arrays = doc_shingle_arrays(
-            incoming_docs, nonempty=True
-        ).transform(pin_frame)
+        new_arrays = doc_shingle_arrays(incoming_docs).transform(pin_frame)
     idx_bands = _band_keys(_minhash_sigs_from_arrays(idx_arrays))
     new_bands = _band_keys(_minhash_sigs_from_arrays(new_arrays))
     return screen_against_index(

@@ -209,20 +209,24 @@ def with_window_indicators(candles: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _per_id(df: DataFrame, cols: list[str], step) -> DataFrame:
-    """Run ``step`` once per id over a partition-streaming pandas kernel.
+def _per_id(
+    df: DataFrame, order: tuple[str, ...], cols: list[str], step
+) -> DataFrame:
+    """Run ``step`` once per key over a partition-streaming pandas kernel.
 
-    ``repartition("id")`` puts each id in one partition (reusing an
-    upstream window stage's id-partitioning when there is one) and
-    ``sortWithinPartitions("id", "dt")`` lines its rows up by dt (the
-    planner drops the sort when the window stage already provides
-    that order). ``kernel`` walks the partition's Arrow batches, cuts
-    each at id boundaries and calls ``step(pdf)`` once per id segment,
-    indexed 0..n-1; it returns one array per entry of ``cols``. Only
-    the open (last) id's rows carry into the next batch, so memory is
-    one id's series plus one batch. The output is the input columns
-    plus ``cols`` as doubles. The inner function keeps the name
-    ``kernel``: it is the UDF name in the analyzed plan.
+    ``order`` is the key column followed by the sort columns: the
+    indicator kernels pass ``("id", "dt")``. ``repartition(key)`` puts
+    each key in one partition (reusing an upstream window stage's
+    id-partitioning when there is one) and ``sortWithinPartitions(*order)``
+    lines its rows up (the planner drops the sort when the window stage
+    already provides that order). ``kernel`` walks the partition's
+    Arrow batches, cuts each at key boundaries and calls ``step(pdf)``
+    once per key segment, indexed 0..n-1; it returns one array per
+    entry of ``cols``. Only the open (last) key's rows carry into the
+    next batch, so memory is one key's series plus one batch. The
+    output is the input columns plus ``cols`` as doubles. The inner
+    function keeps the name ``kernel``: it is the UDF name in the
+    analyzed plan.
 
     A NaN in a kernel's output is SQL NULL in Spark: PySpark's Arrow
     conversion masks pandas ``isnull()``, so warm-up rows compare equal
@@ -232,9 +236,11 @@ def _per_id(df: DataFrame, cols: list[str], step) -> DataFrame:
         + [f"{c} double" for c in cols]
     )
 
+    key = order[0]
+
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        """``step`` over each id segment of closed, (id, dt)-sorted rows."""
-        ids = pdf["id"].to_numpy()
+        """``step`` over each key segment of closed, ``order``-sorted rows."""
+        ids = pdf[key].to_numpy()
         edges = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1), len(pdf)]
         out = {c: np.empty(len(pdf)) for c in cols}
         for a, b in zip(edges, edges[1:]):
@@ -243,14 +249,14 @@ def _per_id(df: DataFrame, cols: list[str], step) -> DataFrame:
         return pdf.assign(**out)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: list[pd.DataFrame] = []  # the open id's rows so far
+        carry: list[pd.DataFrame] = []  # the open key's rows so far
         for pdf in batches:
             if pdf.empty:
                 continue
-            ids = pdf["id"].to_numpy()
+            ids = pdf[key].to_numpy()
             cuts = np.flatnonzero(ids[1:] != ids[:-1]) + 1
-            last = cuts[-1] if len(cuts) else 0  # where the open id starts
-            if last or (carry and carry[0]["id"].iat[0] != ids[0]):
+            last = cuts[-1] if len(cuts) else 0  # where the open key starts
+            if last or (carry and carry[0][key].iat[0] != ids[0]):
                 yield run(pd.concat([*carry, pdf.iloc[:last]]))
                 carry = []
             carry.append(pdf.iloc[last:])
@@ -258,8 +264,8 @@ def _per_id(df: DataFrame, cols: list[str], step) -> DataFrame:
             yield run(pd.concat(carry))
 
     return (
-        df.repartition("id")
-        .sortWithinPartitions("id", "dt")
+        df.repartition(key)
+        .sortWithinPartitions(*order)
         .mapInPandas(kernel, schema=out_schema)
     )
 
@@ -336,7 +342,7 @@ def with_recursive_indicators(candles_or_ind: DataFrame) -> DataFrame:
             _wilder_rsi(close, 14),
         )
 
-    return _per_id(candles_or_ind, RECURSIVE_COLS, step)
+    return _per_id(candles_or_ind, ("id", "dt"), RECURSIVE_COLS, step)
 
 
 def n_multiple_rescale(candles: DataFrame, small_ids: list[str], factor: float = 1000.0) -> DataFrame:
@@ -390,7 +396,9 @@ def holt_linear(candles: DataFrame) -> DataFrame:
             level[t], trend[t] = lvl, tr
         return level, trend, level + trend
 
-    return _per_id(candles, ["holt_level", "holt_trend", "holt_forecast"], step)
+    return _per_id(
+        candles, ("id", "dt"), ["holt_level", "holt_trend", "holt_forecast"], step
+    )
 
 
 def heikin_ashi(candles: DataFrame) -> DataFrame:
@@ -424,7 +432,9 @@ def heikin_ashi(candles: DataFrame) -> DataFrame:
             ha_c,
         )
 
-    return _per_id(candles, ["ha_open", "ha_high", "ha_low", "ha_close"], step)
+    return _per_id(
+        candles, ("id", "dt"), ["ha_open", "ha_high", "ha_low", "ha_close"], step
+    )
 
 
 ADX_N = 14
@@ -501,7 +511,7 @@ def adx(candles: DataFrame) -> DataFrame:
                 adx_o[t] = adx_s
         return atr_o, dip_o, dim_o, adx_o
 
-    return _per_id(candles, ["atr", "plus_di", "minus_di", "adx"], step)
+    return _per_id(candles, ("id", "dt"), ["atr", "plus_di", "minus_di", "adx"], step)
 
 
 TRIX_N = 15
@@ -564,7 +574,7 @@ def trix(candles: DataFrame) -> DataFrame:
                 trix_o[t] = 100.0 * (e3 / prev_e3 - 1.0)
         return e3_o, trix_o
 
-    return _per_id(candles, ["ema3", "trix"], step)
+    return _per_id(candles, ("id", "dt"), ["ema3", "trix"], step)
 
 
 KALMAN_Q = 10.0
@@ -596,7 +606,7 @@ def kalman_level(candles: DataFrame) -> DataFrame:
             gain_o[t] = k
         return lvl_o, gain_o
 
-    return _per_id(candles, ["kalman_level", "kalman_gain"], step)
+    return _per_id(candles, ("id", "dt"), ["kalman_level", "kalman_gain"], step)
 
 
 EWMA_LAMBDA = 0.94  # RiskMetrics decay for daily returns
@@ -630,7 +640,7 @@ def ewma_volatility(candles: DataFrame, lam: float = EWMA_LAMBDA) -> DataFrame:
             var[t] = v
         return ret, var
 
-    return _per_id(candles, ["ret", "ewma_var"], step)
+    return _per_id(candles, ("id", "dt"), ["ret", "ewma_var"], step)
 
 
 HW_ALPHA, HW_BETA, HW_GAMMA, HW_PERIOD = 0.3, 0.1, 0.2, 7
@@ -675,7 +685,10 @@ def holt_winters_additive(candles: DataFrame) -> DataFrame:
         return lvl_o, tr_o, se_o, fc_o
 
     return _per_id(
-        candles, ["hw_level", "hw_trend", "hw_season", "hw_forecast"], step
+        candles,
+        ("id", "dt"),
+        ["hw_level", "hw_trend", "hw_season", "hw_forecast"],
+        step,
     )
 
 
@@ -717,4 +730,4 @@ def garch_filter(candles: DataFrame) -> DataFrame:
                 var[t] = v
         return ret, var
 
-    return _per_id(candles, ["ret", "garch_var"], step)
+    return _per_id(candles, ("id", "dt"), ["ret", "garch_var"], step)

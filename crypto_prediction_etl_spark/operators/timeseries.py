@@ -1,40 +1,36 @@
-"""Time-series frame builders: candle views + calendar spine.
+"""Time-series frame builders: candle views, calendar spine, joins and
+the Hawkes intensity recursion.
 
 The reference's analytical core is per-symbol daily OHLCV series
 (ddl/hive/crypto_raw/candles_day.ddl:3-26) analyzed with windows and
-indicators. The driver testdata has no candles table, so these builders
-derive deterministic candle-shaped series from the TPC-H-ish tables:
+indicators. The driver testdata has no candles table, so
+``events_candles`` derives a deterministic candle-shaped series from the
+events table: a short dense series (30 days), id = event_type, that
+exercises the recursive smoothers (EMA/MACD/RSI) with small magnitudes.
+It is a plain groupBy aggregate (map-side partial agg, one shuffle on
+the (id, dt) key) with an exact DuckDB-SQL equivalent,
+``CANDLES_EVENTS_SQL``. The long orders series lives in
+``plans/indicators_q.candles`` (``CANDLES_SQL``).
 
-- ``orders_candles``: long series (~2400 trading days, 1995-2001),
-  id = o_orderpriority — exercises the 52-row Ichimoku/Aroon windows.
-- ``events_candles``: short dense series (30 days), id = event_type —
-  exercises recursive smoothers (EMA/MACD/RSI) with small magnitudes.
-
-Both are plain groupBy aggregates (map-side partial agg, one shuffle on
-the (id, dt) key), and both have exact DuckDB-SQL equivalents (see
-plans/*_q.py oracles built from CANDLES_ORDERS_SQL / CANDLES_EVENTS_SQL).
+``hawkes_intensity`` is a ``step`` over ``operators/indicators._per_id``,
+the one per-key kernel runner.
 """
 
 from __future__ import annotations
+
+import math
+
+import numpy as np
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import table
+from .indicators import _per_id
 
-# DuckDB CTE bodies — kept textually next to the builders so the Spark
+# DuckDB CTE body — kept textually next to the builder so the Spark
 # and oracle definitions can only drift in code review, not silently.
-CANDLES_ORDERS_SQL = """
-  SELECT o_orderpriority                   AS id,
-         CAST(o_orderdate AS DATE)         AS dt,
-         max(o_totalprice)                 AS high,
-         min(o_totalprice)                 AS low,
-         avg(o_totalprice)                 AS close,
-         sum(o_totalprice)                 AS volume
-  FROM orders
-  GROUP BY o_orderpriority, CAST(o_orderdate AS DATE)
-"""
-
 CANDLES_EVENTS_SQL = """
   SELECT event_type                        AS id,
          CAST(ts AS DATE)                  AS dt,
@@ -47,25 +43,16 @@ CANDLES_EVENTS_SQL = """
 """
 
 
-def _candles(df: DataFrame, id_col: str, ts_col: str, val_col: str) -> DataFrame:
-    return df.groupBy(
-        F.col(id_col).alias("id"), F.to_date(ts_col).alias("dt")
-    ).agg(
-        F.max(val_col).alias("high"),
-        F.min(val_col).alias("low"),
-        F.avg(val_col).alias("close"),
-        F.sum(val_col).alias("volume"),
-    )
-
-
-def orders_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Long daily series keyed by order priority (5 ids x ~2400 days)."""
-    return _candles(table(spark, sf_dir, "orders"), "o_orderpriority", "o_orderdate", "o_totalprice")
-
-
 def events_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Short dense daily series keyed by event type (5 ids x 30 days)."""
-    return _candles(table(spark, sf_dir, "events"), "event_type", "ts", "value")
+    return table(spark, sf_dir, "events").groupBy(
+        F.col("event_type").alias("id"), F.to_date("ts").alias("dt")
+    ).agg(
+        F.max("value").alias("high"),
+        F.min("value").alias("low"),
+        F.avg("value").alias("close"),
+        F.sum("value").alias("volume"),
+    )
 
 
 def calendar_spine(bounded: DataFrame) -> DataFrame:
@@ -206,51 +193,32 @@ def hawkes_intensity(events: DataFrame) -> DataFrame:
     standard model for clustered arrivals (bursty trades, cascading
     errors). The naive definition is an O(n^2) sum over all past
     events; the exponential kernel makes it a one-float recursion, so
-    it rides the grouped-map kernel law (one key-shuffle, O(rows)
-    sequential state per stream).
+    it is a ``step`` over ``_per_id`` keyed on event_type, ordered by
+    (ts, event_id): one key-shuffle, O(rows) sequential state per
+    stream. Output: event_type, event_id, rn (1-based, as a double),
+    decayed_count, intensity.
 
     Cross-engine exactness: inter-arrival times are EXACT integer
     epoch-micros differences divided by 1e6; the kernel's
     ``math.exp`` is C libm — the same correctly-rounded exp DuckDB
     calls — so the recursive-CTE oracle replays the identical float
     sequence with no grid-snap needed inside the recursion."""
-    import math
 
-    import pandas as pd
-
-    out_schema = (
-        "event_type string, event_id long, rn long, "
-        "decayed_count double, intensity double"
-    )
-    inv_tau = 1.0 / HAWKES_TAU_S
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
+    def step(pdf: pd.DataFrame):
         us = pdf["_us"].to_numpy()
-        n = len(us)
-        a = [0.0] * n
-        lam = [0.0] * n
-        prev_a = 0.0
-        for k in range(n):
-            if k == 0:
-                prev_a = 0.0
-            else:
-                dt_s = (int(us[k]) - int(us[k - 1])) / 1e6
-                prev_a = math.exp(-dt_s / HAWKES_TAU_S) * (prev_a + 1.0)
-            a[k] = prev_a
-            lam[k] = HAWKES_MU + HAWKES_ALPHA * inv_tau * prev_a
-        out = pd.DataFrame(
-            {
-                "event_type": pdf["event_type"],
-                "event_id": pdf["event_id"],
-                "rn": range(1, n + 1),
-                "decayed_count": a,
-                "intensity": lam,
-            }
-        )
-        return out
+        a = np.zeros(len(us))
+        for k in range(1, len(us)):
+            dt_s = (int(us[k]) - int(us[k - 1])) / 1e6
+            a[k] = math.exp(-dt_s / HAWKES_TAU_S) * (a[k - 1] + 1.0)
+        lam = HAWKES_MU + HAWKES_ALPHA * (1.0 / HAWKES_TAU_S) * a
+        return np.arange(1, len(us) + 1), a, lam
 
     prepped = events.select(
-        "event_type", "event_id", "ts", F.unix_micros(F.col("ts")).alias("_us")
+        "event_type", "event_id", F.unix_micros(F.col("ts")).alias("_us")
     )
-    return prepped.groupBy("event_type").applyInPandas(kernel, schema=out_schema)
+    return _per_id(
+        prepped,
+        ("event_type", "_us", "event_id"),
+        ["rn", "decayed_count", "intensity"],
+        step,
+    ).drop("_us")

@@ -322,9 +322,6 @@ def q93_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q94_ALPHA_SQRT = True  # temperature T=2 <=> exponent 1/T = 0.5 = sqrt
-
-
 def _q94_oracle() -> str:
     return f"""
     WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs

@@ -700,7 +700,6 @@ def q265_dedup_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q270 LSH parameter planner (S-curves for every (bands, rows) split)
 # ---------------------------------------------------------------------------
 
-_Q270_PERMS = 16
 _Q270_TARGET = 0.8
 _Q270_SPLITS = [(1, 16), (2, 8), (4, 4), (8, 2), (16, 1)]
 _Q270_GRID = [i / 20.0 for i in range(1, 20)]  # s = 0.05 .. 0.95

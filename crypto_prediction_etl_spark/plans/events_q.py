@@ -5962,8 +5962,8 @@ def q332_hawkes_intensity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Recursion state is exp-products of EXACT integer micros deltas —
     C-libm exp on both sides — so the oracle's recursive CTE replays
-    it bit-for-bit (no grid snaps inside the loop, grouped-map kernel
-    law: one key-shuffle, O(rows) per stream)."""
+    it bit-for-bit (no grid snaps inside the loop; the ``_per_id``
+    kernel law: one key-shuffle, O(rows) per stream)."""
     from ..operators.timeseries import hawkes_intensity
 
     out = hawkes_intensity(table(spark, sf_dir, "events"))

@@ -412,8 +412,8 @@ def _ema_oracle() -> str:
 @query("q37_ema", oracle=_ema_oracle())
 def q37_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EMA 5/10/30, SMA-seeded (W5, SURVEY hard part 1; reference:
-    calculate_market_indicators.py:49-51). Spark: grouped-map pandas
-    kernel (Arrow batches, parallel per id) — the Spark-native
+    calculate_market_indicators.py:49-51). Spark: the ``_per_id``
+    pandas kernel (Arrow batches, parallel per id) — the Spark-native
     replacement for the reference's driver collect loop (L1)."""
     rec = with_recursive_indicators(candles(spark, sf_dir))
     return rec.select(
@@ -913,7 +913,7 @@ def _holt_oracle() -> str:
 def q100_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt double exponential smoothing (level + trend + one-step
     forecast) per symbol — the recursive stateful operator one step
-    beyond the EMA family, executed as a grouped-map pandas kernel
+    beyond the EMA family, executed as the ``_per_id`` pandas kernel
     (one id-shuffle, O(rows) per key, no driver loop). The oracle
     replays the recursion as a recursive CTE with the identical float
     op sequence — the driver gate hash-checks a genuinely recursive
@@ -1748,8 +1748,8 @@ def q129_heikin_ashi(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuine recursion, seeded with (open_1+close_1)/2), ha_high/ha_low
     = extremes over the raw and synthetic values.  Open derives as the
     prior close on this daily series (as in q123).  The open chain
-    cannot be a window aggregate, so it runs as the same grouped-map
-    pandas kernel shape as Holt/EMA (one id-shuffle, O(rows) per key);
+    cannot be a window aggregate, so it runs as the same ``_per_id``
+    pandas kernel as Holt/EMA (one id-shuffle, O(rows) per key);
     the oracle replays the recursion as a recursive CTE with the
     identical float op sequence, giving the gate a second hash-checked
     recursive stateful operator."""
@@ -1966,7 +1966,7 @@ def q145_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
     ATR and +DI/-DI, DX = 100*|+DI - -DI|/(+DI + -DI), and ADX as a
     SECOND Wilder smoothing of DX (mean-of-first-14 seed) — the
     deepest recursion in the indicator family (two chained stateful
-    smoothers). Runs as the standard grouped-map pandas kernel (one
+    smoothers). Runs as the standard ``_per_id`` pandas kernel (one
     id-shuffle, O(rows) per key); the oracle replays the identical
     state machine as a recursive CTE, so every intermediate double is
     bit-equal and the output hash-checks at the 2/4-decimal grids."""
@@ -2649,7 +2649,7 @@ def q176_kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     steady state, unlike EMA's fixed alpha. Seeded level = first
     close, p0 diffuse.
 
-    Same grouped-map pandas kernel law as EMA/Holt/ADX (one
+    Same ``_per_id`` pandas kernel law as EMA/Holt/ADX (one
     id-shuffle, O(rows) sequential state per key); the oracle replays
     the identical predict/update float sequence as a recursive CTE, so
     a genuinely adaptive filter is hash-checked bit-for-bit."""
@@ -3591,7 +3591,7 @@ def q222_ewma_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     decay geometrically instead of falling off a cliff at the window
     edge).
 
-    Variance is EMA state, so it rides the grouped-map pandas kernel
+    Variance is EMA state, so it rides the ``_per_id`` pandas kernel
     law (operators.indicators.ewma_volatility: one id-shuffle,
     O(rows) per key); the oracle replays the identical float
     recurrence as a recursive CTE, hash-checked bit-for-bit."""
@@ -5102,7 +5102,7 @@ def q312_garch_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     relaxation to vbar) is exactly what volatility-regime features
     (q219) consume upstream.
 
-    Execution: the grouped-map kernel law (one id-shuffle, O(rows)
+    Execution: the ``_per_id`` kernel law (one id-shuffle, O(rows)
     state per key); the unconditional variance seeds on the 1e-10
     portable grid so the recursion stays bit-identical cross-engine,
     and the oracle replays it as a recursive CTE joined to the

@@ -2836,8 +2836,7 @@ def q370_fd_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q371 Bloom-filter sizing advisor (per partition file)
 # ---------------------------------------------------------------------------
 
-_Q371_FPP = 0.01
-# ln(1/0.01), ln(2)^2, ln(2) as shared literals: libm ln() is not
+# ln(1/p) at p = 0.01, ln(2)^2, ln(2) as shared literals: libm ln() is not
 # guaranteed identical across engines, pinned constants are
 _Q371_LN_INV_P = 4.605170185988091
 _Q371_LN2_SQ = 0.4804530139182014

@@ -475,7 +475,7 @@ def q84_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # int8 scalar quantization: per-dimension corpus min/max -> 0..255
 # codes; the compressed form an ANN index stores at 100 TB (4 bytes ->
 # 1 byte per dim before any product quantization).
-_Q90_DIM, _Q90_LEVELS = 64, 255
+_Q90_DIM = 64
 
 
 def _q90_oracle() -> str:

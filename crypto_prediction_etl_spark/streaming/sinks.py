@@ -194,11 +194,7 @@ def neardup_screen_writer(
         )
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        new_arrays = (
-            doc_shingle_arrays(batch_df)
-            .filter(F.size("shingles") > 0)
-            .persist()
-        )
+        new_arrays = doc_shingle_arrays(batch_df).persist()
         new_arrays.count()
         new_bands = _band_keys(_minhash_sigs_from_arrays(new_arrays))
         try:
@@ -245,9 +241,6 @@ def neardup_screen_writer(
         new_arrays.unpersist()
 
     return write
-
-
-DEFAULT_TTL_SECONDS = 2592000  # reference: candles_realtime.ddl:20 (30 days)
 
 
 def compact_hot_table(

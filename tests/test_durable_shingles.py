@@ -31,7 +31,7 @@ from tests.conftest import SF_DIR_CORRECTNESS
 
 def _written_arrays(spark, tmp_path):
     docs = table(spark, SF_DIR_CORRECTNESS, "documents")
-    arrays = doc_shingle_arrays(docs).filter(F.size("shingles") > 0)
+    arrays = doc_shingle_arrays(docs)
     path = str(tmp_path / "doc_shingle_arrays")
     arrays.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)

@@ -15,12 +15,12 @@ Ichimoku senkou spans shifted 26 ahead) — independent of BOTH the
 Spark operators and the pandas cross-check in
 tests/test_indicators_pandas.py — and pinned here as literals.
 
-Fixture series: orders_candles symbol '1-URGENT' at sf0.001 (261
-daily bars, 1995-01-06..2001-07-30; row-based windows, so sparse
-calendar dates are immaterial), close = avg(o_totalprice), volume =
-integer-cents-exact sum.  Two probe rows: mid-series (1998-04-24,
-warm-up long past for every window incl. Ichimoku's 52+26) and the
-final bar (2001-07-30).  The parity table lives in
+Fixture series: ``plans/indicators_q._with_volume`` symbol '1-URGENT'
+at sf0.001 (261 daily bars, 1995-01-06..2001-07-30; row-based windows,
+so sparse calendar dates are immaterial), close = avg(o_totalprice),
+volume = integer-cents-exact sum / 100.  Two probe rows: mid-series
+(1998-04-24, warm-up long past for every window incl. Ichimoku's
+52+26) and the final bar (2001-07-30).  The parity table lives in
 FIXTURES.md ("stock_indicators golden parity").
 """
 

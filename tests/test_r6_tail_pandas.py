@@ -2293,7 +2293,10 @@ def test_holm_correction_matches_python_stepdown(spark, sf_dir, candles_by_id):
         )
 
 
-def test_hawkes_intensity_matches_python_recursion(spark, sf_dir):
+@pytest.mark.parametrize("batch", [None, "7"], ids=["default", "7"])
+def test_hawkes_intensity_matches_python_recursion(spark, sf_dir, batch):
+    """q332 against a plain-Python replay of the recursion; 7-row Arrow
+    batches cut every event type across batches."""
     import math
 
     from crypto_prediction_etl_spark.operators.timeseries import (
@@ -2309,11 +2312,18 @@ def test_hawkes_intensity_matches_python_recursion(spark, sf_dir):
         .toPandas()
         .sort_values(["event_type", "ts", "event_id"])
     )
-    out = (
-        registry.QUERIES["q332_hawkes_intensity"](spark, sf_dir)
-        .toPandas()
-        .set_index(["event_type", "event_id"])
-    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+    spark.conf.set(key, batch or default)
+    try:
+        out = (
+            registry.QUERIES["q332_hawkes_intensity"](spark, sf_dir)
+            .toPandas()
+            .set_index(["event_type", "event_id"])
+        )
+    finally:
+        spark.conf.set(key, default)
+    assert ev.groupby("event_type").size().min() > 7
     for et, g in ev.groupby("event_type"):
         us = g["ts"].astype("int64").to_numpy() // 1000
         ids = g["event_id"].to_numpy()

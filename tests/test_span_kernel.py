@@ -11,6 +11,8 @@ like Java split with limit -1), docs shorter than k, exactly k, and
 empty text.
 """
 
+import re
+
 from pyspark.sql import functions as F
 
 from crypto_prediction_etl_spark.functions.portable import hash64, py_hash64
@@ -149,9 +151,17 @@ def test_minhash_kernel_matches_expression_form(spark, sf_dir):
     hash-explode-groupBy reference on the real corpus arrays and on
     hand-built edges (empty / NULL shingle arrays drop the doc in both
     forms; single-shingle docs take that shingle's 16 permuted hashes
-    verbatim)."""
+    verbatim). The shingler drops docs under 3 tokens with one Filter
+    on the token count, below the shingle projection: no shingle
+    expression is evaluated to decide which docs to keep."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    arrays = doc_shingle_arrays(docs, nonempty=True)
+    arrays = doc_shingle_arrays(docs)
+    plan = arrays._jdf.queryExecution().optimizedPlan().toString()
+    filters = [ln.lstrip("+- ") for ln in plan.splitlines()]
+    filters = [ln for ln in filters if ln.startswith("Filter ")]
+    assert len(filters) == 1, plan
+    assert re.fullmatch(r"Filter \(size\(split\(lower\(text#\d+\), .*\) >= 3\)", filters[0])
+    assert not any(f in filters[0] for f in ("zip_with", "slice", "concat_ws"))
     kern = sorted(_minhash_sigs_from_arrays(arrays).collect())
     expr = sorted(_minhash_sigs_from_arrays_expr(arrays).collect())
     assert kern and kern == expr

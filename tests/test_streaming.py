@@ -746,7 +746,8 @@ def test_stream_stream_left_outer_emits_after_watermark(spark, tmp_path):
 def test_neardup_screen_writer_indexes_novel_and_flags_dups(spark, tmp_path):
     """Streaming corpus curation: first batch is all-novel and gets
     indexed; a later batch's near-dup of an indexed doc is flagged with
-    its match and NOT indexed; replaying an epoch (foreachBatch retry
+    its match and NOT indexed; a doc under 3 tokens has no shingle, so
+    it is kept and not indexed; replaying an epoch (foreachBatch retry
     contract) rewrites its own partitions instead of duplicating."""
     from crypto_prediction_etl_spark.streaming.sinks import neardup_screen_writer
 
@@ -759,7 +760,11 @@ def test_neardup_screen_writer_indexes_novel_and_flags_dups(spark, tmp_path):
     )
     w(b0, 0)
     b1 = spark.createDataFrame(
-        [(10, base), (11, "novel second batch content nothing shares a shingle")],
+        [
+            (10, base),
+            (11, "novel second batch content nothing shares a shingle"),
+            (12, "too short"),
+        ],
         "doc_id long, text string",
     )
     w(b1, 1)
@@ -767,9 +772,10 @@ def test_neardup_screen_writer_indexes_novel_and_flags_dups(spark, tmp_path):
     assert out[1].is_dup == 0 and out[2].is_dup == 0
     assert out[10].is_dup == 1 and out[10].matched_id == 1 and out[10].jaccard == 1.0
     assert out[11].is_dup == 0 and out[11].matched_id is None
+    assert out[12].is_dup == 0 and out[12].matched_id is None
     # replay epoch 1: dynamic overwrite of its own partitions, same state
     w(b1, 1)
-    assert spark.read.parquet(out_dir).count() == 4
+    assert spark.read.parquet(out_dir).count() == 5
     idx_ids = {r.doc_id for r in spark.read.parquet(f"{idx_dir}/arrays").collect()}
     assert idx_ids == {1, 2, 11}
 
